@@ -13,7 +13,8 @@ E2 `process_file`) and `/root/reference/src/managers/index_manager.py`
 
 The "vector store" is a partitioned Parquet table — no external index
 server (SURVEY.md §3: the only process boundaries are Spark's own).
-Search (V4) is exact cosine top-k against the same table.
+Search (V4) is cosine top-k against the same table, cost-gated between
+exact brute force and an in-memory IVF rewrite (``ETLPipeline.search``).
 
 Scale posture: ingest batches broadcast in the anti-join side of the
 upsert (the 100 TB index never shuffles on ingest); the index table is
@@ -30,7 +31,7 @@ import os
 import shutil
 import zlib
 from collections.abc import Iterable, Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -54,6 +55,31 @@ INDEX_SCHEMA = T.StructType(
         T.StructField("embedding", T.ArrayType(T.DoubleType()), False),
     ]
 )
+
+#: INDEX_SCHEMA plus the `bucket` partition column, as the table is read
+#: (an explicit schema spares every read a schema inference).
+_READ_SCHEMA = T.StructType(INDEX_SCHEMA.fields + [T.StructField("bucket", T.IntegerType())])
+
+
+def _bucket_dirs(path: str) -> set[int]:
+    """Bucket numbers of the `bucket=` partition dirs under ``path``."""
+    if not os.path.isdir(path):
+        return set()
+    return {int(d.split("=", 1)[1]) for d in os.listdir(path) if d.startswith("bucket=")}
+
+
+def _write_json(path: str, obj: object) -> None:
+    """Write ``obj`` to ``path`` as JSON via a tmp file + rename: a crash
+    mid-write leaves the previous file (or none), never a torn one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _chunk_id(alias: str = "c_vec_id") -> Column:
+    """``filename#chunk_idx``: the key search results report a chunk by."""
+    return F.concat_ws("#", "filename", F.col("chunk_idx").cast("string")).alias(alias)
 
 
 def fake_embedding(col: Column) -> Column:
@@ -84,7 +110,6 @@ class ETLConfig:
     allowed_extensions: Sequence[str] = ("pdf", "txt", "md")
     n_buckets: int = 64  # index-table partition buckets over filename
     nfkc: bool = False  # T2 unicode NFKC in the normalize chain
-    extra: dict = field(default_factory=dict)
 
     @classmethod
     def from_json(cls, path: str | None = None, app_id: str | None = None) -> "ETLConfig":
@@ -94,8 +119,6 @@ class ETLConfig:
         Unknown keys and wrong-typed values raise ValueError (the
         reference's pydantic validation analog).
         """
-        import json
-
         path = path or os.environ.get(CONFIG_PATH_ENV)
         if not path:
             raise ValueError(
@@ -119,7 +142,6 @@ class ETLConfig:
             "n_buckets": int,
             "nfkc": bool,
             "allowed_extensions": (list, tuple),
-            "extra": dict,
         }
         for k, v in raw.items():
             want = checks[k]
@@ -140,36 +162,32 @@ class ETLPipeline:
         self.spark = spark
         self.index_path = index_path
         self.config = config or ETLConfig()
-        # heal any crash-interrupted commit before the first read (a
-        # no-op listdir when the index is clean — see recover())
+        # heal any crash-interrupted commit before the first read (one
+        # stat when the index is clean — see recover())
         self.recover()
 
     # -- index-table plumbing ------------------------------------------------
 
     def _exists(self) -> bool:
-        return os.path.isdir(self.index_path) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" or f.startswith("bucket=")
-            for f in os.listdir(self.index_path)
-        )
+        return bool(_bucket_dirs(self.index_path))
 
-    def index_table(self) -> DataFrame:
-        """Current index contents (empty-but-typed if never written)."""
+    def index_table(self, buckets: set[int] | None = None) -> DataFrame:
+        """Current index contents (empty-but-typed if never written).
+
+        With ``buckets``, a partition-pruned read of just those `bucket=`
+        dirs: the filter is on the partition column, so Spark lists/reads
+        only them — at 100 TB an ingest touches |batch buckets| files, not
+        the table.
+        """
         if not self._exists():
             return self.spark.createDataFrame([], INDEX_SCHEMA)
-        # explicit schema (+ the bucket partition column): an index
-        # bootstrapped by an EMPTY ingest — or emptied by deletes — has
-        # no parquet files to infer from, which would fail the read
-        read_schema = T.StructType(
-            list(INDEX_SCHEMA.fields) + [T.StructField("bucket", T.IntegerType())]
-        )
-        df = self.spark.read.schema(read_schema).parquet(self.index_path)
-        return df.select([f.name for f in INDEX_SCHEMA.fields])
+        df = self.spark.read.schema(_READ_SCHEMA).parquet(self.index_path)
+        if buckets is not None:
+            df = df.filter(F.col("bucket").isin(*sorted(buckets)))
+        return df.select(INDEX_SCHEMA.fieldNames())
 
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket",
-            F.pmod(F.crc32(F.col("filename")), F.lit(self.config.n_buckets)).cast("int"),
-        )
+    def _bucket(self, filename: Column) -> Column:
+        return F.pmod(F.crc32(filename), F.lit(self.config.n_buckets)).cast("int")
 
     def _buckets_of(self, filenames: Iterable[str]) -> set[int]:
         """Driver-side twin of the `bucket` partition expression.
@@ -179,108 +197,64 @@ class ETLPipeline:
         """
         return {zlib.crc32(f.encode("utf-8")) % self.config.n_buckets for f in filenames}
 
-    def _read_buckets(self, buckets: set[int]) -> DataFrame:
-        """Partition-pruned read: only `bucket=` dirs in ``buckets``.
+    def _rewrite(self, df: DataFrame) -> None:
+        """Replace the WHOLE index with ``df`` (bootstrap, compaction): a
+        :meth:`_swap_buckets` of every bucket."""
+        # looked up on the class, so a wrapper installed on the instance
+        # (the benchmark's tracer) sees one commit, not a nested second
+        ETLPipeline._swap_buckets(self, df, None)
 
-        The filter is on the partition column, so Spark lists/reads just
-        those directories — at 100 TB an ingest touches |batch buckets|
-        files, not the table.
-        """
-        if not self._exists() or not buckets:
-            return self.spark.createDataFrame([], INDEX_SCHEMA)
-        # explicit schema: a fileless index (empty bootstrap / emptied
-        # by deletes) has nothing to infer from
-        read_schema = T.StructType(
-            list(INDEX_SCHEMA.fields) + [T.StructField("bucket", T.IntegerType())]
-        )
-        df = self.spark.read.schema(read_schema).parquet(self.index_path).filter(
-            F.col("bucket").isin(*[int(b) for b in buckets])
-        )
-        return df.select([f.name for f in INDEX_SCHEMA.fields])
+    def _swap_buckets(self, df: DataFrame, buckets: set[int] | None) -> None:
+        """Replace the named `bucket=` partition dirs with ``df``; ``None``
+        names every bucket (the configured range plus any `bucket=` dir
+        on disk, so a table written under another ``n_buckets`` leaves
+        nothing behind).
 
-    def _rewrite(self, df: DataFrame, scratch_suffix: str = "") -> None:
-        """Atomically replace the WHOLE index table (stage -> swap).
-
-        Bootstrap/compaction path only — incremental ingest/delete go
-        through :meth:`_swap_buckets`. Spark cannot overwrite a path it is
-        lazily reading, so write to a staging dir, rename the old table
-        aside, move staging into place, and delete the old copy last: a
-        crash at any point leaves a recoverable index (live or `.old`).
-
-        ``scratch_suffix`` namespaces the staging/aside dirs so callers
-        with different lifecycles (compact vs bootstrap) never rmtree
-        each other's scratch space.
-        """
-        staging = self.index_path + scratch_suffix + ".staging"
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        (
-            self._with_bucket(df)
-            .repartition("bucket")
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(staging)
-        )
-        old = self.index_path + scratch_suffix + ".old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        # commit point: the intent file makes the fully-written staging
-        # dir the table's truth — recover() rolls FORWARD from any crash
-        # past this line, and a crash before it rolls back for free
-        # (live was never touched)
-        self._write_intent(scratch_suffix, {"op": "rewrite", "suffix": scratch_suffix})
-        if os.path.exists(self.index_path):
-            os.replace(self.index_path, old)
-        os.replace(staging, self.index_path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        self._clear_intent(scratch_suffix)
-
-    def _swap_buckets(self, df: DataFrame, buckets: set[int]) -> None:
-        """Replace ONLY the named `bucket=` partition dirs with ``df``.
-
-        The plain-Parquet form of a partition-overwrite MERGE
+        The index's one commit protocol — bootstrap, upsert, delete and
+        compaction all go through it. The plain-Parquet form of a
+        partition-overwrite MERGE
         (`spark.sql.sources.partitionOverwriteMode=dynamic` semantics,
-        done by hand so the swap is crash-safe): stage the affected
-        buckets, rename each live bucket dir aside, move the staged dir
-        in, and delete the aside copies only after every bucket swapped.
-        Untouched buckets are never listed, read, or rewritten — ingest
-        cost scales with the batch, not the table (reference
-        delete-then-add: `index_manager.py:347-368`).
+        done by hand so the swap is crash-safe):
+
+        1. stage ``df`` fully under ``<index>.staging`` (this runs the
+           plan, which may lazily read the live buckets, before any live
+           dir is touched);
+        2. write ``<index>.intent`` — the commit point;
+        3. per bucket, rename the live dir aside to ``<index>.old`` and
+           move the staged dir in (a bucket with no staged rows drops);
+        4. delete the aside and staging dirs, then the intent.
+
+        A crash before 2 leaves the pre state; from 2 on, :meth:`recover`
+        rolls forward to the post state. Buckets not named are never
+        listed, read, or rewritten — ingest cost scales with the batch,
+        not the table (reference delete-then-add:
+        `index_manager.py:347-368`).
         """
+        op = "swap"
+        if buckets is None:
+            op = "rewrite"
+            buckets = set(range(self.config.n_buckets)) | _bucket_dirs(self.index_path)
         staging = self.index_path + ".staging"
         aside = self.index_path + ".old"
         for p in (staging, aside):
             if os.path.exists(p):
                 shutil.rmtree(p)
-        # Materializes the merged plan (which lazily reads the live
-        # affected buckets) BEFORE any live dir is touched.
         (
-            self._with_bucket(df)
+            df.withColumn("bucket", self._bucket(F.col("filename")))
             .repartition("bucket")
             .write.partitionBy("bucket")
             .mode("overwrite")
             .parquet(staging)
         )
-        # commit point (see _rewrite): staging is fully written; any
-        # crash from here on rolls FORWARD in recover(). The intent
-        # records which buckets staging actually contains, so recovery
-        # can tell "already moved into live" (stage dir gone, keep live)
-        # from "staged empty = drop" (never staged, remove live).
-        staged = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(staging)
-            if d.startswith("bucket=")
+        # The intent records which buckets staging actually holds, so
+        # recovery can tell "already moved into live" (stage dir gone,
+        # keep live) from "staged empty = drop" (never staged, remove live).
+        _write_json(
+            self.index_path + ".intent",
+            {"op": op, "buckets": sorted(buckets), "staged": sorted(_bucket_dirs(staging))},
         )
-        self._write_intent(
-            "",
-            {
-                "op": "swap",
-                "buckets": sorted(int(b) for b in buckets),
-                "staged": staged,
-            },
-        )
-        os.makedirs(aside, exist_ok=True)
+        os.makedirs(aside)
+        os.makedirs(self.index_path, exist_ok=True)
         for b in sorted(buckets):
             live_b = os.path.join(self.index_path, f"bucket={b}")
             stage_b = os.path.join(staging, f"bucket={b}")
@@ -290,112 +264,55 @@ class ETLPipeline:
                 os.replace(stage_b, live_b)
         shutil.rmtree(aside)
         shutil.rmtree(staging)
-        self._clear_intent("")
+        os.remove(self.index_path + ".intent")
 
     # -- crash recovery --------------------------------------------------
 
-    def _intent_path(self, suffix: str) -> str:
-        return self.index_path + suffix + ".intent"
-
-    def _write_intent(self, suffix: str, payload: dict) -> None:
-        # The owner stamp lets recover() reject (and never delete) a
-        # SIBLING pipeline's intent whose index path shares a filename
-        # prefix (e.g. /data/idx vs /data/idx2 — startswith alone would
-        # claim and destroy idx2's commit record from idx).
-        payload = dict(payload, owner=os.path.basename(self.index_path))
-        tmp = self._intent_path(suffix) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, self._intent_path(suffix))
-
-    def _clear_intent(self, suffix: str) -> None:
-        try:
-            os.remove(self._intent_path(suffix))
-        except FileNotFoundError:
-            pass
-
     def recover(self) -> list[str]:
-        """Heal a crash-interrupted :meth:`_rewrite` / :meth:`_swap_buckets`.
+        """Heal a commit (:meth:`_swap_buckets`) a crash interrupted.
 
-        The commit protocol writes a tiny ``.intent`` file AFTER the
-        staging dir is fully written and BEFORE any live dir is touched,
-        and removes it after cleanup — so the intent file is the commit
-        record:
+        The ``<index>.intent`` file is the commit record: written after
+        staging is complete and before any live dir is touched, removed
+        after cleanup.
 
         - intent present  -> the staged result is the table's truth:
           roll FORWARD (finish the interrupted renames/deletes) to the
           post-operation state;
         - intent absent   -> the operation never committed: live is the
-          pre-operation state, any scratch dirs are garbage.
+          pre-operation state, any scratch dirs are garbage the next
+          commit clears.
 
         Idempotent, driver-side-only (a handful of renames — no Spark
         job), and invoked automatically on pipeline construction so a
         restart after a crash heals the index before first read. Returns
-        the operations rolled forward. This is the plain-Parquet
+        the operation rolled forward (``"rewrite"`` for a whole-index
+        swap, ``"swap"`` otherwise), or ``[]``. This is the plain-Parquet
         equivalent of a lakehouse table's transaction-log replay; the
         semantics protected are the reference's delete-then-add
         (`index_manager.py:347-368`).
         """
-        recovered: list[str] = []
-        parent, base = os.path.split(self.index_path)
+        intent_file = self.index_path + ".intent"
+        if not os.path.exists(intent_file):
+            return []
         try:
-            entries = os.listdir(parent or ".")
-        except OSError:
-            return recovered
-        for fn in sorted(entries):
-            if not (fn.startswith(base) and fn.endswith(".intent")):
-                continue
-            intent_file = os.path.join(parent, fn)
-            try:
-                with open(intent_file) as f:
-                    intent = json.load(f)
-            except (OSError, ValueError):
-                os.remove(intent_file)
-                continue
-            # Prefix match is not ownership: idx2's intent startswith
-            # "idx". Only act on (and only remove) intents this pipeline
-            # wrote; a sibling's record is left for the sibling's own
-            # recover() to roll forward.
-            if intent.get("owner", base) != base:
-                continue
-            if intent.get("op") == "rewrite":
-                self._recover_rewrite(intent.get("suffix", ""))
-            elif intent.get("op") == "swap":
-                self._recover_swap(intent.get("buckets", []), intent.get("staged", []))
+            with open(intent_file) as f:
+                intent = json.load(f)
+        except ValueError:
             os.remove(intent_file)
-            recovered.append(intent.get("op", "?"))
-        return recovered
-
-    def _recover_rewrite(self, suffix: str) -> None:
-        staging = self.index_path + suffix + ".staging"
-        old = self.index_path + suffix + ".old"
-        if os.path.exists(os.path.join(staging, "_SUCCESS")):
-            # staged table committed but not yet promoted
-            if os.path.exists(self.index_path):
-                shutil.rmtree(self.index_path)
-            os.replace(staging, self.index_path)
-        elif not os.path.exists(self.index_path) and os.path.exists(old):
-            # staging already promoted away or lost; fall back to the
-            # aside copy so the index is never unreadable
-            os.replace(old, self.index_path)
-        for p in (staging, old):
-            if os.path.exists(p):
-                shutil.rmtree(p)
-
-    def _recover_swap(self, buckets: list[int], staged: list[int]) -> None:
+            return []
         staging = self.index_path + ".staging"
         aside = self.index_path + ".old"
-        staged_set = set(staged)
+        staged = set(intent["staged"])
         if os.path.exists(os.path.join(staging, "_SUCCESS")):
             os.makedirs(self.index_path, exist_ok=True)
-            for b in buckets:
+            for b in intent["buckets"]:
                 live_b = os.path.join(self.index_path, f"bucket={b}")
                 stage_b = os.path.join(staging, f"bucket={b}")
                 if os.path.exists(stage_b):
                     if os.path.exists(live_b):
                         shutil.rmtree(live_b)
                     os.replace(stage_b, live_b)
-                elif b in staged_set:
+                elif b in staged:
                     # staged dir gone = already moved into live before the
                     # crash: live_b is the post state, keep it
                     continue
@@ -413,6 +330,8 @@ class ETLPipeline:
         for p in (staging, aside):
             if os.path.exists(p):
                 shutil.rmtree(p)
+        os.remove(intent_file)
+        return [intent["op"]]
 
     # -- the dataflow --------------------------------------------------------
 
@@ -457,27 +376,17 @@ class ETLPipeline:
         ``force=False`` = the reference's skip-processed incremental mode
         (N1, `document_processor.py:146-202`): documents already indexed
         are anti-joined away before any work happens.
-        Returns {"n_documents", "n_chunks"} for the batch actually ingested
-        (A1 success-count analog).
+        Returns {"n_documents", "n_chunks"} of the whole index after the
+        write (A1 success-count analog); the batch's own counts are in
+        ``last_ingest_metrics``.
         """
+        exists = self._exists()
         batch = self.gate_extensions(docs, filename_col) if gate else docs
-        if not force and self._exists():
+        if not force and exists:
             seen = self.index_table().select("filename").distinct()
             batch = batch.join(
                 F.broadcast(seen), batch[filename_col] == seen["filename"], "left_anti"
             )
-        # Tiny action (<= n_buckets rows) over the raw batch (pre-chunking,
-        # pre-embedding): which partition dirs does this ingest touch?
-        buckets = {
-            int(r.b)
-            for r in batch.select(
-                F.pmod(F.crc32(F.col(filename_col)), F.lit(self.config.n_buckets))
-                .cast("int")
-                .alias("b")
-            )
-            .distinct()
-            .collect()
-        }
         new_chunks = self.chunk_documents(batch, filename_col, text_col)
         # Pipeline observability (DataFrame.observe / CollectMetricsExec):
         # batch metrics ride the write job's own scan — zero extra pass,
@@ -500,16 +409,21 @@ class ETLPipeline:
                     "chars_written"
                 ),
             )
-        wrote = False
-        if not self._exists():
+        wrote = True
+        if not exists:
             self._rewrite(new_chunks)
-            wrote = True
-        elif buckets:
-            merged = merge_by_key(self._read_buckets(buckets), new_chunks, keys=["filename"])
-            self._swap_buckets(merged, buckets)
-            wrote = True
+        else:
+            # Tiny action (<= n_buckets rows) over the raw batch (pre-chunking,
+            # pre-embedding): which partition dirs does this upsert touch?
+            rows = batch.select(self._bucket(F.col(filename_col)).alias("b")).distinct()
+            buckets = {r.b for r in rows.collect()}
+            wrote = bool(buckets)
+            if wrote:
+                merged = merge_by_key(self.index_table(buckets), new_chunks, keys=["filename"])
+                self._swap_buckets(merged, buckets)
         #: metrics of the batch the write ACTUALLY ingested (post-gate,
         #: post-skip) — {} when nothing was written (or not observed).
+        self.last_ingest_metrics = {}
         if wrote and obs is not None:
             try:
                 self.last_ingest_metrics = dict(obs.get)
@@ -517,9 +431,7 @@ class ETLPipeline:
                 # an all-empty batch can execute the write with zero
                 # tasks touching the CollectMetrics node — no metrics
                 # row exists to fetch (observed on empty bootstrap)
-                self.last_ingest_metrics = {}
-        else:
-            self.last_ingest_metrics = {}
+                pass
         stats = (
             self.index_table()
             .groupBy()
@@ -553,9 +465,8 @@ class ETLPipeline:
         """K5 index-config persistence (`index_manager.py:263-286`): a
         one-row JSON manifest; when the same (name, distance, model)
         is saved again with a new type, the type LIST merges
-        distinct-union style (A6) instead of being replaced."""
-        import json
-
+        distinct-union style (A6) instead of being replaced. Written
+        atomically: a crash mid-write keeps the previous manifest."""
         path = self.index_path + ".config.json"
         cfg = {
             "name": os.path.basename(self.index_path),
@@ -566,13 +477,13 @@ class ETLPipeline:
             "embedding_dim": FAKE_EMBED_DIM,
         }
         if os.path.exists(path):
-            old = json.load(open(path))
+            with open(path) as f:
+                old = json.load(f)
             if (old["name"], old["distance"], old["model"]) == (
                 cfg["name"], cfg["distance"], cfg["model"]
             ):
                 cfg["types"] = sorted(set(old["types"]) | {index_type})
-        with open(path, "w") as f:
-            json.dump(cfg, f)
+        _write_json(path, cfg)
         return cfg
 
     def process_folder(self, input_dir: str, force: bool = True) -> dict:
@@ -632,7 +543,7 @@ class ETLPipeline:
         if not self._exists() or not filenames:
             return
         buckets = self._buckets_of(filenames)
-        kept = self._read_buckets(buckets).filter(~F.col("filename").isin(*filenames))
+        kept = self.index_table(buckets).filter(~F.col("filename").isin(*filenames))
         self._swap_buckets(kept, buckets)
 
     def compact(self) -> None:
@@ -640,13 +551,14 @@ class ETLPipeline:
 
         Long-running ingest (especially streaming foreachBatch upserts)
         can accrete files inside bucket dirs; periodic compaction
-        restores one-file-per-bucket scan efficiency via the staged,
-        crash-safe whole-table swap (:meth:`_rewrite`), with its own
-        scratch namespace so it never deletes an ingest's staging dirs.
+        restores one-file-per-bucket scan efficiency via the same staged,
+        crash-safe commit every write uses, over every bucket
+        (:meth:`_rewrite`).
 
-        NOT safe concurrently with an in-flight ingest/delete: the
-        whole-table swap would drop a bucket a concurrent
-        :meth:`_swap_buckets` is mid-replace. Call it between drains —
+        NOT safe concurrently with an in-flight ingest/delete: both
+        commits stage into the same scratch dirs, and the whole-table
+        swap would drop a bucket a concurrent :meth:`_swap_buckets` is
+        mid-replace. Call it between drains —
         ``ingest_stream`` blocks until its AvailableNow drain finishes,
         so sequential callers are always safe; a real deployment with
         concurrent writers does this as a lakehouse OPTIMIZE under the
@@ -654,7 +566,7 @@ class ETLPipeline:
         """
         if not self._exists():
             return
-        self._rewrite(self.index_table(), scratch_suffix=".compact")
+        self._rewrite(self.index_table())
 
     def documents_metadata(self) -> DataFrame:
         """D2 DocumentMetadata analog: per-document chunk/token stats
@@ -664,6 +576,12 @@ class ETLPipeline:
             F.sum("n_tokens").alias("total_tokens"),
         )
 
+    def _query_frame(self, queries: Sequence[str]) -> DataFrame:
+        """(q_vec_id, query_text, q_emb): one row per query, id = position."""
+        return self.spark.createDataFrame(
+            list(enumerate(queries)), "q_vec_id long, query_text string"
+        ).withColumn("q_emb", fake_embedding(F.col("query_text")))
+
     def build_ann_index(self, n_cells: int = 16, kmeans_iter: int = 4) -> str:
         """Train centroids on the index embeddings (k-means) and write a
         cell-partitioned IVF copy next to the index table. Returns its
@@ -672,10 +590,7 @@ class ETLPipeline:
         from .operators.ivf import build_ivf_index
         from .operators.kmeans import kmeans_fit
 
-        vec = self.index_table().select(
-            F.concat_ws("#", "filename", F.col("chunk_idx").cast("string")).alias("c_vec_id"),
-            F.col("embedding").alias("cemb2"),
-        )
+        vec = self.index_table().select(_chunk_id(), F.col("embedding").alias("cemb2"))
         cent = kmeans_fit(
             vec.select(F.col("c_vec_id").alias("vec_id"), F.col("cemb2").alias("emb")),
             k=n_cells,
@@ -690,11 +605,9 @@ class ETLPipeline:
         """Approximate top-k via the IVF index (build_ann_index first)."""
         from .operators.ivf import ivf_search
 
-        qdf = self.spark.createDataFrame(
-            [(i, q) for i, q in enumerate(queries)], "q_vec_id long, query_text string"
-        ).select("q_vec_id", fake_embedding(F.col("query_text")).alias("qemb"))
+        qdf = self._query_frame(queries).drop("query_text")
         return ivf_search(
-            self.spark, self.index_path + ".ivf", qdf, self._ann_centroids, k=k
+            self.spark, self.index_path + ".ivf", qdf, self._ann_centroids, k=k, q_vec="q_emb"
         )
 
     def hybrid_search(
@@ -715,16 +628,10 @@ class ETLPipeline:
         from .functions.text import words
         from .operators.knn import exact_knn
 
-        qdf = self.spark.createDataFrame(
-            [(i, q) for i, q in enumerate(queries)], "q_vec_id long, query_text string"
-        )
-        qe = qdf.select(
-            "q_vec_id", fake_embedding(F.col("query_text")).alias("q_emb")
-        )
+        qdf = self._query_frame(queries)
+        qe = qdf.select("q_vec_id", "q_emb")
         chunks = self.index_table().select(
-            F.concat_ws("#", "filename", F.col("chunk_idx").cast("string")).alias("c_vec_id"),
-            F.col("embedding").alias("c_emb"),
-            "chunk_text",
+            _chunk_id(), F.col("embedding").alias("c_emb"), "chunk_text"
         )
         dense = exact_knn(F.broadcast(qe), chunks, k=topn).select(
             "q_vec_id", "c_vec_id", F.col("rank").alias("rd")
@@ -769,13 +676,8 @@ class ETLPipeline:
         + ann_search remain the persisted-layout path)."""
         from .operators.planner import auto_knn
 
-        qdf = self.spark.createDataFrame(
-            [(i, q) for i, q in enumerate(queries)], "q_vec_id long, query_text string"
-        ).select("q_vec_id", fake_embedding(F.col("query_text")).alias("q_emb"))
-        corpus = self.index_table().select(
-            F.concat_ws("#", "filename", F.col("chunk_idx").cast("string")).alias("c_vec_id"),
-            F.col("embedding").alias("c_emb"),
-        )
+        qdf = self._query_frame(queries).drop("query_text")
+        corpus = self.index_table().select(_chunk_id(), F.col("embedding").alias("c_emb"))
         return auto_knn(qdf, corpus, k=k, threshold=threshold)
 
     def near_dups(self, threshold: int = 4096, tau: float = 0.5) -> DataFrame:
@@ -787,12 +689,7 @@ class ETLPipeline:
         jaccard, strategy) keyed by ``filename#chunk_idx``."""
         from .operators.planner import auto_dedup
 
-        chunks = self.index_table().select(
-            F.concat_ws("#", "filename", F.col("chunk_idx").cast("string")).alias(
-                "doc_id"
-            ),
-            F.col("chunk_text").alias("text"),
-        )
+        chunks = self.index_table().select(_chunk_id("doc_id"), F.col("chunk_text").alias("text"))
         return auto_dedup(chunks, threshold=threshold, tau=tau)
 
     def rank_chunks(

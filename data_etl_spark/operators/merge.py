@@ -9,9 +9,9 @@ index_manager.py:347-368`) as a single relational primitive:
 
 This is idempotent re-ingestion: re-merging the same batch is a no-op.
 On a lakehouse table this compiles to ``MERGE WHEN MATCHED DELETE +
-INSERT``; as a pure DataFrame op it is an anti join (broadcast when the
-new batch is small — the common ingest case) plus a union, i.e. one
-shuffle at most, none when `new` broadcasts.
+INSERT``; as a pure DataFrame op it is an anti join that broadcasts the
+new batch (small next to the table — the ingest case) plus a union: no
+shuffle of the large side.
 """
 
 from __future__ import annotations
@@ -22,24 +22,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def merge_by_key(
-    old: DataFrame,
-    new: DataFrame,
-    keys: Sequence[str],
-    broadcast_new: bool = True,
-) -> DataFrame:
+def merge_by_key(old: DataFrame, new: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Replace rows of ``old`` that share ``keys`` with rows of ``new``.
 
-    Column sets must match. ``broadcast_new=True`` hints the anti join to
-    broadcast the new batch (ingest batches are small relative to the
-    table; at 100 TB this avoids shuffling the large side entirely).
+    Column sets must match. The anti join broadcasts ``new`` (ingest
+    batches are small relative to the table; at 100 TB this avoids
+    shuffling the large side entirely).
     """
     if set(old.columns) != set(new.columns):
         raise ValueError(
             f"merge_by_key column mismatch: {sorted(old.columns)} vs {sorted(new.columns)}"
         )
-    probe = F.broadcast(new) if broadcast_new else new
-    kept = old.join(probe, on=list(keys), how="left_anti")
+    kept = old.join(F.broadcast(new), on=list(keys), how="left_anti")
     return kept.unionByName(new)
 
 

@@ -204,6 +204,65 @@ def test_save_config_merges_types(pipe):
     assert c3["types"] == ["qdrant"]
 
 
+def test_save_config_survives_torn_write(pipe, monkeypatch):
+    """A crash part-way through writing the manifest keeps the previous
+    one: it still loads, and the next save_config merges into it."""
+    import json
+
+    first = pipe.save_config("qdrant", "jina/jina-embeddings-v2-small-en")
+
+    def torn_dump(obj, f, *a, **kw):
+        f.write(json.dumps(obj)[:10])
+        raise OSError("injected crash")
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError):
+            pipe.save_config("faiss", "jina/jina-embeddings-v2-small-en")
+    with open(pipe.index_path + ".config.json") as f:
+        assert json.load(f) == first
+    again = pipe.save_config("faiss", "jina/jina-embeddings-v2-small-en")
+    assert again["types"] == ["faiss", "qdrant"]
+
+
+def test_benchmark_layer_hooks_install_and_restore(pipe, docs, monkeypatch):
+    """The benchmark's traced run wraps pipeline hook points by name
+    (perfbench/workloads.py::Layers): renaming one in etl.py must fail
+    this suite, not only a traced benchmark run."""
+    import contextlib
+    import os
+
+    import data_etl_spark.etl as etl_mod
+
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(__file__), "..", "perfbench"))
+    from workloads import Layers
+
+    spans = []
+
+    class Tracer:
+        @contextlib.contextmanager
+        def span(self, name, op):
+            yield {}
+            spans.append((name, op))
+
+    merge = etl_mod.merge_by_key
+    layers = Layers(Tracer(), pipe).install()
+    try:
+        pipe.ingest(docs)  # bootstrap: a whole-index commit
+        pipe.ingest(docs.limit(1))  # upsert: merge + bucket swap
+    finally:
+        layers.restore()
+    assert spans == [
+        ("chunk", "chunk_documents"),
+        ("commit", "_rewrite"),
+        ("chunk", "chunk_documents"),
+        ("merge", "merge_by_key"),
+        ("commit", "_swap_buckets"),
+    ]
+    assert etl_mod.merge_by_key is merge
+    assert not {"_rewrite", "_swap_buckets", "chunk_documents"} & set(vars(pipe))
+
+
 def test_compact_restores_one_file_per_bucket(pipe, docs):
     import glob
     import os
@@ -419,17 +478,31 @@ def test_swap_buckets_crash_recovers_to_post_state(
     )
 
 
-@pytest.mark.parametrize("crash_at", [1, 2, 3])
-def test_rewrite_crash_recovers(pipe, docs, tmp_path, monkeypatch, spark, crash_at):
-    """Kill the compaction _rewrite between any two renames: a readable
-    index must survive and recover() must land on the compacted (post)
-    state — content-identical to the pre state by compaction's contract."""
-    pipe.ingest(docs)
-    expected = _index_rows(pipe)
+@pytest.mark.parametrize(
+    "op, crash_at",
+    [pytest.param("compact", n, id=str(n)) for n in (1, 2, 3)]
+    + [pytest.param("bootstrap", n, id=f"bootstrap-{n}") for n in (1, 2, 3)],
+)
+def test_rewrite_crash_recovers(pipe, docs, tmp_path, monkeypatch, spark, op, crash_at):
+    """Kill a whole-index _rewrite between any two renames — a compaction,
+    or the first ingest into an empty path: a readable index must survive
+    and recover() must land on the post state (for compaction,
+    content-identical to the pre state by its contract)."""
+    if op == "compact":
+        pipe.ingest(docs)
+        expected = _index_rows(pipe)
+        run = pipe.compact
+    else:
+        twin = ETLPipeline(
+            spark, str(tmp_path / "twin"), ETLConfig(chunk_size=100, chunk_overlap=20, n_buckets=4)
+        )
+        twin.ingest(docs)
+        expected = _index_rows(twin)
+        run = lambda: pipe.ingest(docs)
 
     crash = _CrashAfter(monkeypatch, crash_at)
     try:
-        pipe.compact()
+        run()
         injected = False
     except OSError:
         injected = True
