@@ -480,6 +480,16 @@ _TOUCHED_BY_ROUND[14] = frozenset({
     # though it was oracle-re-checked at sf0.01 anyway):
     "q_dup_triangles", "q_pagerank_dupgraph",
 })
+_TOUCHED_BY_ROUND[15] = frozenset({
+    # r15: one top-k retrieval kernel (operators/knn.py). q_hybrid_rrf
+    # now runs the RRF operator ETLPipeline.hybrid_search shares; its
+    # dense leg is exact_knn (per-vector norms + seq_cosine_pre, bit-
+    # identical to seq_cosine). Rows identical (sf0.001 + sf0.01
+    # oracle-exact), optimized plan changed, re-verify. The other
+    # kNN/IVF/recall queries moved onto the same kernel with optimized
+    # plans unchanged:
+    "q_hybrid_rrf",
+})
 
 
 def _current_touched() -> frozenset:

@@ -33,7 +33,7 @@ import zlib
 from collections.abc import Iterable, Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -622,50 +622,17 @@ class ETLPipeline:
         set x corpus scan), lexical leg = distinct-word-overlap
         top-``topn`` via an inverted-index join (never all-pairs text
         comparison), fused by sum(1/(rrf_k + rank)) and cut to ``k``.
-        Same plan shape as plans/similarity.py::q_hybrid_rrf, which
-        carries the cross-engine oracle for the fusion semantics.
+        One operator, operators/knn.py::rrf_hybrid, serves this and
+        plans/similarity.py::q_hybrid_rrf, which carries the
+        cross-engine oracle for the fusion semantics.
         """
-        from .functions.text import words
-        from .operators.knn import exact_knn
+        from .operators.knn import rrf_hybrid
 
-        qdf = self._query_frame(queries)
-        qe = qdf.select("q_vec_id", "q_emb")
+        qdf = self._query_frame(queries).withColumnRenamed("query_text", "text")
         chunks = self.index_table().select(
-            _chunk_id(), F.col("embedding").alias("c_emb"), "chunk_text"
+            _chunk_id(), F.col("embedding").alias("c_emb"), F.col("chunk_text").alias("text")
         )
-        dense = exact_knn(F.broadcast(qe), chunks, k=topn).select(
-            "q_vec_id", "c_vec_id", F.col("rank").alias("rd")
-        )
-        qw = qdf.select(
-            "q_vec_id", F.explode(words(F.col("query_text"))).alias("word")
-        ).distinct()
-        cw = chunks.select(
-            "c_vec_id", F.explode(words(F.col("chunk_text"))).alias("word")
-        ).distinct()
-        wl = W.partitionBy("q_vec_id").orderBy(F.desc("overlap"), F.asc("c_vec_id"))
-        lex = (
-            F.broadcast(qw)
-            .join(cw, "word")
-            .groupBy("q_vec_id", "c_vec_id")
-            .agg(F.count("*").alias("overlap"))
-            .withColumn("rl", F.row_number().over(wl))
-            .filter(F.col("rl") <= topn)
-            .select("q_vec_id", "c_vec_id", "rl")
-        )
-        fused = dense.join(lex, ["q_vec_id", "c_vec_id"], "full_outer").select(
-            "q_vec_id",
-            "c_vec_id",
-            (
-                F.coalesce(1.0 / (rrf_k + F.col("rd")), F.lit(0.0))
-                + F.coalesce(1.0 / (rrf_k + F.col("rl")), F.lit(0.0))
-            ).alias("rrf"),
-        )
-        wf = W.partitionBy("q_vec_id").orderBy(F.desc("rrf"), F.asc("c_vec_id"))
-        return (
-            fused.withColumn("rank", F.row_number().over(wf))
-            .filter(F.col("rank") <= k)
-            .select("q_vec_id", "rank", "c_vec_id", "rrf")
-        )
+        return rrf_hybrid(qdf, chunks, k, topn=topn, rrf_k=rrf_k)
 
     def search(self, queries: Sequence[str], k: int = 5, threshold: int = 2048) -> DataFrame:
         """Cost-gated cosine top-k over the index (V4): exact brute

@@ -78,10 +78,10 @@ def with_asset_meta(
 
 
 # ---------------------------------------------------------------------------
-# Frame sampling: video-style 1->N decode (UDTF shape, U2 analog). The
-# real frame decoder is stubbed like decode_image; the deterministic
-# stand-in slices fixed-size byte windows so the exploding mapInPandas
-# plumbing (schema, batch shape, ordering) is fully testable.
+# Frame sampling: video-style 1->N decode (UDTF shape, U2 analog). No
+# real frame decoder ships; the deterministic stand-in slices fixed-size
+# byte windows so the exploding mapInPandas plumbing (schema, batch
+# shape, ordering) is fully testable.
 # ---------------------------------------------------------------------------
 
 FRAME_SIZE = 16
@@ -95,14 +95,6 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame_md5", T.StringType(), False),
     ]
 )
-
-
-def decode_frames(payload: bytes):
-    """Real video frame extraction — needs a media library not present here."""
-    raise NotImplementedError(
-        "video decode requires a media library not installed in this "
-        "environment; use fake_frames for the deterministic test path"
-    )
 
 
 def fake_frames(payload: bytes) -> list[bytes]:

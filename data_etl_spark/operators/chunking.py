@@ -108,24 +108,6 @@ def chunk_text(
     )
 
 
-def chunk_cte_sql(
-    table: str,
-    key_cols: str,
-    text_expr: str,
-    size: int = DEFAULT_CHUNK_SIZE,
-    overlap: int = DEFAULT_OVERLAP,
-) -> str:
-    """DuckDB CTE body producing (key_cols, chunk_idx, chunk_text)."""
-    step = size - overlap
-    nchunks = n_chunks_sql(text_expr, size, step)
-    return f"""
-        SELECT {key_cols},
-               unnest(generate_series(0, {nchunks} - 1)) AS chunk_idx,
-               {text_expr} AS __text
-        FROM {table}
-    """
-
-
 #: sentinel used to split markdown at header lines without regex lookahead
 #: (RE2 in DuckDB has no lookahead; prefixing a \x01 then splitting on it
 #: is equivalent and works in both engines).

@@ -288,9 +288,12 @@ def shared_seed_pairs(
     throws away (at 10x the rehearsal corpus that intermediate is 31x
     the pairs for 17x the docs, and it only gets worse). This operator
     instead enumerates, per doc, the C(k, m) seed COMBINATIONS (m =
-    ``min_shared``; 28 per doc at k=8, m=2) via an (m-1)-fold
-    ascending-seed self-join, and self-joins on the combination bucket
-    (seed ids + their minhashes): a pair lands in a combo bucket
+    ``min_shared``; 28 per doc at k=8, m=2) MAP-SIDE: one groupBy(key)
+    ``collect_list`` of (seed, minhash) structs, sorted by seed, then
+    nested array transforms emit every ascending-position m-subset of
+    that array — no self-join of the signature table. It then
+    self-joins on the combination bucket (seed ids + their minhashes):
+    a pair lands in a combo bucket
     exactly when it agrees on that whole m-subset, so the join's
     enumeration volume is the J^m background scale — the SAME scale as
     the result — plus C(s, m) duplicate hits per truly-similar pair
@@ -298,6 +301,12 @@ def shared_seed_pairs(
     blowup is the cost knob: m near k/2 maximizes it (70 at k=8, m=4),
     so raising m buys precision with a bounded constant, not a new
     asymptotic term.
+
+    Precondition: each key's seeds are distinct — one (key, seed) row,
+    as :func:`minhash_signatures` emits. The enumeration picks array
+    POSITIONS, so a repeated seed would yield combos that name one seed
+    twice and a pair agreeing on fewer than m distinct seeds could
+    pass. It is neither checked nor deduplicated here.
 
     Output: (doc1, doc2) distinct, doc1 < doc2 — the precision-filtered
     dup-graph edge list used by the graph-analytic queries

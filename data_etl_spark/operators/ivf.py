@@ -12,19 +12,11 @@ Centroids are a DataFrame (cent_id, cemb); k-means training is optional
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
-
-
-def _l2(a: str, b: str) -> Column:
-    """Expanded-form L2 distance (same expression tree as the oracles)."""
-    return F.sqrt(
-        V.dot(F.col(a), F.col(a))
-        + V.dot(F.col(b), F.col(b))
-        - F.lit(2) * V.dot(F.col(a), F.col(b))
-    )
+from .knn import cell_knn
 
 
 def assign_cells(
@@ -35,9 +27,11 @@ def assign_cells(
     (they are tiny); ties break on cent_id for determinism. ``nprobe``
     keeps the N nearest cells per vector (probe-side fan-out for recall
     — the multiprobe lever; corpus assignment stays nprobe=1). The ONE
-    implementation of this logic — q_ivf_knn / q_ivf_multiprobe /
-    auto_knn all route here so tie-break or distance changes cannot
-    drift between them and their oracles.
+    implementation of this logic: its (id, vector, cell) output is what
+    the one in-cell search, operators/knn.py::cell_knn, joins — for
+    q_ivf_knn, q_ivf_multiprobe, auto_knn and :func:`ivf_search` — so
+    tie-break or distance changes cannot drift between them and their
+    oracles.
 
     Distance runs on the Arrow path (seq_l2sq, the O(n_vectors x
     n_centroids) hot loop), projected to a column first so the window
@@ -77,25 +71,15 @@ def ivf_search(
     probes: DataFrame,
     centroids: DataFrame,
     k: int = 5,
-    q_id: str = "q_vec_id",
     q_vec: str = "qemb",
-    id_col: str = "c_vec_id",
-    vec_col: str = "cemb2",
 ) -> DataFrame:
-    """Top-k cosine within each probe's cell.
+    """Top-k cosine of each (q_vec_id, ``q_vec``) probe within its cell
+    of the index :func:`build_ivf_index` wrote (ids c_vec_id).
 
-    The equi-join on ``cell`` pushes a partition filter into the index
-    scan (dynamic partition pruning / broadcast join on the partition
-    column), so only the probed cells' files are read.
+    The equi-join on ``cell`` (operators/knn.py::cell_knn) pushes a
+    partition filter into the index scan (dynamic partition pruning /
+    broadcast join on the partition column), so only the probed cells'
+    files are read.
     """
-    q_assign = assign_cells(probes, centroids, q_id, q_vec).withColumnRenamed("cell", "cell_q")
-    index = spark.read.parquet(path)
-    joined = q_assign.join(index, q_assign["cell_q"] == index["cell"])
-    score = V.seq_cosine(F.col(q_vec), F.col(vec_col))
-    w = W.partitionBy(q_id).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        joined.select(q_id, F.col(id_col).alias("c_vec_id"), score.alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", "c_vec_id", "score")
-    )
+    q_cells = assign_cells(probes, centroids, "q_vec_id", q_vec)
+    return cell_knn(q_cells, spark.read.parquet(path), k)

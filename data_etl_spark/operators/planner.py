@@ -17,7 +17,7 @@ expression rewrite. This module implements that rule as a cost gate:
 
 The gate's only driver action is one column-pruned ``count()`` — the
 same O(1)-result class as the k-means drift scalar. Both branches emit
-the identical (q_id, rank, c_id, score) schema, and both are
+the identical (q_vec_id, rank, c_vec_id, score) schema, and both are
 SQL-expressible, so the registered query's DuckDB oracle reproduces the
 gate itself (two result branches gated by a scalar count subquery).
 """
@@ -29,10 +29,9 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..cache import tracked_persist
-from ..functions import vectors as V
 from .ivf import assign_cells
 from .joins import salted_join
-from .knn import exact_knn
+from .knn import cell_knn, exact_knn
 
 __all__ = ["auto_dedup", "auto_group_quantile", "auto_join", "auto_knn", "auto_rank"]
 
@@ -88,13 +87,11 @@ def auto_rank(
     single-task sort risks spill on a real cluster regardless of what
     local timing says.
     """
-    from pyspark.sql import Window as W2
-
     from .rank import exact_global_rank
 
     n = df.count()
     if n <= threshold:
-        w = W2.orderBy(*order_cols)
+        w = W.orderBy(*order_cols)
         out = df.withColumn(rank_name, F.row_number().over(w).cast("bigint"))
         if total_name is not None:
             out = out.withColumn(total_name, F.lit(n).cast("bigint"))
@@ -120,14 +117,11 @@ def auto_knn(
     corpus: DataFrame,
     *,
     k: int = 5,
-    q_id: str = "q_vec_id",
-    c_id: str = "c_vec_id",
-    q_vec: str = "q_emb",
-    c_vec: str = "c_emb",
     threshold: int = 2048,
     n_centroids: int = 8,
 ) -> DataFrame:
-    """Top-k cosine per probe; physical strategy chosen by corpus size.
+    """Top-k cosine per (q_vec_id, q_emb) probe over the (c_vec_id,
+    c_emb) corpus; physical strategy chosen by corpus size.
 
     Threshold 2048: calibrated at ~sf1 (CALIBRATION_r08.json) — exact
     broadcast kNN wins through 2048 corpus rows (0.81 s vs IVF 0.90 s),
@@ -136,25 +130,16 @@ def auto_knn(
     """
     n_corpus = corpus.count()
     if n_corpus <= threshold:
-        return exact_knn(
-            F.broadcast(probes), corpus, k=k,
-            q_id=q_id, c_id=c_id, q_vec=q_vec, c_vec=c_vec,
-        )
+        return exact_knn(F.broadcast(probes), corpus, k=k)
     cent = (
-        corpus.orderBy(c_id)
+        corpus.orderBy("c_vec_id")
         .limit(n_centroids)
-        .select(F.col(c_id).alias("cent_id"), F.col(c_vec).alias("cemb"))
+        .select(F.col("c_vec_id").alias("cent_id"), F.col("c_emb").alias("cemb"))
     )
-    c_assign = assign_cells(corpus, cent, c_id, c_vec)
-    q_assign = assign_cells(probes, cent, q_id, q_vec)
-    score = V.seq_cosine(F.col(q_vec), F.col(c_vec))
-    w = W.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
-    return (
-        q_assign.join(c_assign, "cell")
-        .select(q_id, c_id, score.alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", c_id, "score")
+    return cell_knn(
+        assign_cells(probes, cent, "q_vec_id", "q_emb"),
+        assign_cells(corpus, cent, "c_vec_id", "c_emb"),
+        k,
     )
 
 

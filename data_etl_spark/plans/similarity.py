@@ -20,7 +20,8 @@ from pyspark.storagelevel import StorageLevel
 
 from ..cache import tracked_persist
 from ..functions import vectors as V
-from ..operators.knn import exact_knn
+from ..operators.ivf import assign_cells
+from ..operators.knn import cell_knn, exact_knn, recall_at_k, rrf_hybrid
 from ..sources import load_table
 from .registry import register, register_cap
 
@@ -233,13 +234,9 @@ WHERE rank <= 5
 """
 
 
-@register("q_ivf_knn", oracle=_IVF_ORACLE, tags=("phase3", "similarity"))
-def q_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: centroid-cell assignment then in-cell top-5 cosine.
-
-    The scale path for V4: at 100 TB the corpus is written partitioned by
-    ``cell`` so a probe reads one cell; centroids broadcast.
-    """
+def _ivf_knn(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
+    """In-cell top-5 cosine of the IVF probe split, each probe searching
+    its ``nprobe`` nearest cells (operators/knn.py::cell_knn)."""
     e = _embeddings(spark, sf_dir)
     emb = V.as_double(F.col("embedding"))
     cent = e.filter(F.col("vec_id") < _IVF_CENT_MAX).select(
@@ -251,20 +248,21 @@ def q_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.filter(F.col("vec_id") >= _IVF_PROBE_MAX).select(
         F.col("vec_id").alias("c_vec_id"), emb.alias("cemb2")
     )
-
-    from ..operators.ivf import assign_cells
-
-    c_assign = assign_cells(corpus, cent, "c_vec_id", "cemb2")
-    q_assign = assign_cells(probe, cent, "q_vec_id", "qemb")
-    score = V.seq_cosine(F.col("qemb"), F.col("cemb2"))
-    w = W.partitionBy("q_vec_id").orderBy(F.desc("score"), F.asc("c_vec_id"))
-    return (
-        q_assign.join(c_assign, "cell")
-        .select("q_vec_id", "c_vec_id", score.alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("q_vec_id", "rank", "c_vec_id", "score")
+    return cell_knn(
+        assign_cells(probe, cent, "q_vec_id", "qemb", nprobe=nprobe),
+        assign_cells(corpus, cent, "c_vec_id", "cemb2"),
+        k=5,
     )
+
+
+@register("q_ivf_knn", oracle=_IVF_ORACLE, tags=("phase3", "similarity"))
+def q_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN: centroid-cell assignment then in-cell top-5 cosine.
+
+    The scale path for V4: at 100 TB the corpus is written partitioned by
+    ``cell`` so a probe reads one cell; centroids broadcast.
+    """
+    return _ivf_knn(spark, sf_dir, nprobe=1)
 
 
 # ---------------------------------------------------------------------------
@@ -310,31 +308,7 @@ WHERE rank <= 5
 @register("q_ivf_multiprobe", oracle=_MULTIPROBE_ORACLE, tags=("phase3", "similarity"))
 def q_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with nprobe=2: probes search their two nearest cells."""
-    e = _embeddings(spark, sf_dir)
-    emb = V.as_double(F.col("embedding"))
-    cent = e.filter(F.col("vec_id") < _IVF_CENT_MAX).select(
-        F.col("vec_id").alias("cent_id"), emb.alias("cemb")
-    )
-    probe = e.filter(
-        (F.col("vec_id") >= _IVF_CENT_MAX) & (F.col("vec_id") < _IVF_PROBE_MAX)
-    ).select(F.col("vec_id").alias("q_vec_id"), emb.alias("qemb"))
-    corpus = e.filter(F.col("vec_id") >= _IVF_PROBE_MAX).select(
-        F.col("vec_id").alias("c_vec_id"), emb.alias("cemb2")
-    )
-
-    from ..operators.ivf import assign_cells
-
-    c_assign = assign_cells(corpus, cent, "c_vec_id", "cemb2")
-    q_assign = assign_cells(probe, cent, "q_vec_id", "qemb", nprobe=2)
-    score = V.seq_cosine(F.col("qemb"), F.col("cemb2"))
-    w = W.partitionBy("q_vec_id").orderBy(F.desc("score"), F.asc("c_vec_id"))
-    return (
-        q_assign.join(c_assign, "cell")
-        .select("q_vec_id", "c_vec_id", score.alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("q_vec_id", "rank", "c_vec_id", "score")
-    )
+    return _ivf_knn(spark, sf_dir, nprobe=2)
 
 
 # ---------------------------------------------------------------------------
@@ -943,66 +917,28 @@ def _hybrid_oracle() -> str:
 
 @register("q_hybrid_rrf", oracle=_hybrid_oracle(), tags=("phase3", "similarity", "hybrid"))
 def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval: RRF over dense-cosine and lexical-overlap ranks.
+    """Hybrid retrieval: RRF over dense-cosine and lexical-overlap ranks
+    (operators/knn.py::rrf_hybrid, the operator behind
+    ``ETLPipeline.hybrid_search``).
 
     Scale: the dense leg broadcasts the query set (linear corpus scan,
     Arrow-path scoring); the lexical leg is an inverted-index join on
     word (never all-pairs text comparison); fusion joins two top-N lists
     — O(queries x N), trivially broadcastable.
     """
-    from ..functions import text as TX
-
     e = _embeddings(spark, sf_dir).select(
         "vec_id", V.as_double(F.col("embedding")).alias("emb")
     )
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     both = e.join(d, e.vec_id == d.doc_id)
     q = both.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("emb").alias("qemb"), F.col("text").alias("qtext")
+        F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("q_emb"), "text"
     )
     c = both.filter(F.col("vec_id") >= 5).select(
-        F.col("vec_id").alias("c_id"), F.col("emb").alias("cemb"), F.col("text").alias("ctext")
+        F.col("vec_id").alias("c_vec_id"), F.col("emb").alias("c_emb"), "text"
     )
-
-    wd = W.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
-    dense = (
-        F.broadcast(q.select("q_id", "qemb"))
-        .crossJoin(c.select("c_id", "cemb"))
-        .select("q_id", "c_id", V.seq_cosine(F.col("qemb"), F.col("cemb")).alias("score"))
-        .withColumn("rd", F.row_number().over(wd))
-        .filter(F.col("rd") <= _RRF_TOPN)
-        .select("q_id", "c_id", "rd")
-    )
-
-    qw = q.select("q_id", F.explode(TX.words(F.col("qtext"))).alias("word")).distinct()
-    cw = c.select("c_id", F.explode(TX.words(F.col("ctext"))).alias("word")).distinct()
-    wl = W.partitionBy("q_id").orderBy(F.desc("overlap"), F.asc("c_id"))
-    lex = (
-        F.broadcast(qw)
-        .join(cw, "word")
-        .groupBy("q_id", "c_id")
-        .agg(F.count("*").alias("overlap"))
-        .withColumn("rl", F.row_number().over(wl))
-        .filter(F.col("rl") <= _RRF_TOPN)
-        .select("q_id", "c_id", "rl")
-    )
-
-    fused = (
-        dense.join(lex, ["q_id", "c_id"], "full_outer")
-        .select(
-            "q_id",
-            "c_id",
-            (
-                F.coalesce(F.lit(1.0) / (F.lit(_RRF_K) + F.col("rd")), F.lit(0.0))
-                + F.coalesce(F.lit(1.0) / (F.lit(_RRF_K) + F.col("rl")), F.lit(0.0))
-            ).alias("rrf"),
-        )
-    )
-    wf = W.partitionBy("q_id").orderBy(F.desc("rrf"), F.asc("c_id"))
-    return (
-        fused.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= 10)
-        .select("q_id", "rank", "c_id", "rrf")
+    return rrf_hybrid(q, c, k=10, topn=_RRF_TOPN, rrf_k=_RRF_K).select(
+        F.col("q_vec_id").alias("q_id"), "rank", F.col("c_vec_id").alias("c_id"), "rrf"
     )
 
 
@@ -1056,18 +992,10 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = e.filter(F.col("vec_id") >= _IVF_PROBE_MAX).select(
         F.col("vec_id").alias("c_vec_id"), emb.alias("c_emb")
     )
-    ex = exact_knn(F.broadcast(probe), corpus, k=5).select("q_vec_id", "c_vec_id")
-    ivf = q_ivf_knn(spark, sf_dir).select("q_vec_id", "c_vec_id")
-    matches = ex.join(ivf, ["q_vec_id", "c_vec_id"]).groupBy("q_vec_id").agg(
-        F.count("*").alias("n_overlap")
-    )
     # probe ids are unique by construction; deriving base from the exact
     # leg would plant the probe x corpus scoring subtree in the plan twice
-    base = probe.select("q_vec_id")
-    return base.join(matches, "q_vec_id", "left").select(
-        "q_vec_id",
-        F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"),
-        (F.coalesce("n_overlap", F.lit(0)) / F.lit(5.0)).alias("recall"),
+    return recall_at_k(
+        probe, exact_knn(F.broadcast(probe), corpus, k=5), q_ivf_knn(spark, sf_dir), k=5
     )
 
 
@@ -1156,23 +1084,9 @@ def q_sq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         cs.select("c_vec_id", F.col("emb").alias("c_emb"), deq.alias("c_deq"))
     )  # one corpus materialization feeds both search legs
 
-    ex = exact_knn(F.broadcast(q), c.select("c_vec_id", "c_emb"), k=5).select(
-        "q_vec_id", "c_vec_id"
-    )
-    ap = exact_knn(
-        F.broadcast(q),
-        c.select("c_vec_id", F.col("c_deq").alias("c_emb")),
-        k=5,
-    ).select("q_vec_id", "c_vec_id")
-    matches = ex.join(ap, ["q_vec_id", "c_vec_id"]).groupBy("q_vec_id").agg(
-        F.count("*").alias("n_overlap")
-    )
-    base = q.select("q_vec_id")
-    return base.join(matches, "q_vec_id", "left").select(
-        "q_vec_id",
-        F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"),
-        (F.coalesce("n_overlap", F.lit(0)) / F.lit(5.0)).alias("recall"),
-    )
+    ex = exact_knn(F.broadcast(q), c.select("c_vec_id", "c_emb"), k=5)
+    ap = exact_knn(F.broadcast(q), c.select("c_vec_id", F.col("c_deq").alias("c_emb")), k=5)
+    return recall_at_k(q, ex, ap, k=5)
 
 
 # ---------------------------------------------------------------------------
@@ -1317,20 +1231,9 @@ def q_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") >= _PQ_K) & (F.col("vec_id") < _PQ_Q_MAX)
     ).select(F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("q_emb"))
 
-    ex = exact_knn(F.broadcast(q), c.select("c_vec_id", "c_emb"), k=5).select(
-        "q_vec_id", "c_vec_id"
-    )
-    ap = exact_knn(
-        F.broadcast(q), c.select("c_vec_id", F.col("c_deq").alias("c_emb")), k=5
-    ).select("q_vec_id", "c_vec_id")
-    matches = ex.join(ap, ["q_vec_id", "c_vec_id"]).groupBy("q_vec_id").agg(
-        F.count("*").alias("n_overlap")
-    )
-    return q.select("q_vec_id").join(matches, "q_vec_id", "left").select(
-        "q_vec_id",
-        F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"),
-        (F.coalesce("n_overlap", F.lit(0)) / F.lit(5.0)).alias("recall"),
-    )
+    ex = exact_knn(F.broadcast(q), c.select("c_vec_id", "c_emb"), k=5)
+    ap = exact_knn(F.broadcast(q), c.select("c_vec_id", F.col("c_deq").alias("c_emb")), k=5)
+    return recall_at_k(q, ex, ap, k=5)
 
 
 # ---------------------------------------------------------------------------

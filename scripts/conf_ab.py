@@ -11,10 +11,11 @@ Example (the r13 washes, re-run r14 behind a probed-good window):
   python scripts/conf_ab.py spark.sql.adaptive.advisoryPartitionSizeInBytes 64m 256m
   python scripts/conf_ab.py spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold 0 64m
 
-For each query: set conf=A, min-of-N noop-sink runs; set conf=B,
-min-of-N; next query. Reports per-query (a_sec, b_sec, ratio b/a),
-median ratio, win counts, and the fault-probe readings bracketing the
-run so a drift-contaminated pass is self-labelling.
+For each query: build it with conf=A (:func:`build_arm`), min-of-N
+noop-sink runs; the same with conf=B; next query. Reports per-query
+(a_sec, b_sec, ratio b/a), median ratio, win counts, and the
+fault-probe readings bracketing the run so a drift-contaminated pass is
+self-labelling.
 """
 
 from __future__ import annotations
@@ -33,9 +34,27 @@ from _loadgate import fault_probe, wait_fault_probed, wait_quiet  # noqa: E402
 
 from data_etl_spark.cache import release_tracked  # noqa: E402
 from data_etl_spark.plans import REGISTRY  # noqa: E402
-from data_etl_spark.session import build_session  # noqa: E402
+from data_etl_spark.session import build_session, prep  # noqa: E402
 
 WARM_DIR = "/root/testdata/sf0.001"
+
+
+def build_arm(spark, name: str, key: str, value: str, sf: str):
+    """Registry query ``name`` over ``sf``, built with ``key`` = ``value``.
+
+    The registry wrapper runs prep(), which resets the keys it manages
+    (advisoryPartitionSizeInBytes, shuffle.partitions, ...): setting
+    the arm's value before calling it would measure the shipped value in
+    both arms. So prep() runs first, then the arm's value is set, then
+    the unwrapped plan function builds. The value is set again after
+    the build because a plan that calls another registered query re-runs
+    prep() on the way.
+    """
+    prep(spark)
+    spark.conf.set(key, value)
+    df = REGISTRY[name].fn.__wrapped__(spark, sf)
+    spark.conf.set(key, value)
+    return df
 
 
 def main() -> None:
@@ -65,11 +84,10 @@ def main() -> None:
         release_tracked()
 
     def timed(name: str, value: str) -> float:
-        spark.conf.set(args.key, value)
         best = float("inf")
         for _ in range(args.n):
             t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, args.sf).write.format("noop").mode(
+            build_arm(spark, name, args.key, value, args.sf).write.format("noop").mode(
                 "overwrite"
             ).save()
             best = min(best, time.perf_counter() - t0)

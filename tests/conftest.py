@@ -21,6 +21,14 @@ os.environ.setdefault("SPARK_GRAFT_WINDOW_READONLY", "1")
 # contracts; an explicit SPARK_GRAFT_CPUS in the environment still wins.
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
+# The session's 48g default driver heap is larger than a small host's
+# memory: there the JVM keeps growing its heap until the kernel's OOM
+# killer ends it mid-suite, and every later test fails with
+# ConnectionRefusedError. Cap the heap at half the host's memory; an
+# explicit SPARK_GRAFT_DRIVER_MEM in the environment still wins.
+_host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{min(48 * 1024, max(2048, _host_mb // 2))}m")
+
 import duckdb
 import pytest
 

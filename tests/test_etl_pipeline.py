@@ -263,6 +263,66 @@ def test_benchmark_layer_hooks_install_and_restore(pipe, docs, monkeypatch):
     assert not {"_rewrite", "_swap_buckets", "chunk_documents"} & set(vars(pipe))
 
 
+def test_benchmark_retrieval_hooks_install_and_restore(pipe, docs, monkeypatch):
+    """The traced benchmark's retrieval spans (perfbench/workloads.py::
+    Layers): ``search`` records auto_knn and reads the IVF branch off a
+    ``cell`` column in the analyzed plan; ``build_ann_index`` records
+    k-means and the IVF write. Renaming one of these hook points, or the
+    ``cell`` column, must fail this suite."""
+    import contextlib
+    import os
+
+    import data_etl_spark.operators.ivf as ivf_mod
+    import data_etl_spark.operators.kmeans as kmeans_mod
+    import data_etl_spark.operators.planner as planner_mod
+
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(__file__), "..", "perfbench"))
+    from workloads import Layers
+
+    spans = []
+
+    class Tracer:
+        @contextlib.contextmanager
+        def span(self, name, op):
+            attrs = {}
+            yield attrs
+            spans.append((name, op, attrs.get("ivf_branch")))
+
+    pipe.ingest(docs)
+    originals = (planner_mod.auto_knn, kmeans_mod.kmeans_fit, ivf_mod.build_ivf_index)
+    layers = Layers(Tracer(), pipe).install()
+    try:
+        pipe.search(["word1"], k=2, threshold=10**6)  # exact branch
+        pipe.search(["word1"], k=2, threshold=1)  # IVF branch
+        pipe.build_ann_index(n_cells=2, kmeans_iter=1)
+    finally:
+        layers.restore()
+    assert spans == [
+        ("knn", "auto_knn", 0),
+        ("knn", "auto_knn", 1),
+        ("kmeans", "kmeans_fit", None),
+        ("ivf_write", "build_ivf_index", None),
+    ]
+    assert (planner_mod.auto_knn, kmeans_mod.kmeans_fit, ivf_mod.build_ivf_index) == originals
+
+
+def test_search_ties_break_on_ascending_chunk_id(pipe, spark):
+    """Two files with identical text score identically on every
+    retrieval path; the tie goes to the smaller ``filename#chunk_idx``
+    whatever the ingest order."""
+    text = "the same short text"
+    pipe.ingest(
+        spark.createDataFrame([("b.txt", text), ("a.txt", text)], "filename string, text string")
+    )
+    for name, res in [
+        ("exact", pipe.search([text], k=2, threshold=10**6)),
+        ("ivf", pipe.search([text], k=2, threshold=1)),
+        ("hybrid", pipe.hybrid_search([text], k=2)),
+    ]:
+        ranked = [r.c_vec_id for r in sorted(res.collect(), key=lambda r: r.rank)]
+        assert ranked == ["a.txt#0", "b.txt#0"], name
+
+
 def test_compact_restores_one_file_per_bucket(pipe, docs):
     import glob
     import os
