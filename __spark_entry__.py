@@ -61,425 +61,10 @@ _NEW_QUERIES_BUDGET = 2
 # refill re-verifies the current round's entries before alphabetically-
 # fresh greens. The key is the round being built (max recorded round + 1),
 # so entries auto-expire when the next CORRECTNESS_r*.json lands — no
-# manual reset needed; just add a new key each round.
+# manual reset needed; just add a new key each round. Only the round
+# being built is read, so expired keys are deleted (git history keeps
+# them).
 _TOUCHED_BY_ROUND: dict[int, frozenset] = {}
-_TOUCHED_BY_ROUND[4] = frozenset({
-    "q_attribution_linear",   # oracle CAST(sum AS BIGINT)
-    "q_cohort_ltv",           # oracle window-sum CAST + day_k bigint
-    "q_markov_transitions",   # oracle CAST(sum AS BIGINT)
-    "q_math_funcs",           # oracle floor/ceil/sign CASTs
-    "q_sentence_dedup",       # oracle n_kept CAST (latent int/float skew)
-    "q_entity_match",         # name-prefix blocking key (engine + oracle)
-    "q_dup_spans",            # persist -> DISK_ONLY
-    "q_lm_perplexity",        # vocab count folded into plan
-    "q_market_basket",        # basket count folded into plan
-})
-_TOUCHED_BY_ROUND[5] = frozenset({
-    "q_equidepth_bins",       # global ntile -> two-pass bucketed rank
-    "q_rfm_segments",         # 3x global ntile -> two-pass bucketed rank
-    "q_tokenizer_vocab",      # top-V via orderBy().limit() (TakeOrdered)
-    "q_multimodal_meta",      # ASCII-sanitized payload contract (both engines)
-    "q_frame_sample",         # ASCII-sanitized payload contract
-    "q_binary_features",      # ASCII payload + empty-payload drop
-    "q_resize_assets",        # ASCII-sanitized payload contract
-    "q_audio_energy",         # ASCII-sanitized payload contract
-    "q_cms_heavy_hitters",    # token persist -> DISK_ONLY
-    "q_dup_spans",            # repartition(doc_id) decision re-measured
-    # raw-shingle persists -> DISK_ONLY (word_shingles internal + plan
-    # sites; storage level only, values unchanged — re-verify anyway):
-    # session-gap boundary contract (fuzz seed 555): oracles now use
-    # strict >, matching session_window's boundary-merge — re-verify:
-    "q_session_window", "q_streaming_sessionize",
-    # (the whole minhash persist-level batch — q_minhash_signatures /
-    # q_minhash_estimate / q_minhash_lsh_pairs / q_minhash_banded_pairs /
-    # q_ngram_jaccard / q_decontaminate — dropped from the window:
-    # storage-level-only changes, displaced by the torture/empty-probe/
-    # boundary contract fixes and round-5 fresh queries; all remain
-    # green in the local oracle + 3-seed fuzz)
-    "q_udtf_word_windows",  # spaces-only strip matches SQL trim
-    "q_ivf_recall",         # oracle base rows from probe set, not exact
-    "q_dup_triangles", "q_pagerank_dupgraph",
-    "q_keep_best", "q_dedup_clusters", "q_corpus_filter",
-    # (q_simhash_eval also displaced: persist-level-only change)
-    # nearest-centroid assignment deduped into operators/ivf.assign_cells
-    # (identical expression tree; re-verify out of caution — q_ivf_recall
-    # is already listed above for its oracle base-row fix):
-    "q_ivf_knn",
-    # full-registry review fixes: pivot NULL->0 fill, ab_test degenerate
-    # guards (both engines), pmi count folded into plan, cohort_ltv
-    # broadcast unhinted, market_basket persist -> DISK_ONLY:
-    "q_pivot", "q_ab_test", "q_pmi_collocations", "q_cohort_ltv",
-    "q_market_basket",
-    # zero-denominator contract (fuzz-found): cosine family now
-    # try_divide (NULL on zero norm), token ratio NULL on 0 tokens —
-    # values unchanged on driver data, plans changed, re-verify:
-    # (q_hybrid_rrf / q_ivf_* / q_embed_dedup_clusters share the same
-    # changed cosine helper but lost the window-slot lottery — values
-    # are unchanged on driver data and their local oracle tests ran)
-    # (q_vector_stats not listed: it uses l2_norm only — no division,
-    # unaffected by the cosine try_divide change)
-    "q_token_counts", "q_knn_exact",
-    "q_semantic_dedup", "q_sq_knn", "q_pq_knn",
-    "q_rp_lsh_pairs",
-    # GK envelope corrected to rank space (fuzz-found; TRUE on driver
-    # data before and after, plan + bound semantics changed):
-    "q_approx_quantile_eval",
-    # empty-source fix: read-back now uses the writer's schema
-    # (values unchanged on driver data):
-    "q_partitioned_write",
-    # (q_json_funcs' dirty-payload hardening — try_cast + json_valid on
-    # both sides — is NOT window-listed: the window is at capacity and
-    # clean driver data takes neither new branch; exact-value clean-data
-    # equivalence is proven by tests/test_oracle.py and the dirty paths
-    # by the props fuzz corpus)
-})
-_TOUCHED_BY_ROUND[6] = frozenset({
-    # rank._idiv now IntegralDivide (exact past 2^53; double round-trip
-    # before). Same values on driver data, changed plans — re-verify
-    # every rank.py consumer:
-    "q_equidepth_bins", "q_rfm_segments", "q_interval_sweep",
-    "q_pack_global",
-    # rows-only -> HLL error-bound-verdict oracle (VERDICT r5, next #2);
-    # _driver_rows already re-exposes it as unchecked, listed for the
-    # contract test's slot accounting:
-    "q_approx_distinct",
-    # unicode-fuzz catch: v2 rewrite was upper(text) — Java full case
-    # mapping ('ß'->'SS') vs DuckDB simple mapping ('ß'->'ẞ') diverge;
-    # now a portable prefix+substring on BOTH sides:
-    "q_meta_upsert",
-    # full-registry bench tail (BENCH_FULL_r06) offenders, re-planned:
-    # ML minhash join on 3-word shingles not unigrams (284 s -> 2.7 s),
-    # figure placement on the Arrow scalar path (10.8 s -> 0.6 s),
-    # anchor search fused into one mapInPandas (22.5 s -> 2.4 s):
-    "q_ml_minhash_join", "q_figure_placement", "q_anchor_search",
-    # --bigdoc fuzz catch: per-position substr made the 5-gram winnow
-    # O(len^2) per doc (>9 min on 150 KB docs); now shifted-slice
-    # zip_with windows (15 s) — same values, changed plan:
-    "q_doc_fingerprint",
-    # same O(len^2/step) class in chunk_text's substring-per-chunk;
-    # window extraction now an Arrow kernel (byte-equality pinned in
-    # tests/test_chunking.py) — same values, changed plans:
-    "q_chunks", "q_chunk_pipeline",
-})
-_TOUCHED_BY_ROUND[7] = frozenset({
-    # chunk_text: the size-gated hybrid built early in the round was
-    # REVERTED (project-collapse re-inlined the normalize chain into
-    # every expression-branch substring and the Arrow node ran anyway:
-    # 1.53 s vs the plain kernel's 0.73 s — see chunk_text's docstring);
-    # back to the linear Arrow kernel for all sizes, now with the
-    # NULL-text -> one-NULL-chunk contract (ADVICE r6 #1) — same values
-    # on driver data, changed plans:
-    "q_chunks", "q_chunk_pipeline",
-    # NULL-group-safe reassembly: the three aggregation legs now join
-    # with eqNullSafe (ADVICE r6 #2) — same values, changed plan:
-    "q_approx_distinct",
-    # single-partition-scan repartitions now conditional
-    # (sources.tables.parallelize_narrow_scan; ADVICE r6 #4) — same
-    # values, changed plans:
-    "q_doc_fingerprint", "q_figure_placement", "q_anchor_search",
-    # auto_dedup's shingle persist is now release-tracked (ADVICE r6
-    # #3; storage bookkeeping only — re-verify out of caution):
-    "q_dedup_auto",
-    # rows-only -> bound-verdict oracles (VERDICT r6, next #1; the
-    # q_approx_distinct upgrade pattern). _driver_rows re-exposes both
-    # as unchecked; listed for the contract test's slot accounting:
-    "q_ml_minhash_join", "q_ml_brp_neighbors",
-    # fuzz --nulls NULL-contract wave (VERDICT r6, next #5): plans /
-    # oracles changed on NULL paths only — driver data carries no NULLs
-    # so values are unchanged, but the most-rewritten names re-verify.
-    # Event-time contract (events_us WHERE ts IS NOT NULL + _events_ts):
-    "q_tumbling_window", "q_session_window",
-    # as-of rewritten to struct-carry + NULL-user purchase drop:
-    "q_asof_join",
-    # NULL-user subjects excluded both sides:
-    "q_survival_curve",
-    # arg_min/min_by NULL-arg FILTER legs:
-    "q_minmax_by",
-    # oracle rewrites (NOT IN -> IS NULL disjunct; concat NULL-guard;
-    # phantom NULL-user hash; entry-skip serialization; var clamp):
-    "q_delete_by_key", "q_markdown_header_split", "q_kmv_distinct",
-    "q_map_funcs", "q_moments",
-    # asset contract (NULL payload = no asset, both sides):
-    "q_multimodal_meta", "q_frame_sample", "q_binary_features",
-    "q_resize_assets", "q_audio_energy", "q_frame_dedup",
-    # NULL-text kernel contracts:
-    "q_udtf_word_windows",
-    # embedding validity contract (valid_embedding both sides);
-    # representatives of the 17-query similarity wave:
-    "q_knn_exact", "q_vector_stats", "q_cosine_pairs",
-    # stream-stream joins: NULL-ts reader + 8 state partitions
-    # (profiled ~90% fixed state-store machinery; 6.5 s -> 2.6 s):
-    "q_streaming_interval_join", "q_streaming_outer_join",
-})
-_TOUCHED_BY_ROUND[8] = frozenset({
-    # rows-only -> invariant-verdict oracles (VERDICT r7, next #1):
-    # _driver_rows re-exposes both as unchecked; listed for the contract
-    # test's slot accounting:
-    "q_rect_merge", "q_anchor_search",
-    # q_rect_components body factored into the shared _rect_components_df
-    # helper (identical plan — re-verify out of caution):
-    "q_rect_components",
-    # ADVICE r7 #1: engine sketch side now drops NULL user_ids
-    # symmetrically with the oracle's h CTE (all-NULL groups excluded on
-    # BOTH sides; driver data unchanged, plan changed):
-    "q_kmv_distinct",
-    # ADVICE r7 #3: parallelize_narrow_scan gate widened from ==1 to
-    # < defaultParallelism/2 (plan changes only on few-partition scans;
-    # same values — re-verify the consumers):
-    "q_doc_fingerprint", "q_figure_placement",
-    # VERDICT r7 #7: stream-stream join state partitions now derived
-    # from input size (state_partitions_for) instead of the literal 8 —
-    # resolves to 8 at driver SFs, changed plumbing, re-verify:
-    "q_streaming_interval_join", "q_streaming_outer_join",
-    # sf1 full-registry rehearsal fixes: q_cosine_pairs re-planned from
-    # label self-join + expression cosine to the bit-exact blocked
-    # rank-1-update kernel (operators/pairs.py; 50.9 s -> 4.7 s at sf1,
-    # oracle unchanged); rect family moved to the density-scaled
-    # fixture (_RECT_FIGURES_SQL — byte-identical rows at every driver
-    # SF, only >=sf1 changes):
-    "q_cosine_pairs",
-    # q_rank_auto / rank consumers: rank.py's two persists now tracked
-    # (leak fix; values unchanged):
-    "q_rank_auto",
-    # gate-threshold calibration (VERDICT r7 #3): _ADAPT_N 256 -> 1024
-    # (engine + oracle share the constant; values unchanged at every
-    # driver SF — branch flip stays between sf0.01 and sf0.1):
-    "q_lsh_adaptive",
-    # fuzz chaos x --relational-too wave (the NULL-bearing relational
-    # star had never met the relational-only queries): NULL-ordering
-    # contracts (NULLS FIRST window oracles, sentinel range keys),
-    # eqNullSafe group joins, count(col) vs count(*) rank targets, and
-    # NULL-guarded fingerprints — driver data carries no relational
-    # NULLs so values are unchanged, plans/oracles changed:
-    "q_window_running", "q_window_analytics", "q_window_lag_lead",
-    "q_window_range_frame", "q_approx_quantile_eval", "q_equidepth_bins",
-    "q_rfm_segments", "q_snapshot_diff",
-})
-_TOUCHED_BY_ROUND[9] = frozenset({
-    # VERDICT r8 #1 / ADVICE r8 #1: the degree-ordered triangle-census
-    # rewrite (plans/dedup.py) landed in r8's final snapshot AFTER the
-    # driver window was built — it has never been driver-hashed. Judge
-    # verified oracle-equality at sf0.01 manually; this slot makes the
-    # driver record it.
-    "q_dup_triangles",
-    # state_partitions_for now sums directory trees (ADVICE r8 #4);
-    # resolves to the same 8 at driver SFs (single-file fixtures), but
-    # the sizing plumbing changed — re-verify the stream-stream joins:
-    "q_streaming_interval_join", "q_streaming_outer_join",
-    # VERDICT r8 #2: q_simhash_eval re-planned — n_cand now counted
-    # combinatorially over the (simhash -> count) table (the 41M-at-sf1
-    # banded pair set is never materialized) and n_hit tested on the
-    # truth pairs; sf1 30.3 s -> 15.1 s. Oracle unchanged.
-    "q_simhash_eval",
-    # q_dup_triangles census body factored into _triangle_census
-    # (identical plan; unit-pinned on a hub-heavy graph) — already
-    # listed above for the r8 rewrite.
-    # chaos-keys fuzz (VERDICT r8 #7): DuckDB refuses <<(negative) while
-    # Spark wraps — shl2 is now contract-NULL for negative keys on both
-    # sides. Driver data has non-negative keys (values unchanged); plan
-    # + oracle changed:
-    "q_bitwise_funcs",
-    # r9 sf1-rehearsal scale fixes (plan + oracle changed on each): the
-    # graph-analytic queries moved off the any-seed LSH graph (edge count
-    # quadratic in corpus — 10x docs gave 31x edges) onto the
-    # >= _GRAPH_MIN_SHARED-seeds precision graph, and SemDeDup's k now
-    # scales as max(8, floor(sqrt(n/2))) on both engine and oracle sides
-    # (fixed k=8 put ~n/8 vectors per cluster -> ~n^2/128 in-cluster
-    # cosines at 10x). q_dup_triangles (already slotted above) shares the
-    # graph change.
-    "q_pagerank_dupgraph", "q_semantic_dedup",
-    # minhash_signatures rewritten columnar, then REVERTED on an A/B
-    # measurement (columnar lost: wide-agg codegen cost); net change vs
-    # r8 is docstring-only but both held slots while the code moved:
-    "q_minhash_signatures", "q_minhash_banded_pairs",
-    # auto_dedup's banded branch moved from any-seed candidates (whose
-    # corpus-quadratic background kept the semi-join from pruning — the
-    # 61 s sf1 rehearsal row) to 2-row-band candidates
-    # (banded_candidate_pairs); plan + oracle changed, and the graph
-    # queries' >= 2-seed edge set is now enumerated via C(8,2)
-    # combo buckets (same rows, oracles unchanged):
-    "q_dedup_auto", "q_dedup_auto_dense",
-    # same precision move for the clustering path (transitive chaining
-    # makes any-seed background fuse unrelated clusters): candidates
-    # are now 2-row-band pairs; plans + recursive-CTE oracles changed,
-    # and q_corpus_filter's near_dup verdicts inherit the new clusters:
-    "q_dedup_clusters", "q_keep_best", "q_corpus_filter",
-})
-
-_TOUCHED_BY_ROUND[10] = frozenset({
-    # VERDICT r9 #1: setsim_pairs re-planned — prefix/cand/arrs are now
-    # tracked-persisted (the rank-window subtree ran once per consumer
-    # before), and token DF is a window count over partitionBy(shingle)
-    # instead of groupBy+join. sf1 wall 29.4 s -> 7.0 s min-of-2; oracle
-    # unchanged (brute-force join), hash must still match:
-    "q_setsim_join",
-    # VERDICT r9 #2: q_ml_minhash_join SF-capped at doc_id < 5000 on
-    # both engine and oracle sides (the q_dedup_auto_dense precedent) —
-    # the MLlib parity check now runs at a fixed size and is back under
-    # the shuffle tripwire (removed from EXPECTED_SUPERLINEAR). Plan +
-    # oracle changed (no-op below sf0.1 where doc_id < 5000 already):
-    "q_ml_minhash_join",
-    # VERDICT r9 #3: SemDeDup re-planned for linear pair work — constant
-    # target cluster size (k = max(8, ceil(n/64))) with two-level
-    # coarse->fine designated-centroid assignment (k1 = floor(sqrt(k))
-    # coarse cells), all assignment as map-side max(struct) aggs. Plan +
-    # oracle changed on both sides; sf1 18.1 s -> 7.0 s:
-    "q_semantic_dedup",
-    # VERDICT r9 #8: shared_seed_pairs generalized from hard-coded
-    # min_shared=2 to the C(k, m) combo chain (internal aliases changed;
-    # m=2 output proven identical in tests/test_planner.py) — re-verify
-    # its two direct plan consumers:
-    "q_pagerank_dupgraph", "q_dup_triangles",
-    # chaos-time sweep fix: _sf_key now sanitizes non-identifier chars
-    # in the bucketed-table name (result-neutral on driver paths, but
-    # the helper moved — r9 minhash-revert precedent):
-    "q_bucketed_join",
-    # r10 rehearsal FAIL fix: q_cosine_pairs SF-capped at vec_id < 2000
-    # on both sides — fixed-cardinality labels make same-label pair work
-    # ~n^2/10, intrinsically quadratic (19x wall at 10x data); the exact
-    # brute-force baseline now runs at the sf0.1 corpus size, the
-    # bucketed twins are the scale path. Plan + oracle changed:
-    "q_cosine_pairs",
-    # r10 rehearsal max-ratio fix: q_skyline gained a NULL-safe
-    # two-corner pre-filter (complete by domination transitivity; sf1
-    # anti-join input 200k -> 3,740 rows). Oracle unchanged (brute-force
-    # NOT EXISTS) so the hash check proves prune completeness:
-    "q_skyline",
-    # r10 continuation: CMS sketch now built from the vocabulary-scale
-    # exact-counts table (cell = sum of member-word counts — bit-
-    # identical to hashing every occurrence), killing the 4x-per-
-    # occurrence md5 + corpus-scale DISK_ONLY persist (5.6x wall at 10x
-    # data -> linear; sf0.1 1.89 s -> 0.76 s). Oracle unchanged, so the
-    # hash check proves the algebraic identity:
-    "q_cms_heavy_hitters",
-    # r10 continuation: PQ codeword assignment re-planned from a
-    # row_number window (per-partition sort of corpus x subspace x
-    # codeword) to a min(struct(d, cent_id, cw)) hash-agg — identical
-    # (d ASC, cent_id ASC) argmin semantics, but the 16 codeword
-    # candidates collapse map-side (SemDeDup assignment shape). Oracle
-    # unchanged:
-    "q_pq_knn",
-    # r10 continuation, NEW query: BPE merge learning (Sennrich 2016) —
-    # first 3 merge rules by weighted pair count; after one corpus scan
-    # everything is vocabulary-scale (sf1/sf0.1 wall ratio 1.15x). The
-    # greedy-replace encoding contract is property-pinned in
-    # tests/test_properties.py on both engines:
-    "q_bpe_merges",
-    # r10 continuation, NEW query: the learned merges APPLIED — per-doc
-    # post-merge token counts + compression; the (word -> symbols)
-    # vocab table joins the occurrence stream (sf1/sf0.1 ratio 1.45x):
-    "q_bpe_encode",
-    # r10 continuation, NEW query: contrastive triple mining — positives
-    # from the banded LSH candidates, hard negative = the most
-    # lexically-overlapping NON-candidate (DF-capped co-shingle pairs
-    # anti-joined against candidates; per-anchor argmax as a
-    # min(struct) hash-agg):
-    "q_hard_negatives",
-})
-_TOUCHED_BY_ROUND[11] = frozenset({
-    # VERDICT r10 #1 + ADVICE: the co-shingle pairs block factored into
-    # operators/dedup.co_shingle_pairs (one implementation behind
-    # shingle_pair_stats AND q_hard_negatives' negative pool). The
-    # asked-for anchor-restricted directed join was A/B'd and LOST
-    # (53% of sf1 docs are dup-family anchors; 42.9M directed vs 34.7M
-    # symmetric grouped pairs, 14.8 s vs 13.9 s) — rationale committed
-    # in the q_hard_negatives block comment. Expression trees identical
-    # to r10 for the stats consumers; re-verify out of caution
-    # (r5 ivf-assign precedent):
-    "q_hard_negatives", "q_ngram_jaccard", "q_shingle_containment",
-    "q_minhash_estimate", "q_lsh_tuning_curve",
-    # ADVICE r10 + VERDICT r10 #8: _bpe_learn rounds 1..R-1 now rotate
-    # through eager localCheckpoints (lineage cut + release_ckpt of the
-    # prior round) — plans changed on both queries, oracles shared via
-    # the new _bpe_round_ctes helper (values must be unchanged):
-    "q_bpe_merges", "q_bpe_encode",
-    # r11 NEW operator families (auto-exposed as unchecked; listed for
-    # the slot-accounting contract): greedy k-center coreset selection
-    # (Gonzalez/Sener-Savarese), k-anonymity/l-diversity privacy audit,
-    # Heaps-law vocabulary-growth diagnostics:
-    "q_kcenter_coreset", "q_k_anonymity", "q_heaps_law",
-    # r11 NEW: cross-source duplication matrix over the banded dup graph
-    "q_source_overlap",
-    # r11 NEW: bounded k-core peel of the dup graph (superstep contract)
-    "q_kcore_peel",
-    # r11 NEW: per-source Zipf/power-law MLE (corpus-health diagnostics)
-    "q_zipf_fit",
-})
-_TOUCHED_BY_ROUND[12] = frozenset({
-    # VERDICT r11 #7: q_kcore_peel now reports a `converged` column
-    # (true iff the final round's removal set is empty) mirrored in the
-    # oracle's conv CTE — schema change on both engines:
-    "q_kcore_peel",
-    # r12 NEW (VERDICT r11 #6): unigram-LM tokenizer training (Kudo
-    # 2018 / SentencePiece) — bounded-Viterbi hard EM over the
-    # vocabulary with decimal-exact costs; depth-4 property pin vs a
-    # pure-Python reference in tests/test_properties.py:
-    "q_unigram_lm",
-    # r12 NEW: deterministic hash-Bernoulli sampling audit (map-side
-    # reproducible corpus subsampling), per-doc character entropy
-    # (gibberish detection, integer-exact sums), per-doc top-3 TF-IDF
-    # keyword extraction (integer-exact ranking), and power-iteration
-    # PCA over the embeddings (decimal-exact matrix-vector rounds):
-    "q_hash_sample", "q_char_entropy", "q_tfidf_keywords", "q_pca_power",
-    # r12 NEW: kNN label-disagreement audit (Confident Learning) —
-    # per-class annotation-noise rates over the embedding table,
-    # SF-capped exact baseline (CAPPED_QUERIES-registered):
-    "q_label_noise",
-})
-_TOUCHED_BY_ROUND[13] = frozenset({
-    # VERDICT r12 #3: q_tfidf (worst sf1 scaler, 6.09x) and q_bm25
-    # (the allowlisted broadcast->SMJ flip) rebuilt on a repartition-
-    # by-doc_id + broadcast-df plan shape — postings never shuffle;
-    # values identical, physical plan changed, re-verify both:
-    "q_tfidf", "q_bm25",
-    # r13: self_knn_label_votes rebuilt distributed (corpus hash-split
-    # + per-split top-k union + global re-rank) — the single-group
-    # funnel VERDICT r12 watched is gone; values parity-pinned
-    # identical, physical plan changed, re-verify:
-    "q_label_noise",
-    # r13 (optimization pass, guide §2.3/§2.4): basket pairs generated
-    # map-side from one collect_set shuffle instead of distinct + both
-    # self-join legs — values identical (sf0.001 + sf0.01 oracle-exact),
-    # physical plan changed (3 item-table shuffles -> 1), re-verify:
-    "q_market_basket",
-    # r13 (optimization pass, guide §2.4/§5): per-round piece costs
-    # collected as a bounded literal map (<= 156 rows by construction)
-    # — no broadcast join, no per-round checkpoint, DP state in exact
-    # nano-nat longs instead of DECIMAL(38,9); values identical
-    # (sf0.001 + sf0.01 oracle-exact, 6.19 s -> 3.73 s at sf0.1),
-    # physical plan changed, re-verify:
-    "q_unigram_lm",
-    # r13 (optimization pass, guide §2.5): per-group order statistics
-    # now go through operators.planner.auto_group_quantile — below the
-    # 1M-row gate the original F.percentile aggregate (live at every
-    # driver SF; the unconditional bucketed rewrite LOST its A/B
-    # locally), above it operators.rank.group_quantile_cont's bucketed
-    # two-pass order statistics (live at sf1+, where the per-value
-    # single-task-per-group shuffle must go). Values bit-identical on
-    # both branches (parity-pinned in tests/test_plans.py; sf0.001 +
-    # sf0.01 oracle-exact; bucketed branch hash-checked at sf1; the
-    # gate reads its row count from parquet footer metadata, no count
-    # job), physical plan changed, re-verify:
-    "q_winsorized_stats", "q_mad_outliers",
-})
-_TOUCHED_BY_ROUND[14] = frozenset({
-    # r14 (optimization round 2, guide §2.4): the RP-LSH band union is
-    # duplicate-free by construction (s1 leg excludes s0-matches), so
-    # the cross-band dropDuplicates exchange and the double-scoring of
-    # both-band collisions are gone; pair set identical (sf0.001 +
-    # sf0.01 oracle-exact), physical plan changed (6 -> 4 Exchanges),
-    # re-verify both the pair query and its CC consumer:
-    "q_rp_lsh_pairs", "q_embed_dedup_clusters",
-    # r14 (guide §2.4): shared_seed_pairs enumerates C(k, m) seed
-    # combinations MAP-SIDE from one groupBy(doc) collect_list exchange
-    # (nested array transforms) instead of an (m-1)-fold self-join of
-    # the signature table; combo/edge sets identical (parity in
-    # profile_plan.py census-stages-ab + the m=3 property pin), plans
-    # of both census consumers changed, re-verify (q_kcore_peel uses
-    # banded_candidate_pairs, not shared_seed_pairs — plan unchanged,
-    # though it was oracle-re-checked at sf0.01 anyway):
-    "q_dup_triangles", "q_pagerank_dupgraph",
-})
 _TOUCHED_BY_ROUND[15] = frozenset({
     # r15: one top-k retrieval kernel (operators/knn.py). q_hybrid_rrf
     # now runs the RRF operator ETLPipeline.hybrid_search shares; its

@@ -3,9 +3,8 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Results are materialized with the noop sink (all columns computed, no
-driver collect) so timings reflect the full plan, not count()'s pruned
-variant.
+Each query is warmed at sf0.001, then timed twice through the noop sink
+with its persists drained after every run (scripts/_harness.py).
 """
 
 from __future__ import annotations
@@ -13,14 +12,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 _ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _ROOT)
 sys.path.insert(0, os.path.join(_ROOT, "scripts"))
 
-from _loadgate import wait_fault_probed, wait_quiet  # noqa: E402
-from data_etl_spark.plans import REGISTRY  # noqa: E402
+from _harness import host_gate, host_gate_end, sf_value, sweep, warm_up  # noqa: E402
 from data_etl_spark.session import build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -93,73 +90,30 @@ HEADLINE = [
 ]
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def main() -> None:
-    # Host-contention gate (VERDICT r11 #3): the headline artifact was
-    # the one committed bench class without loadavg_go/load_waiver, and
-    # r11's official run recorded a phantom 1.04x regression at
-    # loadavg 11. Same contract as scripts/bench_full.py: wait
-    # (bounded) for a quiet window BEFORE the warmup saturates the
-    # cores; if it never comes, stamp load_waiver so loaded runs are
-    # machine-distinguishable.
-    loadavg_go, load_waiver = wait_quiet()
-    # Page-fault gate (VERDICT r13 #1): loadavg only sees *in-guest*
-    # contention, but this host's first-touch fault service rate swings
-    # 5-10x with host co-tenancy (BENCH_r13 recorded 111 s at loadavg 6.4
-    # where the same tree measured 63.8 s in a probed-good window). Wait
-    # (bounded) for a healthy fault-service window the same way; if it
-    # never comes, stamp stall_waiver so degraded runs are
-    # machine-distinguishable. Additions only: same timed region, same
-    # query set, same JSON contract plus two fields.
-    fault_probe_go, stall_waiver = wait_fault_probed()
+    # Host gate: wait (bounded) for a quiet loadavg and a healthy
+    # page-fault window before the warm-up saturates the cores; a run
+    # that never got one is stamped load_waiver / stall_waiver.
+    gate = host_gate()
     spark = build_session("data-etl-spark-bench")
-    # Warm the JVM (JIT, codegen cache, shuffle machinery) with one pass of
-    # the headline set at the smallest SF, so timed runs measure steady-state
-    # per-query cost — the number that matters on a long-lived cluster —
-    # rather than one-time process warmup folded into whichever query runs
-    # first.
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        for name in HEADLINE:
-            try:
-                materialize(REGISTRY[name].fn(spark, warm_dir))
-            except Exception as exc:  # surface broken queries before timing
-                print(f"warmup FAILED {name}: {exc!r}", file=sys.stderr)
-    else:
-        spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
+    warm_up(spark, HEADLINE)
 
     # Two timed runs per query, report the min: single-run numbers on a
     # shared box carry ±30% scheduler/page-cache noise (measured); the
     # min is the steady-state cost a long-lived cluster would see.
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for _ in range(2):
-        for name in HEADLINE:
-            fn = REGISTRY[name].fn
-            t0 = time.perf_counter()
-            # One broken query must not zero out the whole round's perf
-            # signal: record the failure and keep timing the rest.
-            try:
-                materialize(fn(spark, SF_DIR))
-            except Exception as exc:
-                errors[name] = repr(exc)[:300]
-                print(f"bench FAILED {name}: {exc!r}", file=sys.stderr)
-                continue
-            dt = round(time.perf_counter() - t0, 3)
-            # a pass-2 success supersedes a pass-1 failure: don't report
-            # both a timing and a stale error for the same query
-            errors.pop(name, None)
-            if name not in timings or dt < timings[name]:
-                timings[name] = dt
+    for name, sec, _, err in sweep(spark, HEADLINE, SF_DIR, passes=2):
+        # One broken query must not zero out the whole round's perf
+        # signal: record the failure and keep timing the rest.
+        if err:
+            errors[name] = err
+            continue
+        # a pass-2 success supersedes a pass-1 failure: don't report
+        # both a timing and a stale error for the same query
+        errors.pop(name, None)
+        timings[name] = min(sec, timings.get(name, sec))
 
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
     out = {
         "metric": "headline_queries_total_wall",
         "value": round(sum(timings.values()), 3),
@@ -168,20 +122,13 @@ def main() -> None:
         # <= 2 used a single timed run — compare accordingly)
         "timing": "min_of_2",
         "queries": timings,
-        "sf": sf_val,
-        # shared-host contention context (see scripts/bench_full.py):
-        # loadavg_go is the 1-min load when the gate released the run;
-        # load_waiver=true means the box never quieted within the
-        # bounded wait and the numbers carry ambient contention
-        "loadavg_go": round(loadavg_go, 2),
-        "load_waiver": load_waiver,
-        "loadavg_end": list(os.getloadavg()),
-        # first-touch page-fault service rate (GB/s) when the fault gate
-        # released the run; stall_waiver=true means no healthy window
-        # appeared within the bounded wait and wall numbers are
-        # stall-suspect (see scripts/_loadgate.py::fault_probe)
-        "fault_probe_go": round(fault_probe_go, 2),
-        "stall_waiver": stall_waiver,
+        "sf": sf_value(SF_DIR),
+        # shared-host context (scripts/_harness.py::host_gate): the
+        # loadavg and first-touch page-fault rate (GB/s) when the gate
+        # released the run and at its end; a waiver means no healthy
+        # window came within the bounded wait
+        **gate,
+        **host_gate_end(),
     }
     if errors:
         out["errors"] = errors

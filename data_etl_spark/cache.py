@@ -9,9 +9,11 @@ cached dataset for the session lifetime, which matters for long-lived
 JVMs that run the whole registry back-to-back (scripts/bench_full.py:
 ~200 queries in one session).
 
-``tracked_persist`` records such handles; harnesses call
-``release_tracked`` between queries (bench_full does; the driver runs
-<=50 queries and exits, so its leak window is bounded by design).
+``tracked_persist`` records such handles and ``release_tracked`` drops
+them. The drain point for timing runs is ``scripts/_harness.py``: every
+timed rep and every warm-up run ends with ``release_tracked()``, so no
+run reads blocks an earlier one cached. The driver runs <=50 queries
+and exits, so its leak window is bounded by design.
 """
 
 from __future__ import annotations

@@ -942,6 +942,44 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _top5_sql(name: str, c_emb: str) -> str:
+    """CTE ``name``: each q row's top-5 c rows by cosine(q.q_emb, ``c_emb``),
+    ties to the ascending c_vec_id (the oracle of knn.top_k)."""
+    return f"""{name} AS (
+    SELECT q_vec_id, c_vec_id FROM (
+        SELECT q.q_vec_id, c.c_vec_id,
+               row_number() OVER (PARTITION BY q.q_vec_id
+                                  ORDER BY {V.cosine_sql('q.q_emb', c_emb)} DESC, c.c_vec_id) AS rank
+        FROM q CROSS JOIN c
+    ) WHERE rank <= 5
+),
+"""
+
+
+def _recall_sql(approx_emb: str | None, base: str) -> str:
+    """The recall@5 tail of an oracle over CTEs ``q`` and ``c``, the SQL
+    mirror of knn.recall_at_k: the ``exact`` top-5 by c.c_emb; the
+    approximate top-5, which is an ``approx`` CTE scoring ``approx_emb``,
+    or with None the caller's ``ivf`` CTE; their per-query overlap; and
+    one row per query id of ``base``, 0 when nothing overlaps."""
+    approx, a = ("ivf", "ivf") if approx_emb is None else ("approx a", "a")
+    return (
+        _top5_sql("exact", "c.c_emb")
+        + ("" if approx_emb is None else _top5_sql("approx", approx_emb))
+        + f"""matches AS (
+    SELECT e.q_vec_id, count(*) AS n_overlap
+    FROM exact e JOIN {approx} ON e.q_vec_id = {a}.q_vec_id AND e.c_vec_id = {a}.c_vec_id
+    GROUP BY e.q_vec_id
+)
+SELECT p.q_vec_id,
+       coalesce(m.n_overlap, 0) AS n_overlap,
+       coalesce(m.n_overlap, 0) / 5.0 AS recall
+FROM ({base}) p
+LEFT JOIN matches m ON p.q_vec_id = m.q_vec_id
+"""
+    )
+
+
 # ---------------------------------------------------------------------------
 # q_ivf_recall — ANN quality evaluation: recall@5 of the IVF probe
 # against the exact top-5 over the same probe/corpus split. The
@@ -956,25 +994,7 @@ _RECALL_ORACLE = f"""
 WITH ivf AS (SELECT q_vec_id, c_vec_id FROM ({_IVF_ORACLE})),
 q AS (SELECT vec_id AS q_vec_id, {_EMB_D} AS q_emb FROM embeddings WHERE {_EMB_OK} AND vec_id >= {_IVF_CENT_MAX} AND vec_id < {_IVF_PROBE_MAX}),
 c AS (SELECT vec_id AS c_vec_id, {_EMB_D} AS c_emb FROM embeddings WHERE {_EMB_OK} AND vec_id >= {_IVF_PROBE_MAX}),
-exact AS (
-    SELECT q_vec_id, c_vec_id FROM (
-        SELECT q.q_vec_id, c.c_vec_id,
-               row_number() OVER (PARTITION BY q.q_vec_id
-                                  ORDER BY {V.cosine_sql('q.q_emb', 'c.c_emb')} DESC, c.c_vec_id) AS rank
-        FROM q CROSS JOIN c
-    ) WHERE rank <= 5
-),
-matches AS (
-    SELECT e.q_vec_id, count(*) AS n_overlap
-    FROM exact e JOIN ivf ON e.q_vec_id = ivf.q_vec_id AND e.c_vec_id = ivf.c_vec_id
-    GROUP BY e.q_vec_id
-)
-SELECT p.q_vec_id,
-       coalesce(m.n_overlap, 0) AS n_overlap,
-       coalesce(m.n_overlap, 0) / 5.0 AS recall
-FROM (SELECT q_vec_id FROM q) p
-LEFT JOIN matches m ON p.q_vec_id = m.q_vec_id
-"""
+{_recall_sql(None, "SELECT q_vec_id FROM q")}"""
 # base rows come from the PROBE set, mirroring the engine's
 # ``base = probe.select(...)`` — deriving them from ``exact`` instead
 # silently drops every probe when the corpus slice is empty (engine
@@ -1023,33 +1043,7 @@ c AS (
            list_transform(emb, x -> floor(x / scale + 0.5) * scale) AS c_deq
     FROM cs
 ),
-exact AS (
-    SELECT q_vec_id, c_vec_id FROM (
-        SELECT q.q_vec_id, c.c_vec_id,
-               row_number() OVER (PARTITION BY q.q_vec_id
-                                  ORDER BY {V.cosine_sql('q.q_emb', 'c.c_emb')} DESC, c.c_vec_id) AS rank
-        FROM q CROSS JOIN c
-    ) WHERE rank <= 5
-),
-approx AS (
-    SELECT q_vec_id, c_vec_id FROM (
-        SELECT q.q_vec_id, c.c_vec_id,
-               row_number() OVER (PARTITION BY q.q_vec_id
-                                  ORDER BY {V.cosine_sql('q.q_emb', 'c.c_deq')} DESC, c.c_vec_id) AS rank
-        FROM q CROSS JOIN c
-    ) WHERE rank <= 5
-),
-matches AS (
-    SELECT e.q_vec_id, count(*) AS n_overlap
-    FROM exact e JOIN approx a ON e.q_vec_id = a.q_vec_id AND e.c_vec_id = a.c_vec_id
-    GROUP BY e.q_vec_id
-)
-SELECT p.q_vec_id,
-       coalesce(m.n_overlap, 0) AS n_overlap,
-       coalesce(m.n_overlap, 0) / 5.0 AS recall
-FROM (SELECT DISTINCT q_vec_id FROM q) p
-LEFT JOIN matches m ON p.q_vec_id = m.q_vec_id
-"""
+{_recall_sql("c.c_deq", "SELECT DISTINCT q_vec_id FROM q")}"""
 
 
 @register("q_sq_knn", oracle=_SQ_ORACLE, tags=("phase3", "similarity", "quantization"))
@@ -1131,33 +1125,7 @@ c AS (
 ),
 q AS (SELECT vec_id AS q_vec_id, emb AS q_emb FROM base
       WHERE vec_id >= {_PQ_K} AND vec_id < {_PQ_Q_MAX}),
-exact AS (
-    SELECT q_vec_id, c_vec_id FROM (
-        SELECT q.q_vec_id, c.c_vec_id,
-               row_number() OVER (PARTITION BY q.q_vec_id
-                                  ORDER BY {V.cosine_sql('q.q_emb', 'c.c_emb')} DESC, c.c_vec_id) AS rank
-        FROM q CROSS JOIN c
-    ) WHERE rank <= 5
-),
-approx AS (
-    SELECT q_vec_id, c_vec_id FROM (
-        SELECT q.q_vec_id, c.c_vec_id,
-               row_number() OVER (PARTITION BY q.q_vec_id
-                                  ORDER BY {V.cosine_sql('q.q_emb', 'c.c_deq')} DESC, c.c_vec_id) AS rank
-        FROM q CROSS JOIN c
-    ) WHERE rank <= 5
-),
-matches AS (
-    SELECT e.q_vec_id, count(*) AS n_overlap
-    FROM exact e JOIN approx a ON e.q_vec_id = a.q_vec_id AND e.c_vec_id = a.c_vec_id
-    GROUP BY e.q_vec_id
-)
-SELECT p.q_vec_id,
-       coalesce(m.n_overlap, 0) AS n_overlap,
-       coalesce(m.n_overlap, 0) / 5.0 AS recall
-FROM (SELECT DISTINCT q_vec_id FROM q) p
-LEFT JOIN matches m ON p.q_vec_id = m.q_vec_id
-"""
+{_recall_sql("c.c_deq", "SELECT DISTINCT q_vec_id FROM q")}"""
 
 
 @register("q_pq_knn", oracle=_PQ_ORACLE, tags=("phase3", "similarity", "quantization"))

@@ -19,103 +19,54 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, ".")
 
-from data_etl_spark.cache import release_tracked  # noqa: E402
 from data_etl_spark.plans import REGISTRY  # noqa: E402
 from data_etl_spark.session import build_session  # noqa: E402
-from _loadgate import wait_fault_probed, wait_quiet  # noqa: E402
+from _harness import (  # noqa: E402
+    host_gate,
+    host_gate_end,
+    latest_bench_full,
+    retime_movers,
+    sf_value,
+    sweep,
+    warm_up,
+)
 from _stage_metrics import StageMetricsTracker  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-WARM_DIR = "/root/testdata/sf0.001"
 #: re-time (min-of-2) any query > this ratio vs the prior BENCH_FULL
 RETIME_AT = 2.0
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _prior_full(repo: str, round_no: str) -> dict:
-    """Per-query timings from the most recent BENCH_FULL before this round."""
-    files = sorted(
-        f
-        for f in os.listdir(repo)
-        if f.startswith("BENCH_FULL_r")
-        and f.endswith(".json")
-        and f != f"BENCH_FULL_r{round_no}.json"
-    )
-    if not files:
-        return {}
-    with open(os.path.join(repo, files[-1])) as f:
-        return json.load(f).get("queries", {})
-
-
 def main() -> None:
     round_no = sys.argv[1] if len(sys.argv) > 1 else "06"
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    prior = _prior_full(repo, round_no)
-    loadavg_go, load_waiver = wait_quiet()
-    # page-fault gate (VERDICT r13 #1, scripts/_loadgate.py::fault_probe)
-    fault_probe_go, stall_waiver = wait_fault_probed()
+    _, prior_artifact = latest_bench_full(exclude=f"BENCH_FULL_r{round_no}.json")
+    prior = prior_artifact.get("queries", {})
+    gate = host_gate()
     spark = build_session("data-etl-spark-bench-full")
     names = sorted(REGISTRY)
-
-    if os.path.isdir(WARM_DIR):
-        for name in names:
-            try:
-                materialize(REGISTRY[name].fn(spark, WARM_DIR))
-            except Exception as exc:
-                print(f"warmup FAILED {name}: {exc!r}", file=sys.stderr)
-            release_tracked()
+    warm_up(spark, names)
 
     tracker = StageMetricsTracker(spark)
     timings: dict[str, float] = {}
     metrics: dict[str, dict] = {}
     errors: dict[str, str] = {}
-    for name in names:
-        tracker.snapshot()  # reset watermark past any inter-query work
-        t0 = time.perf_counter()
-        try:
-            materialize(REGISTRY[name].fn(spark, SF_DIR))
-        except Exception as exc:
-            errors[name] = repr(exc)[:300]
-            print(f"bench FAILED {name}: {exc!r}", file=sys.stderr)
+    for name, sec, m, err in sweep(spark, names, SF_DIR, tracker=tracker):
+        if err:
+            errors[name] = err
             continue
-        timings[name] = round(time.perf_counter() - t0, 3)
-        metrics[name] = tracker.snapshot()
-        print(f"{timings[name]:8.3f}s  {name}", file=sys.stderr)
-        # plan-internal persists (auto_dedup's shingle set) must not
-        # accumulate across a ~200-query JVM
-        release_tracked()
+        timings[name] = sec
+        metrics[name] = m
+        print(f"{sec:8.3f}s  {name}", file=sys.stderr)
 
-    # movers vs the prior artifact: re-time min-of-2 before recording —
-    # a single pass on a shared box conflates stragglers with plans
-    retimed = []
-    for name, t in sorted(timings.items()):
-        b = prior.get(name)
-        if not (b and t / b > RETIME_AT):
-            continue
-        t0 = time.perf_counter()
-        try:
-            materialize(REGISTRY[name].fn(spark, SF_DIR))
-        except Exception:
-            continue
-        t2 = round(time.perf_counter() - t0, 3)
-        release_tracked()
-        timings[name] = min(t, t2)
-        retimed.append(name)
-        print(f"re-timed {name}: {t:.2f} -> min {timings[name]:.2f}", file=sys.stderr)
+    # movers vs the prior artifact: re-time min-of-2 before recording
+    retimed = retime_movers(
+        spark, timings, SF_DIR, lambda n, t: bool(prior.get(n)) and t / prior[n] > RETIME_AT
+    )
 
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
     out = {
         "metric": "full_registry_wall",
         "value": round(sum(timings.values()), 3),
@@ -125,16 +76,12 @@ def main() -> None:
         "n_queries": len(timings),
         "queries": timings,
         "stage_metrics": metrics,
-        "sf": sf_val,
-        # host contention gate (VERDICT r10 #4, scripts/_loadgate.py):
-        # the run started at loadavg_go; load_waiver=true means the box
-        # never quieted within the bounded wait — external load inflates
-        # wall times 1.1-2x (stragglers on tiny queries can hit 10x)
-        "loadavg_go": round(loadavg_go, 2),
-        "load_waiver": load_waiver,
-        "fault_probe_go": round(fault_probe_go, 2),
-        "stall_waiver": stall_waiver,
-        "loadavg_end": list(os.getloadavg()),
+        "sf": sf_value(SF_DIR),
+        # host health at go and at the end (scripts/_harness.py::host_gate):
+        # external load inflates wall times 1.1-2x (stragglers on tiny
+        # queries can hit 10x)
+        **gate,
+        **host_gate_end(),
     }
     if errors:
         out["errors"] = errors

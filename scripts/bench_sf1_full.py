@@ -19,7 +19,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, ".")
@@ -27,12 +26,19 @@ sys.path.insert(0, ".")
 from data_etl_spark.cache import release_tracked  # noqa: E402
 from data_etl_spark.plans import REGISTRY  # noqa: E402
 from data_etl_spark.session import build_session  # noqa: E402
-from _loadgate import wait_fault_probed, wait_quiet  # noqa: E402
+from _harness import (  # noqa: E402
+    host_gate,
+    host_gate_end,
+    latest_bench_full,
+    retime_movers,
+    sweep,
+    timed,
+    warm_up,
+)
 from _stage_metrics import StageMetricsTracker  # noqa: E402
 
 SF1_DIR = os.environ.get("SF1_DIR", "/tmp/sf1")
 SF01_DIR = os.environ.get("SF_SRC_DIR", "/root/testdata/sf0.1")
-WARM_DIR = "/root/testdata/sf0.001"
 GATE = 12.0
 RETIME_AT = 9.0
 #: absolute-wall re-time trigger (see the mover loop): heavy entries
@@ -152,61 +158,31 @@ def cause_a_pair_audit(spark) -> dict:
     return audit
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def timed(spark, name: str, tracker=None) -> tuple[float, dict | None]:
-    if tracker is not None:
-        tracker.snapshot()
-    t0 = time.perf_counter()
-    materialize(REGISTRY[name].fn(spark, SF1_DIR))
-    dt = time.perf_counter() - t0
-    m = tracker.snapshot() if tracker is not None else None
-    release_tracked()
-    return dt, m
-
-
 def main() -> None:
     round_no = sys.argv[1] if len(sys.argv) > 1 else "08"
     repo = os.path.join(os.path.dirname(__file__), "..")
 
     # sf0.1 per-query baseline: the most recent BENCH_FULL artifact
-    full_files = sorted(
-        f for f in os.listdir(repo) if f.startswith("BENCH_FULL_r") and f.endswith(".json")
-    )
-    with open(os.path.join(repo, full_files[-1])) as f:
-        base = json.load(f)
+    base_file, base = latest_bench_full()
     base_q = base.get("queries") or base.get("queries_sec") or {}
 
-    loadavg_go, load_waiver = wait_quiet()
-    # page-fault gate (VERDICT r13 #1, scripts/_loadgate.py::fault_probe)
-    fault_probe_go, stall_waiver = wait_fault_probed()
+    gate = host_gate()
     spark = build_session("data-etl-spark-bench-sf1-full")
     names = sorted(REGISTRY)
-
-    for name in names:  # JVM/codegen warmup
-        try:
-            materialize(REGISTRY[name].fn(spark, WARM_DIR))
-        except Exception as exc:
-            print(f"warmup FAILED {name}: {exc!r}", file=sys.stderr)
-        release_tracked()
+    warm_up(spark, names)
     print("warmup done", flush=True)
 
     tracker = StageMetricsTracker(spark)
     timings: dict[str, float] = {}
     metrics: dict[str, dict] = {}
     errors: dict[str, str] = {}
-    for i, name in enumerate(names):
-        try:
-            t, m = timed(spark, name, tracker)
-        except Exception as exc:
-            errors[name] = repr(exc)[:300]
-            print(f"bench FAILED {name}: {exc!r}", file=sys.stderr, flush=True)
+    for i, (name, sec, m, err) in enumerate(sweep(spark, names, SF1_DIR, tracker=tracker)):
+        if err:
+            errors[name] = err
             continue
-        timings[name] = round(t, 3)
+        timings[name] = sec
         metrics[name] = m
-        print(f"[{i + 1}/{len(names)}] {name} {timings[name]:.2f}s", flush=True)
+        print(f"[{i + 1}/{len(names)}] {name} {sec:.2f}s", flush=True)
 
     # movers: re-time min-of-2 before judging the gate. Two triggers:
     # ratio > RETIME_AT (the gate pre-margin), and absolute wall >
@@ -215,14 +191,12 @@ def main() -> None:
     # the ratio gate (r10: q_corpus_filter 27s single-run vs 8.7s
     # min-of-3), so the artifact's heaviest entries are the ones that
     # most need a second sample.
-    retimed = []
-    for name, t in sorted(timings.items()):
-        b = base_q.get(name)
-        if (b and t / b > RETIME_AT) or t > RETIME_WALL_SEC:
-            t2, _ = timed(spark, name)
-            timings[name] = min(t, round(t2, 3))
-            retimed.append(name)
-            print(f"re-timed {name}: {t:.2f} -> min {timings[name]:.2f}", flush=True)
+    retimed = retime_movers(
+        spark,
+        timings,
+        SF1_DIR,
+        lambda n, t: bool(base_q.get(n) and t / base_q[n] > RETIME_AT) or t > RETIME_WALL_SEC,
+    )
 
     ratios = {
         n: round(timings[n] / base_q[n], 2)
@@ -252,7 +226,7 @@ def main() -> None:
     # reproduces exactly.
     for n in sorted(superlinear):
         try:
-            _, m2 = timed(spark, n, tracker)
+            [(_, m2)] = timed(lambda: REGISTRY[n].fn(spark, SF1_DIR), 1, tracker)
         except Exception:
             continue
         s2 = (m2 or {}).get("shuffle_write_bytes", 0)
@@ -309,7 +283,7 @@ def main() -> None:
         ),
         "gate": "per-query wall <= ~12x sf0.1 (linear + shuffle constant)",
         "result": result,
-        "baseline_file": full_files[-1],
+        "baseline_file": base_file,
         "total_sec_sf1": round(sum(timings.values()), 3),
         "total_sec_sf01_base": round(
             sum(v for n, v in base_q.items() if n in timings), 3
@@ -333,14 +307,9 @@ def main() -> None:
         "shuffle_ratio_vs_sf01": dict(
             sorted(shuffle_ratios.items(), key=lambda kv: -kv[1])
         ),
-        # host contention gate (VERDICT r10 #4, scripts/_loadgate.py):
-        # the timed pass started at loadavg_go; load_waiver=true means
-        # the box never quieted within the bounded wait
-        "loadavg_go": round(loadavg_go, 2),
-        "load_waiver": load_waiver,
-        "fault_probe_go": round(fault_probe_go, 2),
-        "stall_waiver": stall_waiver,
-        "loadavg_end": list(os.getloadavg()),
+        # host health at go and at the end (scripts/_harness.py::host_gate)
+        **gate,
+        **host_gate_end(),
     }
     path = os.path.join(repo, f"BENCH_SF1_FULL_r{round_no}.json")
     with open(path, "w") as f:

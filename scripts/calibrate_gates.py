@@ -24,7 +24,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, ".")
@@ -32,21 +31,11 @@ sys.path.insert(0, ".")
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from data_etl_spark.cache import release_tracked
+from _harness import best_of
 from data_etl_spark.session import build_session
 from data_etl_spark.sources import load_table
 
 SF1 = os.environ.get("SF1_DIR", "/tmp/sf1")
-
-
-def timed(fn) -> float:
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        fn().write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-        release_tracked()
-    return round(best, 3)
 
 
 def main() -> None:
@@ -64,12 +53,12 @@ def main() -> None:
     for n in (50_000, 100_000, 200_000, 400_000, 800_000, 1_600_000):
         sub = li.limit(n)
         order = [F.asc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber")]
-        t_win = timed(
+        t_win = best_of(
             lambda: sub.withColumn(
                 "rank", F.row_number().over(W.orderBy(*order))
             )
         )
-        t_bkt = timed(
+        t_bkt = best_of(
             lambda: exact_global_rank(
                 sub, order, F.col("l_extendedprice"), rank_name="rank"
             )
@@ -95,8 +84,8 @@ def main() -> None:
     knn_rows = {}
     for n in (512, 1024, 2048, 4096, 8192, 16384):
         corpus = emb.limit(n)
-        t_exact = timed(lambda: exact_knn(F.broadcast(probes), corpus, k=5))
-        t_ivf = timed(
+        t_exact = best_of(lambda: exact_knn(F.broadcast(probes), corpus, k=5))
+        t_ivf = best_of(
             lambda: auto_knn(probes, corpus, k=5, threshold=0)  # force IVF
         )
         knn_rows[n] = {"exact": t_exact, "ivf": t_ivf}
@@ -110,8 +99,8 @@ def main() -> None:
     dd_rows = {}
     for n in (512, 1024, 2048, 4096, 8192):
         sub = docs.limit(n)
-        t_exact = timed(lambda: auto_dedup(sub, threshold=10**9))  # force exact
-        t_band = timed(lambda: auto_dedup(sub, threshold=0))  # force banded
+        t_exact = best_of(lambda: auto_dedup(sub, threshold=10**9))  # force exact
+        t_band = best_of(lambda: auto_dedup(sub, threshold=0))  # force banded
         dd_rows[n] = {"exact": t_exact, "banded": t_band}
         print(f"dedup n={n}: exact {t_exact}s banded {t_band}s", flush=True)
     out["auto_dedup"] = dd_rows
@@ -152,8 +141,8 @@ def main() -> None:
                 .filter(F.col("c") >= 0.9)
             )
 
-        t8 = timed(lambda: banded(255))
-        t16 = timed(lambda: banded(0))
+        t8 = best_of(lambda: banded(255))
+        t16 = best_of(lambda: banded(0))
         lsh_rows[n] = {"band8": t8, "band16": t16}
         print(f"lsh n={n}: 8-bit {t8}s 16-bit {t16}s", flush=True)
     out["lsh_band"] = lsh_rows
@@ -174,8 +163,8 @@ def main() -> None:
         agg = lambda j: j.groupBy("event_type").agg(
             F.count("*").alias("n"), F.sum("c").alias("s")
         )
-        t_plain = timed(lambda: agg(fact.join(dim, ["k"])))
-        t_salt = timed(
+        t_plain = best_of(lambda: agg(fact.join(dim, ["k"])))
+        t_salt = best_of(
             lambda: agg(salted_join(fact, dim, keys=["k"], salt_src="event_id"))
         )
         # the measured ratio this hot share produces (gate input)

@@ -4,9 +4,10 @@
 at JVM start), so the r13 in-process alternation instrument cannot
 measure it; the only valid design on this host is PAIRED COLD-JVM legs
 behind the page-fault gate (VERDICT r13 next #4). This script runs ONE
-leg: gate on the fault probe, build a session with the given codec, warm
-at sf0.001, then time the 51 headline queries min-of-2 with per-query
-shuffle-byte accounting, and append one JSON line to the output file.
+leg: gate on the fault probe, start the session with the given codec
+(through PYSPARK_SUBMIT_ARGS), warm at sf0.001, then time the 51
+headline queries min-of-2 with per-query shuffle-byte accounting, and
+append one JSON line to the output file.
 A wrapper (or the operator) alternates codecs across legs so slow host
 drift hits both codecs symmetrically:
 
@@ -25,49 +26,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from _loadgate import fault_probe, wait_fault_probed, wait_quiet  # noqa: E402
+from _harness import host_gate, host_gate_end, sweep, warm_up  # noqa: E402
 from _stage_metrics import StageMetricsTracker  # noqa: E402
 
-from data_etl_spark.cache import release_tracked  # noqa: E402
-from data_etl_spark.plans import REGISTRY  # noqa: E402
-
-WARM_DIR = "/root/testdata/sf0.001"
-
-
-def build_codec_session(codec: str):
-    """bench session + the codec under test (mirrors
-    data_etl_spark.session.build_session, which cannot take core confs
-    after the JVM exists)."""
-    from pyspark.sql import SparkSession
-
-    from data_etl_spark.session import DEFAULT_SHUFFLE_PARTITIONS
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"codec-ab-{codec}")
-        .config("spark.io.compression.codec", codec)
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.openCostInBytes", str(512 * 1024))
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        .getOrCreate()
-    )
+from data_etl_spark.session import build_session  # noqa: E402
 
 
 def main() -> None:
@@ -77,39 +43,21 @@ def main() -> None:
 
     from bench import HEADLINE  # noqa: E402  (same 51-query set as the bench)
 
-    loadavg_go, load_waiver = wait_quiet()
-    probe_go, stall_waiver = wait_fault_probed()
-    spark = build_codec_session(codec)
-    spark.sparkContext.setLogLevel("WARN")
+    gate = host_gate()
+    # a core conf: it must reach the JVM at launch, before build_session()
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"--conf spark.io.compression.codec={codec} pyspark-shell"
+    spark = build_session(f"codec-ab-{codec}")
     assert spark.conf.get("spark.io.compression.codec") == codec
-
-    for name in HEADLINE:  # JVM/codegen warmup
-        try:
-            REGISTRY[name].fn(spark, WARM_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as exc:
-            print(f"warmup FAILED {name}: {exc!r}", file=sys.stderr)
-        release_tracked()
+    warm_up(spark, HEADLINE)
 
     tracker = StageMetricsTracker(spark)
     timings: dict[str, float] = {}
     shuffle: dict[str, int] = {}
-    for _ in range(2):
-        for name in HEADLINE:
-            tracker.snapshot()
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = round(time.perf_counter() - t0, 3)
-            m = tracker.snapshot()
-            release_tracked()
-            if name not in timings or dt < timings[name]:
-                timings[name] = dt
-            shuffle[name] = max(
-                shuffle.get(name, 0), int(m.get("shuffle_write_bytes", 0))
-            )
+    for name, sec, m, err in sweep(spark, HEADLINE, sf_dir, passes=2, tracker=tracker):
+        if err:
+            continue
+        timings[name] = min(sec, timings.get(name, sec))
+        shuffle[name] = max(shuffle.get(name, 0), int(m.get("shuffle_write_bytes", 0)))
 
     row = {
         "codec": codec,
@@ -117,11 +65,8 @@ def main() -> None:
         "total": round(sum(timings.values()), 3),
         "queries": timings,
         "shuffle_write_bytes": shuffle,
-        "loadavg_go": round(loadavg_go, 2),
-        "load_waiver": load_waiver,
-        "fault_probe_go": round(probe_go, 2),
-        "stall_waiver": stall_waiver,
-        "fault_probe_end": round(fault_probe(), 2),
+        **gate,
+        **host_gate_end(),
     }
     with open(out_path, "a") as fh:
         fh.write(json.dumps(row) + "\n")

@@ -25,18 +25,14 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from _loadgate import fault_probe, wait_fault_probed, wait_quiet  # noqa: E402
+from _harness import best_of, host_gate, host_gate_end, warm_up  # noqa: E402
 
-from data_etl_spark.cache import release_tracked  # noqa: E402
 from data_etl_spark.plans import REGISTRY  # noqa: E402
 from data_etl_spark.session import build_session, prep  # noqa: E402
-
-WARM_DIR = "/root/testdata/sf0.001"
 
 
 def build_arm(spark, name: str, key: str, value: str, sf: str):
@@ -69,30 +65,13 @@ def main() -> None:
 
     from bench import HEADLINE  # noqa: E402
 
-    loadavg_go, load_waiver = wait_quiet()
-    probe_go, stall_waiver = wait_fault_probed()
+    gate = host_gate()
     spark = build_session("conf-ab")
     base = spark.conf.get(args.key, None)
-
-    for name in HEADLINE:  # JVM warmup
-        try:
-            REGISTRY[name].fn(spark, WARM_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as exc:
-            print(f"warmup FAILED {name}: {exc!r}", file=sys.stderr)
-        release_tracked()
+    warm_up(spark, HEADLINE)
 
     def timed(name: str, value: str) -> float:
-        best = float("inf")
-        for _ in range(args.n):
-            t0 = time.perf_counter()
-            build_arm(spark, name, args.key, value, args.sf).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-            release_tracked()
-        return round(best, 3)
+        return best_of(lambda: build_arm(spark, name, args.key, value, args.sf), args.n)
 
     rows: dict[str, dict] = {}
     for name in HEADLINE:
@@ -118,11 +97,8 @@ def main() -> None:
         "total_a": round(sum(r["a"] for r in rows.values() if "a" in r), 2),
         "total_b": round(sum(r["b"] for r in rows.values() if "b" in r), 2),
         "queries": rows,
-        "loadavg_go": round(loadavg_go, 2),
-        "load_waiver": load_waiver,
-        "fault_probe_go": round(probe_go, 2),
-        "stall_waiver": stall_waiver,
-        "fault_probe_end": round(fault_probe(), 2),
+        **gate,
+        **host_gate_end(),
     }
     with open(args.out, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)

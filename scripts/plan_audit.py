@@ -21,6 +21,7 @@ import sys
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, ".")
 
+from data_etl_spark.cache import release_tracked  # noqa: E402
 from data_etl_spark.plans import REGISTRY  # noqa: E402
 from data_etl_spark.session import build_session  # noqa: E402
 
@@ -45,7 +46,9 @@ _PASS_THROUGH = (
     "BroadcastQueryStage",
     "ShuffleQueryStage",
     "TableCacheQueryStage",
-    "Generate",  # explode of a bounded row stays k-row-bounded
+    # not Generate: an explode multiplies its input by the array length,
+    # and one row holding a collect_list of the corpus explodes back to
+    # the corpus
     "Expand",
     "Window",
 )
@@ -177,6 +180,7 @@ BNL_DOCUMENTED_BOUNDED = {
     # others, audited individually
     "q_semantic_dedup": "IVF centroid table: k-means k rows (operators/kmeans.py)",
     "q_survival_curve": "life table: <= horizon+1 = 15 rows",
+    "q_locf_backfill": "hour spine: explode(sequence(min ts, max ts, 1 h)), one row per hour of the event time span",
 }
 
 
@@ -255,6 +259,10 @@ def main() -> int:
         except Exception as exc:  # audit must cover the whole registry
             errors[name] = repr(exc)[:200]
             continue
+        finally:
+            # each query's own plan: an earlier query's materialized
+            # persists would otherwise be substituted into it
+            release_tracked()
         rows[name] = shape(plan)
     with open(out_path, "w") as fh:
         json.dump(

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
@@ -36,6 +37,7 @@ from pyspark import StorageLevel  # noqa: E402
 from pyspark.sql import Window as W  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from _harness import best_of, timed, warm_up  # noqa: E402
 from data_etl_spark.cache import release_tracked, tracked_persist  # noqa: E402
 from data_etl_spark.operators import dedup as DD  # noqa: E402
 from data_etl_spark.sources import load_table  # noqa: E402
@@ -401,15 +403,10 @@ def tfidf_stages_ab(spark, sf_dir):
         wc_v = wc_of(dd)
         df_v = wc_v.groupBy("term").agg(F.count("*").alias("doc_freq"))
         q = topk(wc_v, df_v, hint)
-        t0 = time.perf_counter()
-        n1 = q.count()
-        t1 = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        q.count()
-        t2 = time.perf_counter() - t0
+        (t1, _), (t2, _) = timed(lambda: q, 2)
         nx = len([x for x in q._jdf.queryExecution().executedPlan().toString().split("\n")
                   if "Exchange" in x])
-        print(f"{label}: {t1:.2f}s / {t2:.2f}s (min {min(t1, t2):.2f})  rows={n1}  exchanges={nx}",
+        print(f"{label}: {t1:.2f}s / {t2:.2f}s (min {min(t1, t2):.2f})  rows={q.count()}  exchanges={nx}",
               flush=True)
 
 
@@ -431,12 +428,7 @@ def scan_opencost_sweep(spark, sf_dir):
     for oc in (64 * 1024, 256 * 1024, 512 * 1024, 4 * 1024 * 1024):
         spark.conf.set("spark.sql.files.openCostInBytes", str(oc))
         for q in probes:
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                REGISTRY[q].fn(spark, sf_dir).count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
+            best = best_of(lambda: REGISTRY[q].fn(spark, sf_dir))
             print(f"oc={oc // 1024}KB {q}: {best:.2f}s", flush=True)
     spark.conf.set("spark.sql.files.openCostInBytes", str(512 * 1024))
 
@@ -490,22 +482,12 @@ def rp_dedup_ab(spark, sf_dir):
             .dropDuplicates(["vec1", "vec2"])
         )
 
-    def timed(fn, n=5):
-        best = float("inf")
-        for _ in range(n):
-            t0 = time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            release_tracked()
-        return best
-
-    # warmup both shapes
-    timed(lambda: REGISTRY["q_rp_lsh_pairs"].fn(spark, "/root/testdata/sf0.001"), 1)
+    warm_up(spark, ["q_rp_lsh_pairs"])
     for rep in range(3):  # interleave old/new per repetition
-        o = timed(old_pairs)
-        n = timed(lambda: REGISTRY["q_rp_lsh_pairs"].fn(spark, sf_dir))
+        o = best_of(old_pairs, 5)
+        n = best_of(lambda: REGISTRY["q_rp_lsh_pairs"].fn(spark, sf_dir), 5)
         print(f"rep{rep} q_rp_lsh_pairs old={o:.2f}s new={n:.2f}s", flush=True)
-        oc = timed(lambda: REGISTRY["q_embed_dedup_clusters"].fn(spark, sf_dir), 3)
+        oc = best_of(lambda: REGISTRY["q_embed_dedup_clusters"].fn(spark, sf_dir), 3)
         print(f"rep{rep} q_embed_dedup_clusters (new pairs subtree)={oc:.2f}s", flush=True)
 
 
@@ -521,83 +503,78 @@ def census_stages_ab(spark, sf_dir):
     exactly). Interleaved min-of-3 per rep, one JVM."""
     from data_etl_spark.plans.dedup import _GRAPH_MIN_SHARED, _triangle_census
 
-    d = load_table(spark, sf_dir, "documents")
-    sig = tracked_persist(DD.minhash_signatures(DD.word_shingles(d)))
-    _stage("sig build+persist", sig.count)
+    # the shared input is staged as parquet, not persisted: every timed
+    # rep drains the tracked persists
+    with tempfile.TemporaryDirectory(prefix="census-sig-") as staged:
+        d = load_table(spark, sf_dir, "documents")
+        DD.minhash_signatures(DD.word_shingles(d)).write.mode("overwrite").parquet(staged)
+        sig = spark.read.parquet(staged)
+        _stage("sig rows (staged as parquet)", sig.count)
 
-    def combos_join():
-        return (
-            sig.select(KEY, F.col("seed").alias("s0"), F.col("minhash").alias("m0"))
-            .join(
-                sig.select(KEY, F.col("seed").alias("s1"), F.col("minhash").alias("m1")),
-                KEY,
+        def combos_join():
+            return (
+                sig.select(KEY, F.col("seed").alias("s0"), F.col("minhash").alias("m0"))
+                .join(
+                    sig.select(KEY, F.col("seed").alias("s1"), F.col("minhash").alias("m1")),
+                    KEY,
+                )
+                .filter(F.col("s0") < F.col("s1"))
             )
-            .filter(F.col("s0") < F.col("s1"))
-        )
 
-    def combos_arr():
-        g = sig.groupBy(KEY).agg(
-            F.sort_array(F.collect_list(F.struct("seed", "minhash"))).alias("sm")
-        )
-        pair = F.explode(
-            F.flatten(
-                F.transform(
-                    "sm",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("sm"), i + 2, F.size("sm")),
-                        lambda y: F.struct(
-                            x["seed"].alias("s0"),
-                            x["minhash"].alias("m0"),
-                            y["seed"].alias("s1"),
-                            y["minhash"].alias("m1"),
+        def combos_arr():
+            g = sig.groupBy(KEY).agg(
+                F.sort_array(F.collect_list(F.struct("seed", "minhash"))).alias("sm")
+            )
+            pair = F.explode(
+                F.flatten(
+                    F.transform(
+                        "sm",
+                        lambda x, i: F.transform(
+                            F.slice(F.col("sm"), i + 2, F.size("sm")),
+                            lambda y: F.struct(
+                                x["seed"].alias("s0"),
+                                x["minhash"].alias("m0"),
+                                y["seed"].alias("s1"),
+                                y["minhash"].alias("m1"),
+                            ),
                         ),
-                    ),
+                    )
                 )
             )
+            return g.select(KEY, pair.alias("p")).select(KEY, "p.*")
+
+        def edges_of(combos):
+            bucket = ["s0", "m0", "s1", "m1"]
+            a = combos.select(F.col(KEY).alias("doc1"), *bucket)
+            b = combos.select(F.col(KEY).alias("doc2"), *bucket)
+            return (
+                a.join(b, bucket)
+                .filter(F.col("doc1") < F.col("doc2"))
+                .select("doc1", "doc2")
+                .distinct()
+            )
+
+        # parity first: identical combo sets and edge sets
+        n_a = combos_join().count()
+        n_b = combos_arr().count()
+        ea = edges_of(combos_join())
+        eb = edges_of(combos_arr())
+        diff = ea.exceptAll(eb).count() + eb.exceptAll(ea).count()
+        print(f"parity: combos A={n_a} B={n_b}, edge symdiff={diff}", flush=True)
+
+        for rep in range(3):
+            ca = best_of(combos_join, 3)
+            cb = best_of(combos_arr, 3)
+            print(f"rep{rep} combos join={ca:.2f}s arr={cb:.2f}s", flush=True)
+            fa = best_of(lambda: edges_of(combos_join()), 3)
+            fb = best_of(lambda: edges_of(combos_arr()), 3)
+            print(f"rep{rep} edges  join={fa:.2f}s arr={fb:.2f}s", flush=True)
+        e = tracked_persist(
+            edges_of(combos_join()).select(F.col("doc1").alias("u"), F.col("doc2").alias("v"))
         )
-        return g.select(KEY, pair.alias("p")).select(KEY, "p.*")
-
-    def edges_of(combos):
-        bucket = ["s0", "m0", "s1", "m1"]
-        a = combos.select(F.col(KEY).alias("doc1"), *bucket)
-        b = combos.select(F.col(KEY).alias("doc2"), *bucket)
-        return (
-            a.join(b, bucket)
-            .filter(F.col("doc1") < F.col("doc2"))
-            .select("doc1", "doc2")
-            .distinct()
-        )
-
-    def timed(fn, n=3):
-        best = float("inf")
-        for _ in range(n):
-            t0 = time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    # parity first: identical combo sets and edge sets
-    n_a = combos_join().count()
-    n_b = combos_arr().count()
-    ea = edges_of(combos_join())
-    eb = edges_of(combos_arr())
-    diff = ea.exceptAll(eb).count() + eb.exceptAll(ea).count()
-    print(f"parity: combos A={n_a} B={n_b}, edge symdiff={diff}", flush=True)
-
-    for rep in range(3):
-        ca = timed(combos_join)
-        cb = timed(combos_arr)
-        print(f"rep{rep} combos join={ca:.2f}s arr={cb:.2f}s", flush=True)
-        fa = timed(lambda: edges_of(combos_join()))
-        fb = timed(lambda: edges_of(combos_arr()))
-        print(f"rep{rep} edges  join={fa:.2f}s arr={fb:.2f}s", flush=True)
-    e = tracked_persist(
-        edges_of(combos_join()).select(F.col("doc1").alias("u"), F.col("doc2").alias("v"))
-    )
-    _stage("edges persist", e.count)
-    t0 = time.perf_counter()
-    _triangle_census(e).write.format("noop").mode("overwrite").save()
-    print(f"triangle census over persisted edges: {time.perf_counter() - t0:.2f}s", flush=True)
+        _stage("edges persist", e.count)
+        [(sec, _)] = timed(lambda: _triangle_census(e))
+        print(f"triangle census over persisted edges: {sec:.2f}s", flush=True)
 
 
 EXPERIMENTS = {

@@ -8,12 +8,11 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, ".")
 
-from data_etl_spark.cache import release_tracked  # noqa: E402
+from _harness import timed, warm_up  # noqa: E402
 from data_etl_spark.plans import REGISTRY  # noqa: E402
 from data_etl_spark.session import build_session  # noqa: E402
 
@@ -23,18 +22,8 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf1"
     n = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     spark = build_session("profile-q")
-    REGISTRY[name].fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    release_tracked()
-    times = []
-    for _ in range(n):
-        t0 = time.perf_counter()
-        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        times.append(time.perf_counter() - t0)
-        release_tracked()
+    warm_up(spark, [name])
+    times = [sec for sec, _ in timed(lambda: REGISTRY[name].fn(spark, sf_dir), n)]
     print(f"{name} @ {sf_dir}: runs={[round(t, 2) for t in times]} min={min(times):.2f}s")
 
 

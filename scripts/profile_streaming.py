@@ -4,9 +4,10 @@ BENCH_FULL_r06. Question: fixed AvailableNow/RocksDB checkpoint
 overhead, or per-row state churn?
 
 Method: time each at sf0.01 (10k events) and sf0.1 (100k events),
-min-of-2 after a warmup drain. If wall is ~flat across the 10x data
-step, the cost is fixed machinery (micro-batch setup + state-store
-checkpoint commits); the data-linear component is the difference.
+min-of-2 through the noop sink after an sf0.001 warmup
+(scripts/_harness.py). If wall is ~flat across the 10x data step, the
+cost is fixed machinery (micro-batch setup + state-store checkpoint
+commits); the data-linear component is the difference.
 
   python scripts/profile_streaming.py
 """
@@ -15,11 +16,11 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, ".")
 
+from _harness import best_of, warm_up  # noqa: E402
 from data_etl_spark.plans import REGISTRY  # noqa: E402
 from data_etl_spark.session import build_session  # noqa: E402
 
@@ -29,20 +30,13 @@ SFS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
 def main() -> int:
     spark = build_session("streaming-profile")
-    # warmup: one full drain of each query at the small SF
-    for name in NAMES:
-        REGISTRY[name].fn(spark, SFS[0]).count()
+    warm_up(spark, NAMES)
 
     results: dict[str, dict[str, float]] = {}
     for name in NAMES:
         results[name] = {}
         for sf in SFS:
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                REGISTRY[name].fn(spark, sf).count()
-                best = min(best, time.perf_counter() - t0)
-            results[name][sf] = round(best, 2)
+            results[name][sf] = round(best_of(lambda: REGISTRY[name].fn(spark, sf)), 2)
 
     for name, r in results.items():
         small, big = r[SFS[0]], r[SFS[1]]

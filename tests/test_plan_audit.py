@@ -97,3 +97,39 @@ def test_keyed_aggregate_build_is_unproven():
 
 def test_cached_global_aggregate_build_is_bounded():
     assert bnl_boundedness(_CACHED_BUILD) == (1, 0)
+
+
+# an explode over a global collect_list: the aggregate is one row, but
+# the Generate above it re-expands that row to the whole input
+_EXPLODED_GLOBAL_LIST_BUILD = """== Physical Plan ==
+AdaptiveSparkPlan (10)
++- BroadcastNestedLoopJoin Cross BuildRight (9)
+   :- Project (2)
+   :  +- Scan parquet  (1)
+   +- BroadcastExchange (8)
+      +- Generate (7)
+         +- ObjectHashAggregate (6)
+            +- Exchange (5)
+               +- ObjectHashAggregate (4)
+                  +- Scan parquet  (3)
+
+(4) ObjectHashAggregate
+Keys: []
+Functions [1]: [partial_collect_list(b#2L, 0, 0)]
+
+(6) ObjectHashAggregate
+Keys: []
+Functions [1]: [collect_list(b#2L, 0, 0)]
+
+(7) Generate
+Input [1]: [bs#5]
+Arguments: explode(bs#5), false, [b#6L]
+
+(9) BroadcastNestedLoopJoin
+Join type: Cross
+Join condition: None
+"""
+
+
+def test_explode_of_global_aggregate_build_is_unproven():
+    assert bnl_boundedness(_EXPLODED_GLOBAL_LIST_BUILD) == (0, 1)

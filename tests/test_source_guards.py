@@ -62,3 +62,27 @@ def test_guard_catches_injection(tmp_path):
     sample = 'df2 = df.persist(StorageLevel.DISK_ONLY)\n'
     code = sample.split("#", 1)[0]
     assert _RAW.search(code) and "tracked_persist" not in code
+
+
+#: the noop sink and the host-gate calls belong to the one run primitive,
+#: scripts/_harness.py (_loadgate.py defines the gate)
+_HARNESS_OWNED = re.compile(
+    r"""["']noop["']|\b(wait_quiet|wait_fault_probed|fault_probe)\s*\("""
+)
+
+
+def test_timing_scripts_time_through_the_harness():
+    assert _HARNESS_OWNED.search('df.write.format("noop").save()')
+    assert _HARNESS_OWNED.search("gbs = fault_probe()")
+    assert not _HARNESS_OWNED.search('out["fault_probe_end"] = x')
+    offenders = []
+    for path in [REPO / "bench.py", *sorted((REPO / "scripts").glob("*.py"))]:
+        if path.name in ("_harness.py", "_loadgate.py"):
+            continue
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            if _HARNESS_OWNED.search(line.split("#", 1)[0]):
+                offenders.append(f"{path.relative_to(REPO)}:{lineno}: {line.strip()}")
+    assert not offenders, (
+        "noop-sink write or host-gate call outside scripts/_harness.py — "
+        "use materialize/timed/host_gate from there:\n" + "\n".join(offenders)
+    )
