@@ -26,7 +26,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-sys.path.insert(0, ".")
 
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F

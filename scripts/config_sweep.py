@@ -26,13 +26,12 @@ import os
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-sys.path.insert(0, ".")
 
-import duckdb  # noqa: E402
+from _oracle import duckdb_views  # noqa: E402
 
 from data_etl_spark.plans import REGISTRY  # noqa: E402
 from data_etl_spark.session import build_session  # noqa: E402
-from tests.test_fuzz_differential import _TABLES, _canon  # noqa: E402
+from tests.test_fuzz_differential import _canon  # noqa: E402
 
 #: queries whose PLANS consume the swept configs (two-pass bucketed
 #: rank/cumsum derive n_buckets from shuffle.partitions;
@@ -81,9 +80,7 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
 
     spark = build_session("config-sweep")
-    con = duckdb.connect()
-    for t in _TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duckdb_views(sf_dir)
 
     all_fails: dict[str, list[str]] = {}
 

@@ -30,11 +30,10 @@ import sys
 import tempfile
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-sys.path.insert(0, ".")
 
-import duckdb  # noqa: E402
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
+from _oracle import duckdb_views  # noqa: E402
 
 from tests import test_fuzz_differential as T  # noqa: E402
 from data_etl_spark.plans import REGISTRY  # noqa: E402
@@ -230,11 +229,7 @@ def main() -> int:
         try:
             sdf = q.fn(spark, d)
             srows = [r.asDict() for r in sdf.collect()]
-            con = duckdb.connect()
-            for t in T._TABLES:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'"
-                )
+            con = duckdb_views(d)
             # fetchall, not .df(): pandas maps NULL-bearing BIGINT to
             # float64 (lossy above 2^53 — the chaos-time epoch edges)
             cur = con.execute(q.oracle)

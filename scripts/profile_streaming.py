@@ -18,7 +18,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-sys.path.insert(0, ".")
 
 from _harness import best_of, warm_up  # noqa: E402
 from data_etl_spark.plans import REGISTRY  # noqa: E402

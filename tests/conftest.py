@@ -29,10 +29,16 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 _host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{min(48 * 1024, max(2048, _host_mb // 2))}m")
 
-import duckdb
+import sys
+
 import pytest
 
 from data_etl_spark.session import build_session
+
+# the scripts' shared modules (_oracle, _harness, oracle) import by name
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+
+from _oracle import duckdb_views  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -48,13 +54,7 @@ def spark():
 def ddb():
     """DuckDB connection with the same tables registered as views,
     mirroring the driver's oracle environment."""
-    con = duckdb.connect()
-    from data_etl_spark.sources.tables import TABLE_NAMES
-
-    for name in TABLE_NAMES:
-        con.sql(
-            f"CREATE VIEW {name} AS SELECT * FROM '{SF_DIR}/{name}.parquet'"
-        )
+    con = duckdb_views(SF_DIR)
     yield con
     con.close()
 

@@ -8,10 +8,10 @@ from __future__ import annotations
 import math
 import os
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from _oracle import duckdb_views
 
 from data_etl_spark.plans import REGISTRY
 
@@ -120,10 +120,7 @@ def test_edge_docs_match_oracle(spark, fixture_dir, name):
     sdf = q.fn(spark, fixture_dir)
     spark_rows = [r.asDict() for r in sdf.collect()]
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{fixture_dir}/documents.parquet'"
-    )
+    con = duckdb_views(fixture_dir, ("documents",))
     odf = con.execute(q.oracle).df()
     oracle_rows = odf.to_dict("records")
 

@@ -10,10 +10,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from _oracle import duckdb_views
 
 from data_etl_spark.plans import REGISTRY
 
@@ -29,12 +29,6 @@ _QUERIES = [
     "q_interval_sweep",
     "q_dedup_clusters",
 ]
-
-_TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
 
 @pytest.fixture(scope="module")
 def empty_dir(tmp_path_factory):
@@ -139,11 +133,7 @@ def test_empty_source_agrees(spark, empty_dir, name):
     sdf = q.fn(spark, empty_dir)
     srows = sdf.collect()
 
-    con = duckdb.connect()
-    for t in _TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{empty_dir}/{t}.parquet'"
-        )
+    con = duckdb_views(empty_dir)
     odf = con.execute(q.oracle).df()
     assert sorted(sdf.columns) == sorted(odf.columns.tolist()), name
     # q_interval_sweep emits one all-NULL/zero metrics row either way;

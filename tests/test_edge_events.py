@@ -7,10 +7,10 @@ from __future__ import annotations
 import math
 import os
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from _oracle import duckdb_views
 
 from data_etl_spark.plans import REGISTRY
 
@@ -84,10 +84,7 @@ def test_edge_events_match_oracle(spark, fixture_dir, name):
     sdf = q.fn(spark, fixture_dir)
     spark_rows = [r.asDict() for r in sdf.collect()]
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{fixture_dir}/events.parquet'"
-    )
+    con = duckdb_views(fixture_dir, ("events",))
     odf = con.execute(q.oracle).df()
     oracle_rows = odf.to_dict("records")
 

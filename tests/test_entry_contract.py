@@ -553,44 +553,6 @@ def test_persisted_window_reused_same_round(monkeypatch, tmp_path):
     assert entry_mod.FLAGSHIP in fresh
 
 
-def test_gate_queries_inventory_complete_both_ways():
-    """scripts/oracle_at_sf.py's GATE_QUERIES (VERDICT r11 #1) is the
-    single inventory of cost-gated / cardinality-adaptive queries —
-    the names whose LIVE branch at bench scale only that sweep
-    oracle-checks. Two-way completeness (the CAPPED_QUERIES
-    precedent): (a) every registry query whose plan source references
-    a gate-bearing helper is in the list, so a future auto_*/adaptive
-    query cannot silently skip the sf0.1 oracle sweep, and (b) every
-    listed name actually references one, so the list never pads."""
-    import inspect
-    import sys
-
-    sys.path.insert(0, "scripts")
-    from oracle_at_sf import GATE_QUERIES
-
-    from data_etl_spark.plans import REGISTRY
-
-    markers = (
-        "auto_knn",
-        "auto_dedup",
-        "auto_join",
-        "auto_rank",
-        "exact_global_rank",
-        "exact_global_cumsum",
-        "_ADAPT_N",
-    )
-    gated = set()
-    for name, q in REGISTRY.items():
-        fn = getattr(q.fn, "__wrapped__", q.fn)
-        src = inspect.getsource(fn)
-        if any(m in src for m in markers):
-            gated.add(name)
-    assert gated == set(GATE_QUERIES), (
-        f"missing from GATE_QUERIES: {sorted(gated - set(GATE_QUERIES))}; "
-        f"padded: {sorted(set(GATE_QUERIES) - gated)}"
-    )
-
-
 def test_capped_queries_inventory_complete_both_ways():
     """CAPPED_QUERIES (VERDICT r10 #7) is the single SF-cap inventory:
     (a) every declared cap's literal bound appears in BOTH the engine

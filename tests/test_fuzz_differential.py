@@ -15,12 +15,13 @@ import math
 import os
 import random
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from _oracle import duckdb_views
 
 from data_etl_spark.plans import REGISTRY
+from data_etl_spark.sources.tables import TABLE_NAMES
 
 # 7 and 23: random adversarial corpora. 0: the deterministic "torture"
 # corpus — whitespace-only/empty documents, a single repeated event
@@ -780,10 +781,6 @@ def fuzz_dir(request, tmp_path_factory):
 # unicode, duplicates, empty text, timestamp collisions — and one
 # streaming pass under collisions exercises watermark/state semantics
 # the batch twins don't).
-_TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
 _CORPUS_TABLES = {"documents", "events", "embeddings"}
 _EXCLUDE_PREFIX = ("q_streaming_",)
 
@@ -795,7 +792,7 @@ def _eligible():
     for n, q in sorted(REGISTRY.items()):
         if q.oracle is None:
             continue
-        used = {t for t in _TABLES if _re.search(rf"\b{t}\b", q.oracle)}
+        used = {t for t in TABLE_NAMES if _re.search(rf"\b{t}\b", q.oracle)}
         if not used:
             continue
         every_seed = bool(used & _CORPUS_TABLES) and not n.startswith(
@@ -848,9 +845,7 @@ def test_fuzz_matches_oracle(spark, fuzz_dir, name, every_seed):
     sdf = q.fn(spark, d)
     spark_rows = [r.asDict() for r in sdf.collect()]
 
-    con = duckdb.connect()
-    for t in _TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
+    con = duckdb_views(d)
     odf = con.execute(q.oracle).df()
     oracle_rows = odf.to_dict("records")
 
@@ -896,9 +891,7 @@ def _assert_matches(spark, d: str, name: str) -> None:
     q = REGISTRY[name]
     sdf = q.fn(spark, d)
     spark_rows = [r.asDict() for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in _TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
+    con = duckdb_views(d)
     # fetchall, NOT .df(): pandas maps a NULL-bearing BIGINT column to
     # float64, which is lossy above 2^53 — the chaos-time corpus's
     # pandas-ns-edge epoch values (9.2e15 us) came back off-by-one from

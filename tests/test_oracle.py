@@ -8,91 +8,13 @@ equality after canonicalization, with a readable diff on failure.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pytest
+from _oracle import frames_equal
+from oracle import check
+from pyspark.sql import functions as F
 
-from data_etl_spark.plans import REGISTRY
-
-
-def canonicalize(df: pd.DataFrame) -> pd.DataFrame:
-    """Sort columns by name, normalize dtypes, sort rows by all columns."""
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        s = df[c]
-        if pd.api.types.is_datetime64_any_dtype(s):
-            df[c] = s.astype("datetime64[us]")
-        elif pd.api.types.is_float_dtype(s):
-            df[c] = s.astype("float64")
-        elif pd.api.types.is_integer_dtype(s):
-            df[c] = s.astype("Int64")
-        elif s.dtype == object:
-            df[c] = s.map(lambda x: x if x is None or isinstance(x, str) else str(x))
-    df = df.sort_values(by=list(df.columns), na_position="last", kind="mergesort")
-    return df.reset_index(drop=True)
-
-
-def dtype_family(s: pd.Series) -> str:
-    """Coarse dtype family (bool/int/float/datetime/object). The driver's
-    value hash is dtype-sensitive: a Spark int64 vs a DuckDB float64 column
-    (uncast HUGEINT sum, DOUBLE floor/ceil, TINYINT sign) hash-mismatches
-    even with numerically identical values. canonicalize() erases that skew,
-    so the family must be asserted *before* it (VERDICT r3, wrong #2)."""
-    if pd.api.types.is_bool_dtype(s):
-        return "bool"
-    if pd.api.types.is_integer_dtype(s):
-        return "int"
-    if pd.api.types.is_float_dtype(s):
-        return "float"
-    if pd.api.types.is_datetime64_any_dtype(s):
-        return "datetime"
-    return "object"
-
-
-def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str):
-    assert sorted(spark_pdf.columns) == sorted(oracle_pdf.columns), (
-        f"{name}: column mismatch {sorted(spark_pdf.columns)} vs {sorted(oracle_pdf.columns)}"
-    )
-    assert len(spark_pdf) == len(oracle_pdf), (
-        f"{name}: row count {len(spark_pdf)} vs {len(oracle_pdf)}"
-    )
-    numeric = {"bool", "int", "float"}
-    for c in sorted(spark_pdf.columns):
-        fa, fb = dtype_family(spark_pdf[c]), dtype_family(oracle_pdf[c])
-        # DATE columns arrive as object (Spark) vs datetime64 (DuckDB) and the
-        # driver hash tolerates that (q_date_funcs was r1 hash-green); only
-        # numeric-family skew (the r3 red-row class) is driver-fatal.
-        if fa == fb or (fa not in numeric and fb not in numeric):
-            continue
-        assert fa == fb, (
-            f"{name}: dtype-family skew col {c!r}: spark {spark_pdf[c].dtype} ({fa}) "
-            f"vs oracle {oracle_pdf[c].dtype} ({fb}) — the driver hash fails on this; "
-            f"CAST the oracle (or the plan) so both engines emit the same family"
-        )
-    a, b = canonicalize(spark_pdf), canonicalize(oracle_pdf)
-    for c in a.columns:
-        if pd.api.types.is_float_dtype(a[c]):
-            av, bv = a[c].to_numpy(), b[c].to_numpy()
-            both_nan = np.isnan(av) & np.isnan(bv)
-            eq = (av == bv) | both_nan
-            if not eq.all():
-                bad = np.where(~eq)[0][:5]
-                raise AssertionError(
-                    f"{name}: float col {c!r} differs at rows {bad.tolist()}: "
-                    f"spark={av[bad].tolist()} oracle={bv[bad].tolist()} "
-                    f"(max abs diff {np.nanmax(np.abs(av - bv))})"
-                )
-        else:
-            if not a[c].equals(b[c]):
-                diff = a[c] != b[c]
-                # treat NaN/None equal
-                diff &= ~(a[c].isna() & b[c].isna())
-                if diff.any():
-                    idx = diff[diff].index[:5].tolist()
-                    raise AssertionError(
-                        f"{name}: col {c!r} differs at rows {idx}: "
-                        f"spark={a.loc[idx, c].tolist()} oracle={b.loc[idx, c].tolist()}"
-                    )
+from data_etl_spark import cache
+from data_etl_spark.plans import REGISTRY, register
 
 
 _ORACLED = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
@@ -104,7 +26,8 @@ def test_query_matches_oracle(spark, ddb, sf_dir, name):
     q = REGISTRY[name]
     spark_pdf = q.fn(spark, sf_dir).toPandas()
     oracle_pdf = ddb.sql(q.oracle).df()
-    assert_frames_match(spark_pdf, oracle_pdf, name)
+    err = frames_equal(spark_pdf, oracle_pdf)
+    assert err is None, f"{name}: {err}"
 
 
 @pytest.mark.parametrize("name", _ROWS_ONLY)
@@ -117,3 +40,41 @@ def test_rows_only_query_runs(spark, sf_dir, name):
 
 def test_registry_nonempty():
     assert len(REGISTRY) >= 10
+
+
+def test_check_loop_records_errors_and_drains(spark, ddb, sf_dir):
+    """scripts/oracle.py's loop: a query that raises is recorded and the
+    later names still run, and every query's tracked persists are drained
+    before the next one starts."""
+    def region(spark, sf_dir):
+        return spark.read.parquet(f"{sf_dir}/region.parquet").select("r_regionkey", "r_name")
+
+    def persisted(spark, sf_dir):
+        agg = spark.range(0, 2000, numPartitions=4).groupBy(
+            (F.col("id") % 7).alias("k")
+        ).agg(F.count("*").alias("n"))
+        return cache.tracked_persist(agg).select("k", (F.col("n") * 2).alias("n2"))
+
+    stubs = {
+        "q_oracle_stub_broken": (lambda spark, sf_dir: spark.table("no_such_table"), "SELECT 1 AS x"),
+        "q_oracle_stub_persisted": (
+            persisted,
+            "SELECT range % 7 AS k, count(*) * 2 AS n2 FROM range(2000) GROUP BY 1",
+        ),
+        "q_oracle_stub_region": (region, "SELECT r_regionkey, r_name FROM region"),
+    }
+    rows = {}
+    try:
+        for name, (fn, sql) in stubs.items():
+            register(name, sql)(fn)
+        for name, row in check(spark, ddb, sf_dir, list(stubs)):
+            assert cache._TRACKED == [], name
+            rows[name] = row
+    finally:
+        for name in stubs:
+            REGISTRY.pop(name, None)
+    assert list(rows) == list(stubs)
+    broken = rows["q_oracle_stub_broken"]
+    assert broken["hash_match"] is False and "no_such_table" in broken["err"], broken
+    assert rows["q_oracle_stub_persisted"]["hash_match"] is True, rows
+    assert rows["q_oracle_stub_region"]["hash_match"] is True, rows

@@ -86,3 +86,28 @@ def test_timing_scripts_time_through_the_harness():
         "noop-sink write or host-gate call outside scripts/_harness.py — "
         "use materialize/timed/host_gate from there:\n" + "\n".join(offenders)
     )
+
+
+#: the DuckDB views and the exact comparison rule belong to the one
+#: correctness module, scripts/_oracle.py
+_ORACLE_OWNED = re.compile(
+    r"CREATE\s+(OR\s+REPLACE\s+)?VIEW|\bdef\s+(frames_equal|dtype_family|canon|canonicalize)\s*\("
+)
+
+
+def test_oracle_checks_go_through_one_module():
+    # the samples are split so that this file does not match its own scan
+    assert _ORACLE_OWNED.search("con.sql(f'CREATE " + "VIEW {t} AS SELECT 1')")
+    assert _ORACLE_OWNED.search("def " + "canon(df):")
+    assert not _ORACLE_OWNED.search("def _canon(rows, cols):")
+    offenders = []
+    for path in sorted([*(REPO / "scripts").glob("*.py"), *(REPO / "tests").glob("*.py")]):
+        if path.name == "_oracle.py":
+            continue
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            if _ORACLE_OWNED.search(line):
+                offenders.append(f"{path.relative_to(REPO)}:{lineno}: {line.strip()}")
+    assert not offenders, (
+        "DuckDB view registration or an oracle comparator outside "
+        "scripts/_oracle.py — use duckdb_views/frames_equal from there:\n" + "\n".join(offenders)
+    )
