@@ -219,7 +219,8 @@ class ETLPipeline:
         1. stage ``df`` fully under ``<index>.staging`` (this runs the
            plan, which may lazily read the live buckets, before any live
            dir is touched);
-        2. write ``<index>.intent`` — the commit point;
+        2. write ``<index>.intent`` — the commit point — and drop the
+           ANN copy ``<index>.ivf``, which indexes the old rows;
         3. per bucket, rename the live dir aside to ``<index>.old`` and
            move the staged dir in (a bucket with no staged rows drops);
         4. delete the aside and staging dirs, then the intent.
@@ -253,6 +254,8 @@ class ETLPipeline:
             self.index_path + ".intent",
             {"op": op, "buckets": sorted(buckets), "staged": sorted(_bucket_dirs(staging))},
         )
+        if os.path.exists(self.index_path + ".ivf"):
+            shutil.rmtree(self.index_path + ".ivf")
         os.makedirs(aside)
         os.makedirs(self.index_path, exist_ok=True)
         for b in sorted(buckets):
@@ -276,8 +279,8 @@ class ETLPipeline:
         after cleanup.
 
         - intent present  -> the staged result is the table's truth:
-          roll FORWARD (finish the interrupted renames/deletes) to the
-          post-operation state;
+          roll FORWARD (finish the interrupted renames/deletes, drop the
+          stale ANN copy) to the post-operation state;
         - intent absent   -> the operation never committed: live is the
           pre-operation state, any scratch dirs are garbage the next
           commit clears.
@@ -327,7 +330,7 @@ class ETLPipeline:
                 live_b = os.path.join(self.index_path, bdir)
                 if not os.path.exists(live_b):
                     os.replace(os.path.join(aside, bdir), live_b)
-        for p in (staging, aside):
+        for p in (staging, aside, self.index_path + ".ivf"):
             if os.path.exists(p):
                 shutil.rmtree(p)
         os.remove(intent_file)
@@ -584,9 +587,9 @@ class ETLPipeline:
 
     def build_ann_index(self, n_cells: int = 16, kmeans_iter: int = 4) -> str:
         """Train centroids on the index embeddings (k-means) and write a
-        cell-partitioned IVF copy next to the index table. Returns its
-        path. At 100 TB this is the search-scale path: a probe reads one
-        cell's partition instead of the full table."""
+        cell-partitioned IVF copy, centroids in ``<copy>/_centroids``, next
+        to the index table; a commit drops it. Returns its path. At 100 TB
+        this is the search-scale path: a probe reads one cell's partition."""
         from .operators.ivf import build_ivf_index
         from .operators.kmeans import kmeans_fit
 
@@ -598,16 +601,21 @@ class ETLPipeline:
         )
         path = self.index_path + ".ivf"
         build_ivf_index(vec, cent, path, id_col="c_vec_id", vec_col="cemb2")
-        self._ann_centroids = cent.localCheckpoint(eager=True)
+        # a `_` dir: Spark's listing of the cell-partitioned copy skips it
+        cent.write.parquet(os.path.join(path, "_centroids"))
         return path
 
     def ann_search(self, queries: Sequence[str], k: int = 5) -> DataFrame:
-        """Approximate top-k via the IVF index (build_ann_index first)."""
+        """Approximate top-k via the IVF copy of :meth:`build_ann_index`."""
         from .operators.ivf import ivf_search
 
+        path = self.index_path + ".ivf"
+        centroids = os.path.join(path, "_centroids")
+        if not os.path.isdir(centroids):
+            raise ValueError(f"no ANN index for {self.index_path}: call build_ann_index first")
         qdf = self._query_frame(queries).drop("query_text")
         return ivf_search(
-            self.spark, self.index_path + ".ivf", qdf, self._ann_centroids, k=k, q_vec="q_emb"
+            self.spark, path, qdf, self.spark.read.parquet(centroids), k=k, q_vec="q_emb"
         )
 
     def hybrid_search(

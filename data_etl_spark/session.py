@@ -3,8 +3,8 @@
 The driver supplies its own SparkSession to ``entry()``/``queries()``;
 ``prep()`` applies only *runtime-settable* confs (session timezone,
 adaptive execution, shuffle parallelism) so results are deterministic
-regardless of who built the session. ``build_session()`` is used by our
-own tests and bench.
+regardless of who built the session. ``build_session()``, used by our
+own tests, scripts and benches, alone decides how big a session is.
 """
 
 from __future__ import annotations
@@ -13,34 +13,28 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Shuffle partitions sized for local[N] testing; on a real cluster this
-#: would be ~2-3x total executor cores (or left to AQE coalescing).
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: The checkout root, from which Python workers import ``data_etl_spark``.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def driver_memory() -> str:
+    """The driver heap: ``SPARK_GRAFT_DRIVER_MEM``, else half the host's
+    memory within 2g..48g (a heap past the host's gets the JVM OOM-killed)."""
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(48 * 1024, max(2048, host_mb // 2))}m"
 
 
 def build_session(app_name: str = "data-etl-spark") -> SparkSession:
-    """Local-mode session tuned for the test harness (local[32], 128 GiB box)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Local session sized to the host: ``local[SPARK_GRAFT_CPUS]``, else one
+    slot per CPU this process may use, and :func:`driver_memory`'s heap.
+    Workers import the package from the checkout; :func:`prep` runs last."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE advisory partition size 64m -> 256m (guide §2.2/§9):
-        # fewer, larger post-shuffle partitions — at 100 TB this cuts
-        # the M x R shuffle-block count (the quadratic small-block
-        # failure mode); locally it was a r13 wash under host drift but
-        # r14 re-measured it behind the page-fault gate with TWO
-        # independent in-process per-query passes (ADVISORY_AB_r14.json
-        # / _pass2.json): medians 0.960/0.976, totals -3.3%/-3.4%,
-        # consistent-win:consistent-loss 24:8. Result-safe (AQE
-        # coalescing only regroups partitions; config invariance pinned
-        # by scripts/config_sweep.py).
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
+        .config("spark.executorEnv.PYTHONPATH", _ROOT)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Scan granularity for highly-compressed text (r13): Spark's
@@ -74,7 +68,7 @@ def build_session(app_name: str = "data-etl-spark") -> SparkSession:
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return prep(spark)
 
 
 def prep(spark: SparkSession) -> SparkSession:
@@ -87,14 +81,23 @@ def prep(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    # see build_session: reproduced r14 A/B win, scale-safe (guide §2.2)
+    # AQE advisory partition size 64m -> 256m (guide §2.2/§9):
+    # fewer, larger post-shuffle partitions — at 100 TB this cuts
+    # the M x R shuffle-block count (the quadratic small-block
+    # failure mode); locally it was a r13 wash under host drift but
+    # r14 re-measured it behind the page-fault gate with TWO
+    # independent in-process per-query passes (ADVISORY_AB_r14.json
+    # / _pass2.json): medians 0.960/0.976, totals -3.3%/-3.4%,
+    # consistent-win:consistent-loss 24:8. Result-safe (AQE
+    # coalescing only regroups partitions; config invariance pinned
+    # by scripts/config_sweep.py).
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
     # events.parquet stores TIMESTAMP(NANOS) which Spark's parquet reader
     # rejects; read as int64 nanos and convert in sources.tables.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # A driver-provided vanilla session defaults to 200 shuffle partitions;
     # at test scale that is pure task-scheduling overhead (AQE coalescing
-    # does not rescue stages whose stats arrive late). On a real cluster
-    # this would be ~2-3x total cores.
-    spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
+    # does not rescue stages whose stats arrive late), so use one per
+    # core. On a real cluster this would be ~2-3x total cores.
+    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
     return spark

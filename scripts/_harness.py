@@ -1,6 +1,6 @@
 """The one place that runs and times a query, shared by bench.py and the
 timing scripts in scripts/: the noop sink, the sf0.001 warm-up, the
-timed rep loop with its drain, and the host gate at both ends of a run.
+timed rep loop with its drain, conf arms, and the host gate at both ends.
 """
 
 from __future__ import annotations
@@ -17,8 +17,15 @@ from _loadgate import fault_probe, wait_fault_probed, wait_quiet  # noqa: E402
 
 from data_etl_spark.cache import release_tracked  # noqa: E402
 from data_etl_spark.plans import REGISTRY  # noqa: E402
+from data_etl_spark.session import prep  # noqa: E402
 
 WARM_DIR = "/root/testdata/sf0.001"
+
+
+def error_text(exc: BaseException) -> str:
+    """``Type: message`` of a failed query's ``exc``, cut to 300 chars: the
+    repr of a Spark ``AnalysisException`` is a bare ``AnalysisException()``."""
+    return f"{type(exc).__name__}: {exc}"[:300]
 
 
 def materialize(df) -> None:
@@ -38,9 +45,29 @@ def warm_up(spark, names) -> None:
         try:
             materialize(REGISTRY[name].fn(spark, WARM_DIR))
         except Exception as exc:
-            print(f"warmup FAILED {name}: {exc!r}", file=sys.stderr)
+            print(f"warmup FAILED {name}: {error_text(exc)}", file=sys.stderr)
         finally:
             release_tracked()
+
+
+def build_arm(spark, name: str, confs: dict[str, str], sf_dir: str):
+    """Registry query ``name`` over ``sf_dir``, built with ``confs`` set.
+
+    The registry wrapper runs prep(), which resets the keys it manages
+    (shuffle.partitions, AQE, advisoryPartitionSizeInBytes, ...): setting
+    an arm's confs before calling it would build every arm with the
+    shipped values. So prep() runs first, then the arm's confs are set,
+    then the unwrapped plan function builds. The confs are set again
+    after the build because a plan that calls another registered query
+    re-runs prep() on the way.
+    """
+    prep(spark)
+    for key, value in confs.items():
+        spark.conf.set(key, value)
+    df = REGISTRY[name].fn.__wrapped__(spark, sf_dir)
+    for key, value in confs.items():
+        spark.conf.set(key, value)
+    return df
 
 
 def timed(build, reps: int = 1, tracker=None) -> list[tuple[float, dict | None]]:
@@ -84,8 +111,9 @@ def sweep(spark, names, sf_dir: str, passes: int = 1, tracker=None):
             try:
                 [(sec, metrics)] = timed(lambda: REGISTRY[name].fn(spark, sf_dir), 1, tracker)
             except Exception as exc:
-                print(f"bench FAILED {name}: {exc!r}", file=sys.stderr, flush=True)
-                yield name, None, None, repr(exc)[:300]
+                err = error_text(exc)
+                print(f"bench FAILED {name}: {err}", file=sys.stderr, flush=True)
+                yield name, None, None, err
                 continue
             yield name, sec, metrics, None
 

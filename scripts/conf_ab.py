@@ -11,7 +11,7 @@ Example (the r13 washes, re-run r14 behind a probed-good window):
   python scripts/conf_ab.py spark.sql.adaptive.advisoryPartitionSizeInBytes 64m 256m
   python scripts/conf_ab.py spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold 0 64m
 
-For each query: build it with conf=A (:func:`build_arm`), min-of-N
+For each query: build it with conf=A (``_harness.build_arm``), min-of-N
 noop-sink runs; the same with conf=B; next query. Reports per-query
 (a_sec, b_sec, ratio b/a), median ratio, win counts, and the
 fault-probe readings bracketing the run so a drift-contaminated pass is
@@ -29,28 +29,9 @@ import sys
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from _harness import best_of, host_gate, host_gate_end, warm_up  # noqa: E402
+from _harness import best_of, build_arm, error_text, host_gate, host_gate_end, warm_up  # noqa: E402
 
-from data_etl_spark.plans import REGISTRY  # noqa: E402
-from data_etl_spark.session import build_session, prep  # noqa: E402
-
-
-def build_arm(spark, name: str, key: str, value: str, sf: str):
-    """Registry query ``name`` over ``sf``, built with ``key`` = ``value``.
-
-    The registry wrapper runs prep(), which resets the keys it manages
-    (advisoryPartitionSizeInBytes, shuffle.partitions, ...): setting
-    the arm's value before calling it would measure the shipped value in
-    both arms. So prep() runs first, then the arm's value is set, then
-    the unwrapped plan function builds. The value is set again after
-    the build because a plan that calls another registered query re-runs
-    prep() on the way.
-    """
-    prep(spark)
-    spark.conf.set(key, value)
-    df = REGISTRY[name].fn.__wrapped__(spark, sf)
-    spark.conf.set(key, value)
-    return df
+from data_etl_spark.session import build_session  # noqa: E402
 
 
 def main() -> None:
@@ -67,11 +48,10 @@ def main() -> None:
 
     gate = host_gate()
     spark = build_session("conf-ab")
-    base = spark.conf.get(args.key, None)
     warm_up(spark, HEADLINE)
 
     def timed(name: str, value: str) -> float:
-        return best_of(lambda: build_arm(spark, name, args.key, value, args.sf), args.n)
+        return best_of(lambda: build_arm(spark, name, {args.key: value}, args.sf), args.n)
 
     rows: dict[str, dict] = {}
     for name in HEADLINE:
@@ -79,11 +59,9 @@ def main() -> None:
             a = timed(name, args.value_a)
             b = timed(name, args.value_b)
         except Exception as exc:
-            rows[name] = {"err": repr(exc)[:200]}
+            rows[name] = {"err": error_text(exc)}
             continue
         rows[name] = {"a": a, "b": b, "ratio": round(b / a, 3) if a else None}
-    if base is not None:
-        spark.conf.set(args.key, base)
 
     ratios = [r["ratio"] for r in rows.values() if r.get("ratio")]
     out = {

@@ -27,8 +27,10 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from _harness import build_arm, error_text  # noqa: E402
 from _oracle import duckdb_views  # noqa: E402
 
+from data_etl_spark.cache import release_tracked  # noqa: E402
 from data_etl_spark.plans import REGISTRY  # noqa: E402
 from data_etl_spark.session import build_session  # noqa: E402
 from tests.test_fuzz_differential import _canon  # noqa: E402
@@ -53,12 +55,13 @@ def _oracle_names() -> list[str]:
     return sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 
 
-def _run(spark, con, sf_dir: str, names: list[str], label: str) -> list[str]:
+def _run(spark, con, sf_dir: str, names: list[str], confs: dict[str, str], label: str) -> list[str]:
+    """Oracle-check ``names``, each built under ``confs`` and drained after."""
     fails = []
     for name in names:
         q = REGISTRY[name]
         try:
-            sdf = q.fn(spark, sf_dir)
+            sdf = build_arm(spark, name, confs, sf_dir)
             srows = [r.asDict() for r in sdf.collect()]
             odf = con.execute(q.oracle).df()
             ok = sorted(sdf.columns) == sorted(odf.columns.tolist()) and _canon(
@@ -66,7 +69,9 @@ def _run(spark, con, sf_dir: str, names: list[str], label: str) -> list[str]:
             ) == _canon(odf.to_dict("records"), sdf.columns)
         except Exception as ex:  # noqa: BLE001
             ok = False
-            print(f"  ERR {name}: {type(ex).__name__}: {str(ex)[:120]}")
+            print(f"  ERR {name}: {error_text(ex)}")
+        finally:
+            release_tracked()
         if not ok:
             fails.append(name)
             print(f"  FAIL {name}")
@@ -87,19 +92,17 @@ def main() -> int:
     # Cross product on the sensitive subset
     for parts in (7, 64):
         for aqe in ("true", "false"):
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            confs = {"spark.sql.shuffle.partitions": str(parts), "spark.sql.adaptive.enabled": aqe}
             label = f"sensitive sp={parts} aqe={aqe}"
-            all_fails[label] = _run(spark, con, sf_dir, SENSITIVE, label)
+            all_fails[label] = _run(spark, con, sf_dir, SENSITIVE, confs, label)
 
     if not quick:
-        # Full registry at the two partition values, AQE default (on)
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        # Full registry at the two partition values, AQE as prep() sets it (on)
         names = _oracle_names()
         for parts in (7, 64):
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
             label = f"full sp={parts}"
-            all_fails[label] = _run(spark, con, sf_dir, names, label)
+            confs = {"spark.sql.shuffle.partitions": str(parts)}
+            all_fails[label] = _run(spark, con, sf_dir, names, confs, label)
 
     bad = {k: v for k, v in all_fails.items() if v}
     if bad:

@@ -15,7 +15,7 @@ query is recorded and the rest still run, and plan-internal persists are
 drained after every query. With OUT, the results are written there as
 JSON, stamped with the git tree, whether it was dirty, and the time.
 The session is a vanilla ``local[32]`` one, as the driver's; its heap
-is ``SPARK_GRAFT_DRIVER_MEM`` when that is set.
+is ``session.driver_memory()``.
 """
 
 from __future__ import annotations
@@ -26,10 +26,12 @@ import subprocess
 import sys
 import time
 
+from _harness import error_text
 from _oracle import REPO, duckdb_views, frames_equal, gate_queries  # puts REPO on sys.path
 
 from data_etl_spark.cache import release_tracked
 from data_etl_spark.plans import CAPPED_QUERIES, REGISTRY
+from data_etl_spark.session import driver_memory
 
 
 def check(spark, con, sf_dir: str, names):
@@ -58,7 +60,7 @@ def check(spark, con, sf_dir: str, names):
                 if diff:
                     row["err"] = diff[:300]
         except Exception as ex:  # noqa: BLE001 — record, keep checking
-            row.update(hash_match=False, err=f"{type(ex).__name__}: {ex}"[:300])
+            row.update(hash_match=False, err=error_text(ex))
         finally:
             release_tracked()
         yield name, row
@@ -88,10 +90,9 @@ def main() -> int:
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
 
-    builder = SparkSession.builder.master("local[32]").appName("oracle")
-    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
-        builder = builder.config("spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEM"])
-    spark = builder.getOrCreate()
+    # no conf is set but the heap, so the session stays the driver's vanilla one
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {driver_memory()} pyspark-shell"
+    spark = SparkSession.builder.master("local[32]").appName("oracle").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb_views(sf_dir)
 

@@ -194,6 +194,28 @@ def test_ann_index_build_and_search(pipe, docs):
         assert h.score <= 1.000001
 
 
+def test_ann_index_dropped_by_a_commit(pipe, docs):
+    """A commit drops the IVF copy: it indexes rows the index no longer
+    holds, so ann_search asks for a rebuild instead of serving them."""
+    pipe.ingest(docs)
+    pipe.build_ann_index(n_cells=3, kmeans_iter=2)
+    names = [r.filename for r in pipe.index_table().select("filename").distinct().collect()]
+    pipe.delete_documents(names)
+    assert pipe.index_table().count() == 0
+    with pytest.raises(ValueError, match="build_ann_index"):
+        pipe.ann_search(["word1 word1"], k=3)
+
+
+def test_ann_index_outlives_the_pipeline_that_built_it(pipe, docs, spark):
+    pipe.ingest(docs)
+    pipe.build_ann_index(n_cells=3, kmeans_iter=2)
+    queries = ["word1 word1", "word5"]
+    rows = sorted(pipe.ann_search(queries, k=2).collect())
+    again = ETLPipeline(spark, pipe.index_path, pipe.config)
+    assert sorted(again.ann_search(queries, k=2).collect()) == rows
+    assert rows
+
+
 def test_save_config_merges_types(pipe):
     c1 = pipe.save_config("qdrant", "jina/jina-embeddings-v2-small-en")
     assert c1["types"] == ["qdrant"] and c1["model"] == "jina_jina-embeddings-v2-small-en"

@@ -90,3 +90,4 @@ def test_warm_up_and_sweep_drain_and_report_failures(spark, sf_dir):
     assert [(name, err is None) for name, _, _, err in runs] == [
         ("q_harness_broken", False), (STUB, True)
     ] * 2
+    assert all("no_such_table" in err for _, _, _, err in runs if err)

@@ -15,15 +15,10 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 
 #: (path, pattern) pairs allowed to call the raw API.
-#: cache.py is the wrapper implementation itself. etl.py's
-#: _ann_centroids checkpoint is INDEX-LIFETIME state, not plan-internal:
-#: it must survive release_tracked() between harness queries because
-#: ann_search reads it for as long as the EtlProcessor lives, and it is
-#: k centroid rows (bounded by n_cells), not a corpus-scale block.
+#: cache.py is the wrapper implementation itself.
 ALLOWED = {
     ("data_etl_spark/cache.py", ".persist("),
     ("data_etl_spark/cache.py", ".localCheckpoint("),
-    ("data_etl_spark/etl.py", "self._ann_centroids = cent.localCheckpoint("),
 }
 
 _RAW = re.compile(r"\.(persist|localCheckpoint)\s*\(")
@@ -110,4 +105,23 @@ def test_oracle_checks_go_through_one_module():
     assert not offenders, (
         "DuckDB view registration or an oracle comparator outside "
         "scripts/_oracle.py — use duckdb_views/frames_equal from there:\n" + "\n".join(offenders)
+    )
+
+
+#: how big a session is (cores, heap) is decided in data_etl_spark/session.py;
+#: only that module and its own tests (tests/test_session.py) name these
+_SIZING_OWNED = ("sched_getaffinity", "SC_PHYS_PAGES", "SPARK_GRAFT_DRIVER_MEM", "spark.driver.memory")
+
+
+def test_sessions_are_sized_in_one_module():
+    offenders = []
+    owners = {REPO / "data_etl_spark" / "session.py", REPO / "tests" / "test_session.py"}
+    owners.add(Path(__file__).resolve())
+    for path in sorted({*_source_files(), *(REPO / "tests").glob("*.py")} - owners):
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            if any(token in line for token in _SIZING_OWNED):
+                offenders.append(f"{path.relative_to(REPO)}:{lineno}: {line.strip()}")
+    assert not offenders, (
+        "session sizing outside data_etl_spark/session.py — use build_session "
+        "or driver_memory from there:\n" + "\n".join(offenders)
     )
