@@ -16,6 +16,15 @@ server (SURVEY.md §3: the only process boundaries are Spark's own).
 Search (V4) is cosine top-k against the same table, cost-gated between
 exact brute force and an in-memory IVF rewrite (``ETLPipeline.search``).
 
+Every commit stamps a new index version: its last step renames the
+commit record to ``<index>.version``. Readers key what they keep on
+it — the read relation (and so Spark's file listing) and search's
+persisted corpus, row count and cell assignment are built once per
+version, the way the reference builds its index once and queries it
+many times (`index_manager.py:96-128`). A commit by any pipeline or
+process on the same path moves the version, so no reader serves rows
+from before it.
+
 Scale posture: ingest batches broadcast in the anti-join side of the
 upsert (the 100 TB index never shuffles on ingest); the index table is
 written partitioned by a stable bucket of the document key so a
@@ -32,11 +41,13 @@ import shutil
 import zlib
 from collections.abc import Iterable, Sequence
 from dataclasses import dataclass
+from uuid import uuid4
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .cache import tracked_persist
 from .functions import text as TX
 from .operators import chunking as CH
 from .operators.export import export_files
@@ -95,6 +106,23 @@ def fake_embedding(col: Column) -> Column:
         for i in range(FAKE_EMBED_DIM)
     ]
     return F.array(*parts)
+
+
+@dataclass
+class _SearchState:
+    """What :meth:`ETLPipeline.search` keeps for one index version: the
+    persisted (c_vec_id, c_emb) corpus and its row count, and once the
+    IVF branch ran, (n_centroids, centroids, persisted corpus cells)."""
+
+    version: str | None
+    corpus: DataFrame
+    n_corpus: int
+    cells: tuple[int, DataFrame, DataFrame] | None = None
+
+    def unpersist(self) -> None:
+        self.corpus.unpersist()
+        if self.cells is not None:
+            self.cells[2].unpersist()
 
 
 #: Env var pointing at a JSON config file (ETLConfig.from_json default).
@@ -162,6 +190,9 @@ class ETLPipeline:
         self.spark = spark
         self.index_path = index_path
         self.config = config or ETLConfig()
+        #: (version, relation) of :meth:`index_table`'s last read
+        self._read: tuple[str, DataFrame] | None = None
+        self._search: _SearchState | None = None
         # heal any crash-interrupted commit before the first read (one
         # stat when the index is clean — see recover())
         self.recover()
@@ -171,17 +202,37 @@ class ETLPipeline:
     def _exists(self) -> bool:
         return bool(_bucket_dirs(self.index_path))
 
+    def _version(self) -> str | None:
+        """The index's commit version: the token the last commit stamped
+        into ``<index>.version`` (:meth:`_swap_buckets`); ``""`` for an
+        index no commit stamped, None while there is no index. A stat and
+        one small file read on the driver, no Spark job."""
+        if not self._exists():
+            return None
+        try:
+            with open(self.index_path + ".version") as f:
+                return json.load(f)["version"]
+        except FileNotFoundError:
+            return ""
+
     def index_table(self, buckets: set[int] | None = None) -> DataFrame:
         """Current index contents (empty-but-typed if never written).
 
+        The read relation is built once per index version and reused:
+        Spark lists the `bucket=` dirs when it builds the relation, so
+        the listing runs once per commit, not once per call.
+
         With ``buckets``, a partition-pruned read of just those `bucket=`
-        dirs: the filter is on the partition column, so Spark lists/reads
-        only them — at 100 TB an ingest touches |batch buckets| files, not
+        dirs: the filter is on the partition column, so Spark reads only
+        them — at 100 TB an ingest touches |batch buckets| files, not
         the table.
         """
-        if not self._exists():
+        version = self._version()
+        if version is None:
             return self.spark.createDataFrame([], INDEX_SCHEMA)
-        df = self.spark.read.schema(_READ_SCHEMA).parquet(self.index_path)
+        if self._read is None or self._read[0] != version:
+            self._read = (version, self.spark.read.schema(_READ_SCHEMA).parquet(self.index_path))
+        df = self._read[1]
         if buckets is not None:
             df = df.filter(F.col("bucket").isin(*sorted(buckets)))
         return df.select(INDEX_SCHEMA.fieldNames())
@@ -219,11 +270,14 @@ class ETLPipeline:
         1. stage ``df`` fully under ``<index>.staging`` (this runs the
            plan, which may lazily read the live buckets, before any live
            dir is touched);
-        2. write ``<index>.intent`` — the commit point — and drop the
-           ANN copy ``<index>.ivf``, which indexes the old rows;
+        2. write ``<index>.intent`` with a fresh version token — the
+           commit point — and drop the ANN copy ``<index>.ivf``, which
+           indexes the old rows;
         3. per bucket, rename the live dir aside to ``<index>.old`` and
            move the staged dir in (a bucket with no staged rows drops);
-        4. delete the aside and staging dirs, then the intent.
+        4. delete the aside and staging dirs, then rename the intent to
+           ``<index>.version``: the new version is what readers see
+           (:meth:`_version`), so nothing built on the old one is reused.
 
         A crash before 2 leaves the pre state; from 2 on, :meth:`recover`
         rolls forward to the post state. Buckets not named are never
@@ -252,7 +306,12 @@ class ETLPipeline:
         # keep live) from "staged empty = drop" (never staged, remove live).
         _write_json(
             self.index_path + ".intent",
-            {"op": op, "buckets": sorted(buckets), "staged": sorted(_bucket_dirs(staging))},
+            {
+                "op": op,
+                "buckets": sorted(buckets),
+                "staged": sorted(_bucket_dirs(staging)),
+                "version": uuid4().hex,
+            },
         )
         if os.path.exists(self.index_path + ".ivf"):
             shutil.rmtree(self.index_path + ".ivf")
@@ -267,7 +326,7 @@ class ETLPipeline:
                 os.replace(stage_b, live_b)
         shutil.rmtree(aside)
         shutil.rmtree(staging)
-        os.remove(self.index_path + ".intent")
+        os.replace(self.index_path + ".intent", self.index_path + ".version")
 
     # -- crash recovery --------------------------------------------------
 
@@ -275,12 +334,14 @@ class ETLPipeline:
         """Heal a commit (:meth:`_swap_buckets`) a crash interrupted.
 
         The ``<index>.intent`` file is the commit record: written after
-        staging is complete and before any live dir is touched, removed
-        after cleanup.
+        staging is complete and before any live dir is touched, renamed
+        to ``<index>.version`` after cleanup.
 
         - intent present  -> the staged result is the table's truth:
           roll FORWARD (finish the interrupted renames/deletes, drop the
-          stale ANN copy) to the post-operation state;
+          stale ANN copy) to the post-operation state, and stamp its
+          version as the commit would have (an intent written without a
+          token gets a fresh one);
         - intent absent   -> the operation never committed: live is the
           pre-operation state, any scratch dirs are garbage the next
           commit clears.
@@ -333,7 +394,9 @@ class ETLPipeline:
         for p in (staging, aside, self.index_path + ".ivf"):
             if os.path.exists(p):
                 shutil.rmtree(p)
-        os.remove(intent_file)
+        if "version" not in intent:
+            _write_json(intent_file, {**intent, "version": uuid4().hex})
+        os.replace(intent_file, self.index_path + ".version")
         return [intent["op"]]
 
     # -- the dataflow --------------------------------------------------------
@@ -648,12 +711,52 @@ class ETLPipeline:
         ``threshold`` rows, the in-memory IVF rewrite above it — the
         SURVEY §4 planner rule (operators/planner.py::auto_knn) exposed
         at the pipeline API, no prebuilt index required (build_ann_index
-        + ann_search remain the persisted-layout path)."""
-        from .operators.planner import auto_knn
+        + ann_search remain the persisted-layout path).
+
+        State per index version (:meth:`_version`): the first call of a
+        version persists the (c_vec_id, c_emb) corpus and counts it; the
+        first that takes the IVF branch picks the centroids and persists
+        the corpus cell assignment. Later calls pass them to ``auto_knn``
+        and issue only query jobs. A commit or a ``release_tracked()``
+        drain rebuilds the state on the next call; the rows are those of
+        the stateless plan either way."""
+        from .operators import planner
+        from .operators.ivf import assign_cells
+
+        st = self._search_state()
+
+        def cells(n_centroids: int) -> tuple[DataFrame, DataFrame]:
+            if st.cells is None or st.cells[0] != n_centroids or not st.cells[2].is_cached:
+                if st.cells is not None:
+                    st.cells[2].unpersist()
+                cent = planner.ivf_centroids(st.corpus, n_centroids)
+                c_cells = tracked_persist(assign_cells(st.corpus, cent, "c_vec_id", "c_emb"))
+                st.cells = (n_centroids, cent, c_cells)
+            return st.cells[1], st.cells[2]
 
         qdf = self._query_frame(queries).drop("query_text")
-        corpus = self.index_table().select(_chunk_id(), F.col("embedding").alias("c_emb"))
-        return auto_knn(qdf, corpus, k=k, threshold=threshold)
+        # looked up on the module at call time: the benchmark's tracer
+        # wraps planner.auto_knn
+        return planner.auto_knn(
+            qdf, st.corpus, k=k, threshold=threshold, n_corpus=st.n_corpus, cells=cells
+        )
+
+    def _search_state(self) -> _SearchState:
+        """:meth:`search`'s state for the current index version, built
+        when the version moved or a drain unpersisted it."""
+        # the version is read before the corpus: a commit in between
+        # leaves a state keyed on the older version, rebuilt next call
+        version = self._version()
+        st = self._search
+        if st is not None and st.version == version and st.corpus.is_cached:
+            return st
+        if st is not None:
+            st.unpersist()
+        corpus = tracked_persist(
+            self.index_table().select(_chunk_id(), F.col("embedding").alias("c_emb"))
+        )
+        self._search = _SearchState(version, corpus, corpus.count())
+        return self._search
 
     def near_dups(self, threshold: int = 4096, tau: float = 0.5) -> DataFrame:
         """Cost-gated near-duplicate chunk pairs over the index — the

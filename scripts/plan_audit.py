@@ -56,41 +56,92 @@ _BOUNDING = ("GlobalLimit", "CollectLimit", "LocalLimit", "TakeOrderedAndProject
 _AGGS = ("HashAggregate", "SortAggregate", "ObjectHashAggregate")
 
 
+#: a tree line's drawing prefix, and the node after it: ``* `` marks a
+#: codegen'd node of an executed plan, and text after the id (a query
+#: stage's ``, Statistics(...)``, a scan's ``(columnarIn=...)``) is dropped
+_TREE_LINE = re.compile(r"^([ :+|-]*)(?:\* )?([A-Za-z][\w .]*?)\s*\((\d+)\)(?:[ ,].*)?$")
+_SECTION = re.compile(r"^\s*\+- == (Final|Current|Initial) Plan ==")
+
+
+def _may_parent(parent: dict, node: dict) -> bool:
+    """Operator ids number a plan in post-order, so a child's id is below
+    its parent's; a cached relation and its plan are numbered on their
+    own."""
+    return node["id"] < parent["id"] or parent["name"].startswith("InMemory")
+
+
 def _parse_tree(plan: str) -> list[dict]:
     """Parse the formatted plan's tree section into nodes with
     (id, name, depth, children). Depth derives from the 3-char
-    tree-drawing prefix (`+- `, `:- `, `:  `, `   `)."""
+    tree-drawing prefix (`+- `, `:- `, `:  `, `   `).
+
+    An executed adaptive plan draws its ``AdaptiveSparkPlan`` node
+    followed by two sections, ``== Final Plan ==`` (what ran) and
+    ``== Initial Plan ==``, each a tree drawn from its own column. A
+    section nested in another (an executed plan cached under an
+    ``InMemoryRelation``) starts from a column unrelated to its owner's,
+    so lines are read in frames: the final section's root becomes the
+    ``AdaptiveSparkPlan``'s child, the initial section is skipped (every
+    operator counts once, under the parent it ran under), and a line
+    belongs to the innermost frame whose column it is indented to with
+    blanks only and that holds a node that can be its parent: drawn 3
+    columns left (6 under an ``InMemoryRelation``), with a higher id."""
     nodes: list[dict] = []
-    stack: list[dict] = []  # last node seen at each depth
-    in_tree = False
+    frames: list[dict] = []
     for line in plan.splitlines():
         # tree sections: the main plan plus one per subquery (subquery
         # trees host BNLJs too — bounded scalar subqueries); each runs
         # until its first blank line
         if line.startswith("== Physical Plan ==") or re.match(r"^Subquery:\d+", line):
-            in_tree = True
-            stack = []
+            frames = [{"base": 0, "stack": [], "owner": None, "skip": False}]
             continue
         if not line.strip():
-            in_tree = False
+            frames = []
             continue
-        if not in_tree:
+        if not frames:
             continue
-        m = re.match(r"^([ :+|-]*?)([A-Za-z][\w .]*?)\s*\((\d+)\)\s*$", line)
+        sec = _SECTION.match(line)
+        if sec:
+            base = line.index("==")
+            if sec.group(1) == "Initial":
+                # the owner's final section is done: close it and what it held
+                while len(frames) > 1 and frames[-1]["base"] != base:
+                    frames.pop()
+                if len(frames) > 1:
+                    frames[-1].update(stack=[], skip=True)
+                else:
+                    frames.append({"base": base, "stack": [], "owner": None, "skip": True})
+            else:
+                owner = frames[-1]["stack"][-1] if frames[-1]["stack"] else None
+                frames.append({"base": base, "stack": [], "owner": owner, "skip": frames[-1]["skip"]})
+            continue
+        m = _TREE_LINE.match(line)
         if not m:
             continue
-        prefix, name, op_id = m.group(1), m.group(2).strip(), int(m.group(3))
+        plen = len(m.group(1))
+        node = {"id": int(m.group(3)), "name": m.group(2).strip(), "plen": plen, "children": []}
+        while len(frames) > 1:
+            f = frames[-1]
+            kept = [n for n in f["stack"] if n["plen"] < plen]
+            if not line[: f["base"]].strip() and (
+                (not f["stack"] and plen == f["base"])
+                or (kept and plen - kept[-1]["plen"] in (3, 6) and _may_parent(kept[-1], node))
+            ):
+                break
+            frames.pop()
+        f = frames[-1]
         # indentation units are NOT uniform (InMemoryRelation subtrees
         # indent by 6, everything else by 3), so depth cannot be
         # prefix//3; parent = nearest stack entry with a strictly
         # shorter prefix
-        plen = len(prefix)
-        node = {"id": op_id, "name": name, "plen": plen, "children": []}
-        while stack and stack[-1]["plen"] >= plen:
-            stack.pop()
-        if stack:
-            stack[-1]["children"].append(node)
-        stack.append(node)
+        while f["stack"] and f["stack"][-1]["plen"] >= plen:
+            f["stack"].pop()
+        parent = f["stack"][-1] if f["stack"] else f["owner"]
+        f["stack"].append(node)
+        if f["skip"]:
+            continue
+        if parent is not None:
+            parent["children"].append(node)
         nodes.append(node)
     return nodes
 

@@ -351,6 +351,7 @@ def test_compact_restores_one_file_per_bucket(pipe, docs):
     import shutil
 
     pipe.ingest(docs)
+    n_rows = pipe.index_table().count()
     # simulate small-file accretion: add extra part files to one bucket
     bucket_dirs = glob.glob(os.path.join(pipe.index_path, "bucket=*"))
     assert bucket_dirs
@@ -364,8 +365,13 @@ def test_compact_restores_one_file_per_bucket(pipe, docs):
             )
     shutil.rmtree(target + ".tmp")
     assert len(glob.glob(os.path.join(target, "*.parquet"))) > 1
+    # files written outside the commit path move no index version: a
+    # pipeline that read the index before keeps its listing, a new one
+    # lists them
+    pipe = ETLPipeline(pipe.spark, pipe.index_path, pipe.config)
     key = lambda d: (d["filename"], d["chunk_idx"], d["chunk_text"])
     before = sorted((r.asDict() for r in pipe.index_table().collect()), key=key)
+    assert len(before) > n_rows
     pipe.compact()
     after = sorted((r.asDict() for r in pipe.index_table().collect()), key=key)
     # contents unchanged (incl. the duplicate rows we appended)...
@@ -406,6 +412,117 @@ def test_cost_gated_search_both_branches(pipe, docs, spark):
     plan2 = res2._jdf.queryExecution().executedPlan().toString()
     assert "cell" in plan2
     assert len(res2.collect()) >= 1
+
+
+def _search_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _twin(spark, path):
+    return ETLPipeline(spark, str(path), ETLConfig(chunk_size=100, chunk_overlap=20, n_buckets=4))
+
+
+@pytest.mark.parametrize("threshold", [10**6, 1], ids=["exact", "ivf"])
+def test_search_sees_another_pipelines_commit(pipe, docs, spark, tmp_path, threshold):
+    """A pipeline that already searched (and so holds search state) sees
+    a commit another pipeline made on the same path: the rewritten
+    document's new first chunk ranks first for its own text, the deleted
+    document is gone, and the rows are those of a pipeline that never
+    held state."""
+    update = spark.createDataFrame(
+        [("doc_0.pdf", "entirely new body " * 60)], "filename string, text string"
+    )
+    pipe.ingest(docs)
+    old = pipe.index_table().filter("chunk_idx = 0").select("filename", "chunk_text").collect()
+    old = {r.filename: r.chunk_text for r in old}
+    pipe.search([old["doc_1.txt"]], k=3, threshold=threshold).collect()
+
+    other = _twin(spark, pipe.index_path)
+    other.ingest(update)
+    other.delete_documents(["doc_1.txt"])
+    new0 = (
+        other.index_table()
+        .filter("filename = 'doc_0.pdf' AND chunk_idx = 0")
+        .collect()[0]
+        .chunk_text
+    )
+
+    qs = [new0, old["doc_1.txt"], old["doc_0.pdf"]]
+    rows = _search_rows(pipe.search(qs, k=3, threshold=threshold))
+    assert [r for r in rows if r[0] == 0 and r[1] == 1][0][2] == "doc_0.pdf#0"
+    assert not [r for r in rows if r[2].startswith("doc_1.txt#")]
+    twin = _twin(spark, tmp_path / "twin")
+    twin.ingest(docs)
+    twin.ingest(update)
+    twin.delete_documents(["doc_1.txt"])
+    assert rows == _search_rows(twin.search(qs, k=3, threshold=threshold))
+
+
+def test_search_after_a_drain_rebuilds_its_state(pipe, docs, spark):
+    """release_tracked() between two searches: the second returns the same
+    rows and persists its state again instead of recomputing it from the
+    files on every later call."""
+    from data_etl_spark.cache import release_tracked
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    pipe.ingest(docs)
+    qs = ["word1 word1", "word4"]
+    first = _search_rows(pipe.search(qs, k=2, threshold=1))
+    release_tracked()
+    drained = persisted()
+    assert _search_rows(pipe.search(qs, k=2, threshold=1)) == first
+    assert persisted() > drained
+
+
+def _jobs(spark, group, run):
+    """(jobs, tasks per job) of ``run()`` under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    ids = sorted(st.getJobIdsForGroup(group))
+    return [
+        sum(st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds if st.getStageInfo(s))
+        for j in ids
+    ]
+
+
+@pytest.mark.parametrize("threshold", [10**6, 1], ids=["exact", "ivf"])
+def test_repeat_search_issues_only_query_jobs(spark, tmp_path, threshold):
+    """On an unchanged index a second search lists no files, counts
+    nothing and assigns no corpus cells: at most 5 jobs, none with a task
+    per `bucket=` dir (the partition-listing job). Its rows equal the
+    stateless auto_knn over a fresh read of the index."""
+    import os
+
+    from data_etl_spark.etl import _chunk_id, fake_embedding
+    from data_etl_spark.operators.planner import auto_knn
+
+    p = ETLPipeline(spark, str(tmp_path / "index"), ETLConfig(chunk_size=100, chunk_overlap=20))
+    rows = [(f"d{i}.txt", f"w{i} v{i % 7} u{i % 3} " * (10 + i % 9)) for i in range(90)]
+    p.ingest(spark.createDataFrame(rows, "filename string, text string"))
+    n_dirs = sum(d.startswith("bucket=") for d in os.listdir(p.index_path))
+    assert n_dirs > 32  # Spark lists more than 32 dirs with a job
+    qs = ["w1 v1 u1", "w40 v5", "u2 u2 u2", "v3"]
+    p.search(qs, k=3, threshold=threshold).collect()
+    got = []
+    tasks = _jobs(spark, f"repeat-search-{threshold}", lambda: got.extend(
+        p.search(qs, k=3, threshold=threshold).collect()
+    ))
+    assert len(tasks) <= 5, tasks
+    assert n_dirs not in tasks, tasks
+
+    probes = spark.createDataFrame(list(enumerate(qs)), "q_vec_id long, text string").select(
+        "q_vec_id", fake_embedding(F.col("text")).alias("q_emb")
+    )
+    corpus = spark.read.parquet(p.index_path).select(_chunk_id(), F.col("embedding").alias("c_emb"))
+    want = auto_knn(probes, corpus, k=3, threshold=threshold)
+    assert sorted(tuple(r) for r in got) == _search_rows(want)
 
 
 def test_ingest_observes_batch_metrics(pipe, docs):
@@ -491,16 +608,20 @@ def _index_rows(pipe):
 
 class _CrashAfter:
     """Make os.replace raise after N successful calls — the crash
-    injection point between the commit protocol's rename steps."""
+    injection point between the commit protocol's rename steps. With
+    ``dst_suffix``, only renames onto a path ending in it count."""
 
-    def __init__(self, monkeypatch, n: int):
+    def __init__(self, monkeypatch, n: int, dst_suffix: str = ""):
         import os as _os
 
         self.left = n
+        self.dst_suffix = dst_suffix
         self.real = _os.replace
         monkeypatch.setattr("os.replace", self)
 
     def __call__(self, src, dst):
+        if not str(dst).endswith(self.dst_suffix):
+            return self.real(src, dst)
         if self.left <= 0:
             raise OSError("injected crash")
         self.left -= 1
@@ -598,6 +719,35 @@ def test_rewrite_crash_recovers(pipe, docs, tmp_path, monkeypatch, spark, op, cr
     assert not any(
         p.name.endswith((".staging", ".old", ".intent")) for p in tmp_path.iterdir()
     )
+
+
+def test_search_after_recover_from_a_crash_before_the_version_stamp(
+    pipe, docs, spark, tmp_path, monkeypatch
+):
+    """A commit killed after its bucket moves and before the version
+    rename: once recover() has rolled it forward, a pipeline that searched
+    before the commit returns the post-state rows."""
+    update = spark.createDataFrame(
+        [("doc_0.pdf", "post-crash body " * 50), ("doc_9.md", "fresh doc " * 50)],
+        "filename string, text string",
+    )
+    pipe.ingest(docs)
+    twin = _twin(spark, tmp_path / "twin")
+    twin.ingest(docs)
+    twin.ingest(update)
+    qs = ["post-crash body " * 5, "fresh doc fresh doc", "word0 word0"]
+    for threshold in (10**6, 1):
+        pipe.search(qs, k=3, threshold=threshold).collect()
+
+    writer = _twin(spark, pipe.index_path)
+    crash = _CrashAfter(monkeypatch, 0, dst_suffix=".version")
+    with pytest.raises(OSError):
+        writer.ingest(update)
+    monkeypatch.setattr("os.replace", crash.real)
+    assert pipe.recover() == ["swap"]
+    for threshold in (10**6, 1):
+        got = _search_rows(pipe.search(qs, k=3, threshold=threshold))
+        assert got == _search_rows(twin.search(qs, k=3, threshold=threshold))
 
 
 def test_pipeline_constructor_auto_heals(pipe, docs, spark, tmp_path, monkeypatch):

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 
@@ -133,3 +134,26 @@ Join condition: None
 
 def test_explode_of_global_aggregate_build_is_unproven():
     assert bnl_boundedness(_EXPLODED_GLOBAL_LIST_BUILD) == (0, 1)
+
+
+# the tree of q_bpe_encode's formatted plan after collect() (sf0.001):
+# codegen markers (`* `), query stages with a `, Statistics(...)` suffix,
+# and Final/Initial sections, nested under InMemoryRelation at columns
+# unrelated to their owner's; one BNLJ ran, drawn in the final plan
+_EXECUTED = (Path(__file__).parent / "data" / "executed_plan_q_bpe_encode.txt").read_text()
+
+
+def test_executed_adaptive_plan_is_read_from_its_final_plan():
+    nodes = _parse_tree(_EXECUTED)
+    by_id = {n["id"]: n for n in nodes}
+    bnlj = [n for n in nodes if n["name"].startswith("BroadcastNestedLoopJoin")]
+    # the one that ran, once, with its probe and its query-stage build side
+    assert [(n["id"], [c["id"] for c in n["children"]]) for n in bnlj] == [(38, [13, 37])]
+    assert [c["id"] for c in by_id[39]["children"]] == [38]
+    # the cached plan's final root hangs under its AdaptiveSparkPlan
+    assert [c["id"] for c in by_id[33]["children"]] == [26]
+    assert bnl_boundedness(_EXECUTED) == (1, 0)
+    # and the bound is proven from that build side: without its limit
+    # the same tree is unproven
+    unbounded = _EXECUTED.replace("TakeOrderedAndProject (25)", "Project (25)")
+    assert bnl_boundedness(unbounded) == (0, 1)

@@ -125,3 +125,41 @@ def test_sessions_are_sized_in_one_module():
         "session sizing outside data_etl_spark/session.py — use build_session "
         "or driver_memory from there:\n" + "\n".join(offenders)
     )
+
+
+def _index_reads(source: str) -> list[str]:
+    """Functions of ``source`` other than ``index_table`` that call
+    ``spark.read`` on an expression naming ``index_path``."""
+    import ast
+
+    out = []
+    for fn in ast.walk(ast.parse(source)):
+        if not isinstance(fn, ast.FunctionDef) or fn.name == "index_table":
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and re.search(r"\bread\b", ast.unparse(node.func))
+                and "index_path" in ast.unparse(node)
+            ):
+                out.append(f"{fn.name}:{node.lineno}: {ast.unparse(node)}")
+    return out
+
+
+def test_only_index_table_reads_the_index():
+    """Readers of the index key what they keep on its commit version
+    through ETLPipeline.index_table; a direct ``spark.read`` of the index
+    path elsewhere in etl.py would serve a listing from before a commit."""
+    injected = (
+        "class P:\n"
+        "    def index_table(self):\n"
+        "        return self.spark.read.parquet(self.index_path)\n"
+        "    def search(self):\n"
+        "        return self.spark.read.schema(S).parquet(self.index_path + '')\n"
+    )
+    assert [r.split(":")[0] for r in _index_reads(injected)] == ["search"]
+    offenders = _index_reads((REPO / "data_etl_spark" / "etl.py").read_text())
+    assert not offenders, (
+        "data_etl_spark/etl.py reads the index outside index_table — go "
+        "through index_table():\n" + "\n".join(offenders)
+    )
