@@ -74,6 +74,12 @@ _TOUCHED_BY_ROUND[15] = frozenset({
     # kNN/IVF/recall queries moved onto the same kernel with optimized
     # plans unchanged:
     "q_hybrid_rrf",
+    # r15: operators/dedup.py::shared_seed_pairs builds its per-doc seed
+    # array through map_from_entries, so a repeated (doc, seed) row
+    # raises instead of pairing equal seeds. Rows identical (sf0.01),
+    # optimized plan changed (the array fields are key/value), re-verify:
+    "q_dup_triangles",
+    "q_pagerank_dupgraph",
 })
 
 

@@ -1,4 +1,5 @@
-"""Session-lifetime cache bookkeeping for plan-internal persists.
+"""Session-lifetime cache bookkeeping for plan-internal persists and
+checkpoints.
 
 Some operators persist a corpus-scale intermediate that outlives the
 function that created it (e.g. :func:`operators.planner.auto_dedup`'s
@@ -14,6 +15,16 @@ them. The drain point for timing runs is ``scripts/_harness.py``: every
 timed rep and every warm-up run ends with ``release_tracked()``, so no
 run reads blocks an earlier one cached. The driver runs <=50 queries
 and exits, so its leak window is bounded by design.
+
+``localCheckpoint`` persists at the RDD layer, outside the CacheManager,
+so ``DataFrame.unpersist()`` never reaches its blocks: they are dropped
+by id through the JVM's persistent-RDD registry, a bookkeeping that
+lives in this module alone. ``tracked_local_checkpoint`` is for a table
+the whole query reads (e.g. connected components' symmetrized edges);
+``CheckpointRotation`` is for an iterative loop's per-round tables, so
+every loop (BPE, k-core, k-center, PCA, k-means, connected components)
+holds its newest round and nothing older. ``release_tracked`` drains
+what is left of both.
 """
 
 from __future__ import annotations
@@ -27,10 +38,7 @@ _LOG = logging.getLogger(__name__)
 
 _TRACKED: list[DataFrame] = []
 
-#: (SparkContext, [rdd ids]) for localCheckpoint blocks — checkpointed
-#: RDDs are persisted at the RDD layer, OUTSIDE the CacheManager, so
-#: DataFrame.unpersist() never reaches them; they are droppable only by
-#: id through the JVM's persistent-RDD registry.
+#: (SparkContext, [rdd ids]) per tracked localCheckpoint
 _TRACKED_CKPT: list[tuple[object, list[int]]] = []
 
 
@@ -48,59 +56,77 @@ def tracked_persist(
     return df
 
 
-def tracked_local_checkpoint(
-    df: DataFrame, eager: bool = True, handle_out: list | None = None
-) -> DataFrame:
-    """``df.localCheckpoint(eager)`` whose blocks release_tracked can drop.
-
-    localCheckpoint persists its RDD at the RDD layer (not the
-    CacheManager), so the blocks survive ``DataFrame.unpersist()`` and
-    linger until the JVM's ContextCleaner GCs them — a deterministic
-    leak for harnesses that run ~200 queries in one session (the r9
-    drain test caught q_dedup_clusters leaving 3 checkpoint RDDs).
-    This wrapper diffs the JVM persistent-RDD registry around the
-    checkpoint call and records the new ids for explicit unpersist at
-    release time. Single-threaded plan construction is assumed (true
-    everywhere in this repo: checkpoints happen inside one query's
-    eager build)."""
-    sc = df.sparkSession.sparkContext
-    before = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    out = df.localCheckpoint(eager=eager)
-    after = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    new_ids = sorted(after - before)
-    if new_ids:
-        entry = (sc, new_ids)
-        _TRACKED_CKPT.append(entry)
-        # rotation support (see release_ckpt): the caller gets the
-        # bookkeeping entry so it can drop THIS checkpoint's blocks as
-        # soon as its successor is materialized
-        if handle_out is not None:
-            handle_out.append(entry)
-    return out
+def persistent_rdd_ids(sc) -> set[int]:
+    """Ids of every RDD the JVM of ``sc`` holds persisted, tracked or not."""
+    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
 
 
-def release_ckpt(entry: tuple) -> None:
-    """Drop one tracked_local_checkpoint's blocks EARLY (the rotation
-    primitive behind the iterative loops — _bpe_learn, k-center,
-    k-core): ``entry`` is what tracked_local_checkpoint appended to the
-    caller's ``handle_out`` list. Removes the bookkeeping entry so
-    release_tracked doesn't double-drop.
-
-    (A tracked_persist-layer sibling, release_one, existed r11-r12 but
-    never gained a production caller — single-action lazy plans cannot
-    release mid-plan, and every in-repo iterative loop rotates via
-    localCheckpoint — so it was removed in r13; release_tracked is the
-    drain for plain persists.)"""
-    try:
-        _TRACKED_CKPT.remove(entry)
-    except ValueError:
-        pass
-    sc, ids = entry
+def unpersist_rdds(sc, ids) -> int:
+    """Drop the blocks of the persisted RDDs ``ids``; returns how many
+    were still held."""
     registry = sc._jsc.getPersistentRDDs()
+    n = 0
     for i in ids:
         jrdd = registry.get(i)
         if jrdd is not None:
             jrdd.unpersist(False)
+            n += 1
+    return n
+
+
+def _checkpoint(df: DataFrame) -> tuple[DataFrame, tuple]:
+    """Eager ``df.localCheckpoint()`` and its tracked entry, the ids it
+    added to the registry (plan construction is single-threaded)."""
+    sc = df.sparkSession.sparkContext
+    before = persistent_rdd_ids(sc)
+    out = df.localCheckpoint(eager=True)
+    entry = (sc, sorted(persistent_rdd_ids(sc) - before))
+    _TRACKED_CKPT.append(entry)
+    return out, entry
+
+
+def tracked_local_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``df.localCheckpoint()`` whose blocks release_tracked drops,
+    for a table the whole query reads. Per-round tables of an iterative
+    loop go through :class:`CheckpointRotation` instead."""
+    return _checkpoint(df)[0]
+
+
+class CheckpointRotation:
+    """The per-round tables of one iterative loop, one round resident.
+
+    A round's table is computed from its predecessor's, so the order is
+    fixed: ``checkpoint`` materializes the new round first and only then
+    drops the previous round's blocks. Dropped the other way round, the
+    new checkpoint would have to recompute from blocks that are gone
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). The same rule holds for a
+    per-round result that outlives its round, such as a loop's 1-row
+    winner feeding a lazy output union: ``keep`` caches it and fills
+    the cache now, while the round it reads is still resident, since a
+    cache miss after the rotation could not recompute it. The newest
+    round stays tracked until ``release_tracked``."""
+
+    def __init__(self) -> None:
+        self._held: tuple | None = None
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """``df`` checkpointed eagerly; the previous round is dropped."""
+        out, entry = _checkpoint(df)
+        self.release()
+        self._held = entry
+        return out
+
+    def release(self) -> None:
+        """Drop the held round now (a no-op once release_tracked drained it)."""
+        if self._held in _TRACKED_CKPT:
+            _TRACKED_CKPT.remove(self._held)
+            unpersist_rdds(*self._held)
+        self._held = None
+
+    def keep(self, df: DataFrame) -> tuple[DataFrame, int]:
+        """``tracked_persist(df)`` filled now; returns it with its row count."""
+        out = tracked_persist(df)
+        return out, out.count()
 
 
 def release_tracked() -> int:
@@ -116,36 +142,16 @@ def release_tracked() -> int:
             # JVM gateway is gone, nothing left to release); a failure
             # on a live session is a real leak signal — log it so the
             # long-lived bench_full JVM doesn't hide cache leaks.
-            if _session_alive(df):
-                _LOG.warning(
-                    "release_tracked: unpersist failed on a live session: %s", exc
-                )
+            _warn_if_alive(df.sparkSession.sparkContext, exc)
     while _TRACKED_CKPT:
         sc, ids = _TRACKED_CKPT.pop()
         try:
-            registry = sc._jsc.getPersistentRDDs()
-            for i in ids:
-                jrdd = registry.get(i)
-                if jrdd is not None:
-                    jrdd.unpersist(False)
-                    n += 1
+            n += unpersist_rdds(sc, ids)
         except Exception as exc:
-            try:
-                alive = sc._jsc is not None
-            except Exception:
-                alive = False
-            if alive:
-                _LOG.warning(
-                    "release_tracked: checkpoint unpersist failed on a "
-                    "live session: %s",
-                    exc,
-                )
+            _warn_if_alive(sc, exc)
     return n
 
 
-def _session_alive(df: DataFrame) -> bool:
-    """True when the dataframe's session still has a live JVM gateway."""
-    try:
-        return df.sparkSession.sparkContext._jsc is not None
-    except Exception:
-        return False
+def _warn_if_alive(sc, exc: Exception) -> None:
+    if getattr(sc, "_jsc", None) is not None:
+        _LOG.warning("release_tracked: unpersist failed on a live session: %s", exc)

@@ -449,10 +449,7 @@ class ETLPipeline:
         exists = self._exists()
         batch = self.gate_extensions(docs, filename_col) if gate else docs
         if not force and exists:
-            seen = self.index_table().select("filename").distinct()
-            batch = batch.join(
-                F.broadcast(seen), batch[filename_col] == seen["filename"], "left_anti"
-            )
+            batch = self._unindexed(batch, filename_col)
         new_chunks = self.chunk_documents(batch, filename_col, text_col)
         # Pipeline observability (DataFrame.observe / CollectMetricsExec):
         # batch metrics ride the write job's own scan — zero extra pass,
@@ -509,6 +506,11 @@ class ETLPipeline:
         )
         return {"n_documents": stats["n_documents"], "n_chunks": stats["n_chunks"]}
 
+    def _unindexed(self, docs: DataFrame, filename_col: str) -> DataFrame:
+        """``docs`` minus the files the index already holds."""
+        seen = self.index_table().select("filename").distinct()
+        return docs.join(F.broadcast(seen), docs[filename_col] == seen["filename"], "left_anti")
+
     def export_markdown(
         self,
         docs: DataFrame,
@@ -559,6 +561,9 @@ class ETLPipeline:
         mapInPandas conversion (U1, error-tolerant) -> the ingest
         dataflow. Failed conversions are dropped like the reference's
         per-file try/except (`etl_processor.py:109-111`), not raised.
+        ``force=False`` drops already-indexed files before conversion, as
+        the reference skips processed files before converting them
+        (`document_processor.py:146-202`): only new files are converted.
         """
         from .operators.convert import to_markdown
         from .sources.files import scan_binary_files
@@ -566,9 +571,12 @@ class ETLPipeline:
         files = scan_binary_files(
             self.spark, input_dir, extensions=self.config.allowed_extensions
         )
+        if not force and self._exists():
+            files = self._unindexed(files, "filename")
         converted = to_markdown(files)
         good = converted.filter(F.col("ok")).select("filename", F.col("markdown").alias("text"))
-        return self.ingest(good, force=force, gate=False)
+        # what is left is new to the index: adding it needs no second skip
+        return self.ingest(good, force=True, gate=False)
 
     def ingest_stream(self, input_dir: str) -> None:
         """Continuous ingestion: new text files are discovered by the

@@ -27,6 +27,12 @@ a union evaluates the candidate-pair subtree twice), and round 0 is
 fused into label initialization (label := min(node, min neighbor) is
 exactly the first hop, computed by the same aggregation that discovers
 the node set).
+Checkpoint rotation (cache.CheckpointRotation): the symmetrized edge
+table lives for the whole loop, while each label table (round 0's
+labels, every 1-hop table, every doubled table) replaces its
+predecessor as soon as it is materialized, so the loop holds the edge
+table plus its newest round however many rounds it runs, and the
+returned labels read that newest round.
 At cluster scale pass ``checkpoint_interval`` to also write a reliable
 checkpoint every K rounds (requires
 ``spark.sparkContext.setCheckpointDir``), bounding recovery cost under
@@ -38,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import tracked_local_checkpoint
+from ..cache import CheckpointRotation, tracked_local_checkpoint
 
 
 def symmetrize_edges(
@@ -78,21 +84,14 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 40,
     checkpoint_interval: int | None = None,
-    assume_distinct: bool = False,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; component = min
     node id reachable. Deterministic (min-label), so oracle-checkable.
 
-    ``assume_distinct=True`` skips the edge-dedup shuffle. Semantically
-    safe with ANY input (min-propagation is idempotent under duplicate
-    edges), but duplicates inflate every per-round join, so only set it
-    when the producer guarantees distinct pairs. Measured sf0.1 warm
-    (q_dedup_clusters 3.99 s -> 5.44 s, q_keep_best 3.30 s -> 3.76 s):
-    skipping was SLOWER here even on already-distinct inputs — the
-    distinct's exchange hash-balances the edge list before the eager
-    checkpoint, and every per-round join inherits that balance. In-repo
-    callers therefore keep the default; the knob exists for producers
-    whose pair list is already hash-partitioned on the pair key.
+    The edge list is always deduplicated: the distinct's exchange
+    hash-balances it before the eager checkpoint, and every per-round
+    join inherits that balance (skipping it measured slower even on
+    already-distinct inputs, q_dedup_clusters 3.99 s -> 5.44 s at sf0.1).
 
     Raises ``RuntimeError`` if labels are still changing after
     ``max_iter`` rounds — partial (unconverged) labels are silently
@@ -100,17 +99,14 @@ def connected_components(
     """
     # Symmetrize with a single evaluation of the (possibly expensive)
     # edges plan (see symmetrize_edges).
-    sym = symmetrize_edges(edges, src, dst)
-    if not assume_distinct:
-        sym = sym.distinct()
-    sym = tracked_local_checkpoint(sym, eager=True)
+    sym = tracked_local_checkpoint(symmetrize_edges(edges, src, dst).distinct())
+    ckpt = CheckpointRotation()
     # Round 0 fused into init: the aggregation that discovers the node
     # set also computes its first hop (label = min(node, min neighbor)).
-    labels = tracked_local_checkpoint(
+    labels = ckpt.checkpoint(
         sym.groupBy("src")
         .agg(F.least(F.col("src"), F.min("dst")).alias("component"))
-        .select(F.col("src").alias("node"), "component"),
-        eager=True,
+        .select(F.col("src").alias("node"), "component")
     )
 
     for round_no in range(1, max_iter + 1):
@@ -134,7 +130,7 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        hop = tracked_local_checkpoint(hop, eager=True)
+        hop = ckpt.checkpoint(hop)
         # Early exit at the 1-hop fixpoint: if the hop changed nothing,
         # labels are equal across every edge (the only fixpoints of the
         # 1-hop min operator), hence constant per component — and since
@@ -166,8 +162,9 @@ def connected_components(
 
         if checkpoint_interval and round_no % checkpoint_interval == 0:
             new_labels = new_labels.checkpoint(eager=True)  # reliable store
+            ckpt.release()
         else:
-            new_labels = tracked_local_checkpoint(new_labels, eager=True)
+            new_labels = ckpt.checkpoint(new_labels)
 
         # Convergence probe: limit-1 scan over the blocks the eager
         # checkpoint just materialized — no recompute job.

@@ -306,7 +306,10 @@ def shared_seed_pairs(
     as :func:`minhash_signatures` emits. The enumeration picks array
     POSITIONS, so a repeated seed would yield combos that name one seed
     twice and a pair agreeing on fewer than m distinct seeds could
-    pass. It is neither checked nor deduplicated here.
+    pass. It is checked, not assumed: the per-doc array is built through
+    ``map_from_entries``, which fails the job on a repeated seed under
+    Spark's default ``spark.sql.mapKeyDedupPolicy=EXCEPTION`` — inside
+    the grouping job that runs anyway, so the check adds no job.
 
     Output: (doc1, doc2) distinct, doc1 < doc2 — the precision-filtered
     dup-graph edge list used by the graph-analytic queries
@@ -332,7 +335,7 @@ def shared_seed_pairs(
         """array of structs s{level}..,m{level}.. — all ascending m-touples
         drawn from the (seed-sorted) struct array ``arr``."""
         fields = lambda x, lv: [  # noqa: E731
-            x["seed"].alias(f"s{lv}"), x["minhash"].alias(f"m{lv}"),
+            x["key"].alias(f"s{lv}"), x["value"].alias(f"m{lv}"),
         ]
         if m == 1:
             return F.transform(arr, lambda x: F.struct(*fields(x, level)))
@@ -353,8 +356,9 @@ def shared_seed_pairs(
             )
         )
 
+    seed_map = F.map_from_entries(F.collect_list(F.struct("seed", "minhash")))
     grouped = signatures.groupBy(key).agg(
-        F.sort_array(F.collect_list(F.struct("seed", "minhash"))).alias("__sm")
+        F.sort_array(F.map_entries(seed_map)).alias("__sm")
     )
     combos = grouped.select(
         key, F.explode(_combos(F.col("__sm"), 0, min_shared)).alias("__c")

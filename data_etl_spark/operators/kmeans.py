@@ -2,7 +2,11 @@
 IVF index (operators/ivf.py). Demonstrates the iterative-algorithm
 pattern on plain DataFrames (like operators/components.py): each round
 is assign (broadcast centroids) -> per-dimension mean (posexplode +
-groupBy) -> localCheckpoint to truncate lineage.
+groupBy) -> localCheckpoint to truncate lineage. The centroid tables
+rotate (cache.CheckpointRotation): each round's table carries the
+previous centroids as ``prev`` so the convergence probe is a scan of the
+new checkpoint, and the previous round is dropped as soon as the new
+one is materialized — the loop holds one centroid table at any time.
 
 Determinism: init = the k vectors with the smallest ids; ties in
 assignment break on cent_id. Centroid means sum floats across
@@ -17,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..cache import tracked_local_checkpoint
+from ..cache import CheckpointRotation
 from ..functions import vectors as V
 from .ivf import assign_cells
 
@@ -30,13 +34,13 @@ def kmeans_fit(
     max_iter: int = 10,
 ) -> DataFrame:
     """Returns centroids (cent_id, cemb) after at most ``max_iter`` rounds."""
-    cent = tracked_local_checkpoint(
+    ckpt = CheckpointRotation()
+    cent = ckpt.checkpoint(
         vectors.orderBy(id_col)
         .limit(k)
         .select(F.col(id_col), F.col(vec_col))
         .withColumn("cent_id", F.row_number().over(W.orderBy(id_col)) - 1)
-        .select("cent_id", F.col(vec_col).alias("cemb")),
-        eager=True,
+        .select("cent_id", F.col(vec_col).alias("cemb"))
     )
 
     for _ in range(max_iter):
@@ -53,16 +57,12 @@ def kmeans_fit(
                 ).alias("cemb")
             )
             .select(F.col("cell").alias("cent_id"), "cemb")
+            .join(cent.select("cent_id", F.col("cemb").alias("prev")), "cent_id")
         )
-        new_cent = tracked_local_checkpoint(new_cent, eager=True)
+        new_cent = ckpt.checkpoint(new_cent)
         # converged when assignments can't change: compare centroid sets
-        moved = (
-            new_cent.alias("n")
-            .join(cent.alias("o"), "cent_id")
-            .filter(F.col("n.cemb") != F.col("o.cemb"))
-            .count()
-        )
-        cent = new_cent
+        moved = new_cent.filter(F.col("cemb") != F.col("prev")).count()
+        cent = new_cent.select("cent_id", "cemb")
         if moved == 0:
             break
     return cent

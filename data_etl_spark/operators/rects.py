@@ -18,13 +18,44 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 
+def overlap_components(x0, y0, x1, y1, tol: float) -> list[list[int]]:
+    """Member indices of each component of the overlap-or-touch graph of
+    n boxes (four coordinate sequences), in order of first member: one
+    union-find round — q_rect_components' components and each round of
+    :func:`merge_rects_pandas`. Mirrors rects_overlap_or_touch
+    (image_manager.py:82-101): intervals overlap with tolerance ``tol``
+    in both axes."""
+    n = len(x0)
+    parent = list(range(n))
+
+    def find(i: int) -> int:
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    for i in range(n):
+        for j in range(i + 1, n):
+            if (
+                x0[i] <= x1[j] + tol
+                and x0[j] <= x1[i] + tol
+                and y0[i] <= y1[j] + tol
+                and y0[j] <= y1[i] + tol
+            ):
+                ri, rj = find(i), find(j)
+                if ri != rj:
+                    parent[rj] = ri
+    comp: dict[int, list[int]] = {}
+    for i in range(n):
+        comp.setdefault(find(i), []).append(i)
+    return list(comp.values())
+
+
 def merge_rects_pandas(pdf: pd.DataFrame, tol: float) -> pd.DataFrame:
     """Union-find merge of overlapping-or-touching rects in one page group.
 
-    Mirrors rects_overlap_or_touch (image_manager.py:82-101): intervals
-    overlap with tolerance in both axes. Output: one row per component
-    with the union bbox (A5) and member count, ordered (y0, x0) with
-    1-based idx (W1 enumeration).
+    Output: one row per component with the union bbox (A5) and member
+    count, ordered (y0, x0) with 1-based idx (W1 enumeration).
     """
     # Fixpoint, not single-pass: fusing two rects grows the bbox, which can
     # newly overlap a third rect (image_manager.py:119-142 loops until no
@@ -35,30 +66,7 @@ def merge_rects_pandas(pdf: pd.DataFrame, tol: float) -> pd.DataFrame:
         for a, b, c, d in zip(pdf["x0"], pdf["y0"], pdf["x1"], pdf["y1"])
     ]
     while True:
-        n = len(boxes)
-        parent = list(range(n))
-
-        def find(i: int) -> int:
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
-        for i in range(n):
-            for j in range(i + 1, n):
-                if (
-                    boxes[i][0] <= boxes[j][2] + tol
-                    and boxes[j][0] <= boxes[i][2] + tol
-                    and boxes[i][1] <= boxes[j][3] + tol
-                    and boxes[j][1] <= boxes[i][3] + tol
-                ):
-                    ri, rj = find(i), find(j)
-                    if ri != rj:
-                        parent[rj] = ri
-
-        comp: dict[int, list[int]] = {}
-        for i in range(n):
-            comp.setdefault(find(i), []).append(i)
+        comps = overlap_components(*([b[k] for b in boxes] for k in range(4)), tol)
         merged = [
             [
                 min(boxes[m][0] for m in members),
@@ -67,7 +75,7 @@ def merge_rects_pandas(pdf: pd.DataFrame, tol: float) -> pd.DataFrame:
                 max(boxes[m][3] for m in members),
                 sum(boxes[m][4] for m in members),
             ]
-            for members in comp.values()
+            for members in comps
         ]
         if len(merged) == len(boxes):
             boxes = merged

@@ -1970,9 +1970,9 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # removes nothing) would leave some sub-K nodes unpeeled IDENTICALLY
 # on both sides. Scale: per round the degree agg is map-side combined
 # and the removal set is the only thing broadcast; live-edge tables
-# rotate through eager localCheckpoints (the _bpe_learn pattern — each
-# round references the previous edge table twice, so a lazy chain
-# doubles Catalyst analysis per round).
+# rotate through cache.CheckpointRotation (each round references the
+# previous edge table twice, so a lazy chain doubles Catalyst analysis
+# per round).
 # ---------------------------------------------------------------------------
 
 _KCORE_K = 2
@@ -2031,7 +2031,7 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing; false means the bounded peel truncated a deeper cascade
     and the result is the round-R partial peel (still deterministic and
     identical on both engines)."""
-    from ..cache import release_ckpt, tracked_local_checkpoint, tracked_persist
+    from ..cache import CheckpointRotation, tracked_local_checkpoint, tracked_persist
 
     d = load_table(spark, sf_dir, "documents")
     sh = tracked_persist(DD.word_shingles(d), StorageLevel.DISK_ONLY)
@@ -2040,23 +2040,20 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.components import symmetrize_edges
 
-    e = tracked_local_checkpoint(
-        symmetrize_edges(cand, "doc1", "doc2"), eager=True
-    )
+    # the round-0 edge table stays resident: ``nodes`` reads it
+    e = tracked_local_checkpoint(symmetrize_edges(cand, "doc1", "doc2"))
     nodes = e.select(F.col("src").alias("doc_id")).distinct()
+    ckpt = CheckpointRotation()
 
     removed = None
-    prev_handle: list = []
     last_rem_n = -1
     for r in range(1, _KCORE_ROUNDS + 1):
         deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-        rem = tracked_persist(
+        # the final round's count doubles as the convergence signal (an
+        # empty removal round is a fixpoint)
+        rem, last_rem_n = ckpt.keep(
             deg.filter(F.col("deg") < _KCORE_K).select(F.col("src").alias("node"))
         )
-        # populate before the parent checkpoint rotates away; the final
-        # round's count doubles as the convergence signal (an empty
-        # removal round is a fixpoint)
-        last_rem_n = rem.count()
         rem_out = rem.select(
             "node", F.lit(r).cast("int").alias("removed_round")
         )
@@ -2066,11 +2063,7 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(rem.select(F.col("node").alias("dst")), "dst", "left_anti")
             .select("src", "dst")
         )
-        handle: list = []
-        e = tracked_local_checkpoint(live, handle_out=handle)
-        if prev_handle:
-            release_ckpt(prev_handle[0])
-        prev_handle = handle
+        e = ckpt.checkpoint(live)
 
     core = e.groupBy("src").agg(F.count("*").cast("bigint").alias("core_deg"))
     return (
@@ -2083,8 +2076,8 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "removed_round",
             "core_deg",
             # the final removal count is already materialized above
-            # (each round counts eagerly before rotating the parent
-            # checkpoint), so convergence is a plan-time constant —
+            # (each round's removal set is filled before its parent
+            # rotates away), so convergence is a plan-time constant —
             # no extra job, no driver pull beyond the existing scalar
             F.lit(last_rem_n == 0).alias("converged"),
         )

@@ -317,6 +317,8 @@ def _rect_components_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd
 
+    from ..operators.rects import overlap_components
+
     f = _rect_figures(spark, sf_dir).select(
         "fig_key", "filename", "page", "x0", "y0", "x1", "y1"
     )
@@ -326,29 +328,6 @@ def _rect_components_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys = pdf["fig_key"].to_numpy()
         xs0, ys0 = pdf["x0"].to_numpy(), pdf["y0"].to_numpy()
         xs1, ys1 = pdf["x1"].to_numpy(), pdf["y1"].to_numpy()
-        n = len(keys)
-        parent = list(range(n))
-
-        def find(i: int) -> int:
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
-        for i in range(n):
-            for j in range(i + 1, n):
-                if (
-                    xs0[i] <= xs1[j] + tol
-                    and xs0[j] <= xs1[i] + tol
-                    and ys0[i] <= ys1[j] + tol
-                    and ys0[j] <= ys1[i] + tol
-                ):
-                    ri, rj = find(i), find(j)
-                    if ri != rj:
-                        parent[rj] = ri
-        comp: dict[int, list[int]] = {}
-        for i in range(n):
-            comp.setdefault(find(i), []).append(i)
         rows = [
             {
                 "filename": pdf["filename"].iloc[0],
@@ -360,7 +339,7 @@ def _rect_components_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "y1": float(max(ys1[m] for m in members)),
                 "n_members": len(members),
             }
-            for members in comp.values()
+            for members in overlap_components(xs0, ys0, xs1, ys1, tol)
         ]
         return pd.DataFrame(rows)
 

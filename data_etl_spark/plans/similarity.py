@@ -1580,7 +1580,7 @@ def q_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (update running min-dist against the 1-row broadcast new center) plus
 # a 1-row top-1 (TakeOrderedAndProject, never a global sort); k rounds
 # = k linear passes, the known lower bound for exact greedy k-center.
-# Per-round tables rotate through eager localCheckpoints exactly like
+# Per-round tables rotate through cache.CheckpointRotation like
 # _bpe_learn (each round's plan references the previous one's twice —
 # the argmax subplan and the rewrite — so a lazy persist chain doubles
 # Catalyst analysis per round).
@@ -1629,7 +1629,7 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(sel_round, center_id, radius) greedy k-center coreset — see the
     block comment for the algorithm, scale shape, and degenerate-corpus
     contract."""
-    from ..cache import release_ckpt, tracked_local_checkpoint, tracked_persist
+    from ..cache import CheckpointRotation, tracked_persist
 
     pts = (
         _embeddings(spark, sf_dir)
@@ -1651,24 +1651,14 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         "emb",
         (F.lit(1.0) - V.cosine(F.col("emb"), F.col("cemb"))).alias("mind"),
     )
-    prev_handle: list = []
+    ckpt = CheckpointRotation()
     for r in range(2, _KC_K + 1):
-        # lineage cut + rotation: the _bpe_learn pattern
-        handle: list = []
-        cur = tracked_local_checkpoint(cur, handle_out=handle)
-        if prev_handle:
-            release_ckpt(prev_handle[0])
-        prev_handle = handle
-        t = tracked_persist(
+        cur = ckpt.checkpoint(cur)
+        t, _ = ckpt.keep(
             cur.filter(F.col("mind") > 0)
             .orderBy(F.desc("mind"), "vec_id")
             .limit(1)
         )
-        # populate the winner's cache NOW, while the checkpoint it
-        # reads is still alive — the broadcast-evaluation path is not
-        # guaranteed to fill the InMemoryRelation, and after rotation
-        # drops that checkpoint a cache miss cannot recompute
-        t.count()
         out = out.unionAll(
             t.select(
                 F.lit(r).cast("int").alias("sel_round"),
@@ -1773,8 +1763,8 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     milli-units). See the block comment for the decimal-exact chain.
     The exploded (vec_id, dim, x) table persists DISK_ONLY (it feeds
     both aggregations every round); per-round v tables rotate through
-    eager localCheckpoints (the _bpe_learn pattern)."""
-    from ..cache import release_ckpt, tracked_local_checkpoint
+    cache.CheckpointRotation."""
+    from ..cache import CheckpointRotation
 
     e = _embeddings(spark, sf_dir).filter(
         F.size("embedding") == _PCA_DIM
@@ -1794,7 +1784,7 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = x.select("dim").distinct().select(
         "dim", F.lit(0.125).cast("decimal(12,6)").alias("vj")
     )
-    prev_handle: list = []
+    ckpt = CheckpointRotation()
     out = None
     for r in range(1, _PCA_ROUNDS + 1):
         d = (
@@ -1833,20 +1823,15 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("nrm") * F.lit(1e3)).cast("bigint").alias("eig_e3"),
         )
         if r < _PCA_ROUNDS:
-            handle: list = []
-            v = tracked_local_checkpoint(
+            v = ckpt.checkpoint(
                 ev.select(
                     "dim",
                     (
                         F.col("v_e6").cast("decimal(18,0)")
                         * F.lit(0.000001).cast("decimal(8,6)")
                     ).cast("decimal(12,6)").alias("vj"),
-                ),
-                handle_out=handle,
+                )
             )
-            if prev_handle:
-                release_ckpt(prev_handle[0])
-            prev_handle = handle
         else:
             out = ev
     return out.select("dim", "v_e6", "eig_e3")

@@ -1605,13 +1605,13 @@ def _bpe_learn(d: DataFrame, rounds: int = _BPE_ROUNDS):
     (through the winner subplan and the rewrite itself), so a
     persist-only chain doubles Catalyst's analysis work per round —
     measured super-exponential past ~6 rounds (R=6 21 s, R=7 99 s on a
-    10-word fixture). Rounds 1..R-1 therefore go through
-    tracked_local_checkpoint (eager, lineage cut — the components.py
-    iterative pattern), and the PREVIOUS round's blocks are dropped via
-    release_ckpt once the new round is materialized: at most two
-    vocabulary-scale tables are ever resident, instead of R+1 leaking
-    until release_tracked. Round R stays lazy (q_bpe_merges never
-    materializes the final rewrite). ``rounds`` is parameterized for
+    10-word fixture). Rounds 1..R-1 therefore rotate through
+    cache.CheckpointRotation (eager, lineage cut — the components.py
+    iterative pattern): each round is materialized, then the previous
+    round's blocks are dropped, so at most two vocabulary-scale tables
+    are ever resident instead of R+1 leaking until release_tracked.
+    Round R stays lazy (q_bpe_merges never materializes the final
+    rewrite). ``rounds`` is parameterized for
     the depth-8 property test (tests/test_properties.py); the driver
     pair runs at the fixed _BPE_ROUNDS. Measured cost of the eager
     rotation at the driver depth (sf1, min-of-2): q_bpe_merges
@@ -1620,7 +1620,7 @@ def _bpe_learn(d: DataFrame, rounds: int = _BPE_ROUNDS):
     bounded resident state (2 tables, not R+1) and a learn loop that
     stays linear in R are the 100 TB-relevant properties; the depth-3
     regression is noise against both queries' gates."""
-    from ..cache import release_ckpt, tracked_local_checkpoint, tracked_persist
+    from ..cache import CheckpointRotation, tracked_persist
 
     tok = d.select("doc_id", F.explode(TX.words(F.col("text"))).alias("word")).filter(
         F.col("word").rlike("^[a-z0-9]+$")
@@ -1654,17 +1654,11 @@ def _bpe_learn(d: DataFrame, rounds: int = _BPE_ROUNDS):
         return counts.orderBy(F.desc("pair_count"), "a", "b").limit(1)
 
     out = None
-    prev_handle: list = []
+    ckpt = CheckpointRotation()
     for r in range(1, rounds + 1):
         # two consumers (the output row and the merge rewrite) — persist
-        # the 1-row winner so the pair-count agg runs once per round,
-        # and populate its cache NOW, while the checkpoint it reads is
-        # still alive: the broadcast-evaluation path is not guaranteed
-        # to fill the InMemoryRelation, and after rotation drops that
-        # checkpoint a cache miss cannot recompute (the kcenter loop
-        # hit exactly this as CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
-        t = tracked_persist(top_pair(cur))
-        t.count()
+        # the 1-row winner so the pair-count agg runs once per round
+        t, _ = ckpt.keep(top_pair(cur))
         row = t.select(
             F.lit(r).cast("int").alias("merge_round"),
             F.col("a").alias("p1"),
@@ -1686,13 +1680,8 @@ def _bpe_learn(d: DataFrame, rounds: int = _BPE_ROUNDS):
             ).alias("seq"),
         )
         if r < rounds:
-            # eager checkpoint cuts the doubling lineage, then rotate:
-            # drop round r-1's blocks now that round r is materialized
-            handle: list = []
-            cur = tracked_local_checkpoint(rewritten, handle_out=handle)
-            if prev_handle:
-                release_ckpt(prev_handle[0])
-            prev_handle = handle
+            # eager checkpoint cuts the doubling lineage
+            cur = ckpt.checkpoint(rewritten)
         else:
             # the final rewrite stays lazy: q_bpe_merges returns only
             # the winners and must never pay for it

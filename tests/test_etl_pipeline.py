@@ -462,10 +462,10 @@ def test_search_after_a_drain_rebuilds_its_state(pipe, docs, spark):
     """release_tracked() between two searches: the second returns the same
     rows and persists its state again instead of recomputing it from the
     files on every later call."""
-    from data_etl_spark.cache import release_tracked
+    from data_etl_spark.cache import persistent_rdd_ids, release_tracked
 
     def persisted() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+        return len(persistent_rdd_ids(spark.sparkContext))
 
     pipe.ingest(docs)
     qs = ["word1 word1", "word4"]
@@ -780,10 +780,10 @@ def test_release_tracked_drains_all_pipeline_persists(pipe, docs, spark):
     search/near_dups/rank_chunks calls followed by release_tracked()
     leaves the JVM with no more persisted RDDs than before — the
     long-lived-JVM posture bench_full relies on."""
-    from data_etl_spark.cache import release_tracked
+    from data_etl_spark.cache import persistent_rdd_ids, release_tracked
 
     def persisted() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+        return len(persistent_rdd_ids(spark.sparkContext))
 
     pipe.ingest(docs)
     release_tracked()

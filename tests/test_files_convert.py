@@ -60,6 +60,30 @@ def test_process_folder_end_to_end(spark, tmp_path):
     assert names == {"a.txt", "b.md"}
 
 
+def test_process_folder_skips_indexed_files_before_conversion(spark, tmp_path, monkeypatch):
+    """force=False converts only what the index does not hold yet: the
+    two indexed files never reach to_markdown on the re-run."""
+    from data_etl_spark.operators import convert
+
+    d = _mkdocs(tmp_path)
+    pipe = ETLPipeline(
+        spark, str(tmp_path / "idx"), ETLConfig(chunk_size=100, chunk_overlap=20)
+    )
+    pipe.process_folder(d)
+    (tmp_path / "in" / "e.txt").write_text("epsilon " * 50)
+    seen: list[str] = []
+
+    def spy(files, *a, **kw):
+        seen.extend(r.filename for r in files.select("filename").collect())
+        return to_markdown(files, *a, **kw)
+
+    monkeypatch.setattr(convert, "to_markdown", spy)
+    stats = pipe.process_folder(d, force=False)
+    # d.txt failed conversion at bootstrap, so it is not indexed either
+    assert sorted(seen) == ["d.txt", "e.txt"]
+    assert stats["n_documents"] == 3
+
+
 def test_wholetext_read(spark, tmp_path):
     d = _mkdocs(tmp_path)
     df = read_wholetext(spark, d + "/a.txt")

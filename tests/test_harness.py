@@ -20,13 +20,17 @@ STUB = "q_harness_stub"
 
 
 def _persisted(spark) -> set[int]:
-    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+    return cache.persistent_rdd_ids(spark.sparkContext)
 
 
 def _tasks(spark, group: str) -> int:
+    """Tasks the group's jobs ran. Skipped stages count none: past
+    spark.ui.retainedStages the status store evicts them first (their
+    completion time is -1), so counting their numTasks would depend on
+    when an eviction lands in a long session."""
     st = spark.sparkContext.statusTracker()
     return sum(
-        st.getStageInfo(sid).numTasks
+        st.getStageInfo(sid).numCompletedTasks
         for jid in st.getJobIdsForGroup(group)
         for sid in st.getJobInfo(jid).stageIds
         if st.getStageInfo(sid) is not None

@@ -183,6 +183,22 @@ def test_shared_seed_pairs_matches_filtered_any_seed(spark):
         DD.shared_seed_pairs(sig, min_shared=0)
 
 
+def test_shared_seed_pairs_rejects_a_repeated_seed(spark):
+    """Both docs agree on ONE distinct seed, each listed twice: counted
+    by array position that would be a 2-seed combo and pair them, so the
+    operator raises instead of pairing equal seeds."""
+    import pytest
+
+    from data_etl_spark.operators import dedup as DD
+
+    sig = spark.createDataFrame(
+        [(0, 0, 7), (0, 0, 7), (0, 1, 3), (1, 0, 7), (1, 0, 7), (1, 1, 5)],
+        "doc_id long, seed int, minhash long",
+    )
+    with pytest.raises(Exception, match="DUPLICATED_MAP_KEY|[Dd]uplicate map key"):
+        DD.shared_seed_pairs(sig).collect()
+
+
 def test_auto_dedup_single_driver_action(spark):
     """Building the plan runs only the gate's count() action (AQE may
     split one count into several jobs; measure against a plain count

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from data_etl_spark.cache import persistent_rdd_ids, unpersist_rdds
 from data_etl_spark.plans import REGISTRY
 
 
@@ -298,9 +299,7 @@ def test_corpus_scale_persist_is_disk_only(spark, sf_dir, name):
     # blocks (so no fresh entry would appear to assert on).
     def _evict_all():
         spark.catalog.clearCache()
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jmap.values()):
-            jrdd.unpersist()
+        unpersist_rdds(spark.sparkContext, persistent_rdd_ids(spark.sparkContext))
 
     _evict_all()
     df = REGISTRY[name].fn(spark, sf_dir)
@@ -368,8 +367,7 @@ def test_cms_persist_is_vocabulary_scale(spark, sf_dir):
     import pyspark.sql.functions as F
 
     spark.catalog.clearCache()
-    for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        jrdd.unpersist()
+    unpersist_rdds(spark.sparkContext, persistent_rdd_ids(spark.sparkContext))
     df = REGISTRY["q_cms_heavy_hitters"].fn(spark, sf_dir)
     try:
         df.count()
@@ -389,8 +387,7 @@ def test_cms_persist_is_vocabulary_scale(spark, sf_dir):
         )
     finally:
         spark.catalog.clearCache()
-        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            jrdd.unpersist()
+        unpersist_rdds(spark.sparkContext, persistent_rdd_ids(spark.sparkContext))
 
 
 def test_semantic_dedup_confines_quadratic_step(spark, sf_dir):
@@ -657,7 +654,7 @@ def test_registry_queries_drain_to_baseline(spark, sf_dir):
     from data_etl_spark.plans import REGISTRY
 
     def persisted() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+        return len(persistent_rdd_ids(spark.sparkContext))
 
     release_tracked()
     spark.catalog.clearCache()

@@ -47,7 +47,7 @@ def test_no_bare_persist_or_local_checkpoint():
             offenders.append(f"{rel}:{lineno}: {line.strip()}")
     assert not offenders, (
         "bare .persist()/.localCheckpoint() outside cache.py — route through "
-        "tracked_persist/tracked_local_checkpoint (or add a justified "
+        "tracked_persist/tracked_local_checkpoint/CheckpointRotation (or add a justified "
         "ALLOWED entry):\n" + "\n".join(offenders)
     )
 
@@ -124,6 +124,32 @@ def test_sessions_are_sized_in_one_module():
     assert not offenders, (
         "session sizing outside data_etl_spark/session.py — use build_session "
         "or driver_memory from there:\n" + "\n".join(offenders)
+    )
+
+
+#: the JVM persistent-RDD bookkeeping behind checkpoint rotation belongs
+#: to data_etl_spark/cache.py; only that module and its own tests
+#: (tests/test_cache_rotation.py) name these
+_CKPT_OWNED = re.compile(r"\b(release_ckpt|handle_out|getPersistentRDDs)\b")
+
+
+def test_checkpoint_bookkeeping_stays_in_cache():
+    assert _CKPT_OWNED.search("sc._jsc.getPersistentRDDs().size()")
+    assert not _CKPT_OWNED.search("C.persistent_rdd_ids(sc)")
+    offenders = []
+    owners = {
+        REPO / "data_etl_spark" / "cache.py",
+        REPO / "tests" / "test_cache_rotation.py",
+        Path(__file__).resolve(),
+    }
+    for path in sorted({*_source_files(), *(REPO / "tests").glob("*.py")} - owners):
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            if _CKPT_OWNED.search(line):
+                offenders.append(f"{path.relative_to(REPO)}:{lineno}: {line.strip()}")
+    assert not offenders, (
+        "checkpoint bookkeeping outside data_etl_spark/cache.py — use "
+        "CheckpointRotation, persistent_rdd_ids or unpersist_rdds from there:\n"
+        + "\n".join(offenders)
     )
 
 
