@@ -5,7 +5,8 @@ Mirrors `/root/reference/src/etl_processor.py` (E1 `perform_etl`,
 E2 `process_file`) and `/root/reference/src/managers/index_manager.py`
 (E3 `add_document`/`delete_document`) as ONE lazy DataFrame dataflow:
 
-    documents -> extension gate (F1) -> normalize (T1,T3-T7)
+    files (one binaryFile scan, batch or stream) -> markdown (U1)
+              -> extension gate (F1) -> normalize (T1,T3-T7)
               -> chunk + enumerate (U3/W2) -> token counts (A7)
               -> embed (V1, pluggable; deterministic hash-embedding
                  default so the correctness path needs no model)
@@ -43,15 +44,17 @@ from collections.abc import Iterable, Sequence
 from dataclasses import dataclass
 from uuid import uuid4
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .cache import tracked_persist
 from .functions import text as TX
 from .operators import chunking as CH
+from .operators import convert
 from .operators.export import export_files
 from .operators.merge import merge_by_key
+from .sources import files as FS
 
 #: Dimension of the deterministic fallback embedding (md5-nibble based).
 FAKE_EMBED_DIM = 8
@@ -401,18 +404,15 @@ class ETLPipeline:
 
     # -- the dataflow --------------------------------------------------------
 
-    def gate_extensions(self, docs: DataFrame, filename_col: str = "filename") -> DataFrame:
+    def gate_extensions(self, docs: DataFrame) -> DataFrame:
         """F1 extension whitelist (`document_processor.py:51-60`)."""
-        ext = F.lower(F.element_at(F.split(F.col(filename_col), r"\."), -1))
+        ext = F.lower(F.element_at(F.split(F.col("filename"), r"\."), -1))
         return docs.filter(ext.isin(*self.config.allowed_extensions))
 
-    def chunk_documents(
-        self, docs: DataFrame, filename_col: str = "filename", text_col: str = "text"
-    ) -> DataFrame:
+    def chunk_documents(self, docs: DataFrame) -> DataFrame:
         """normalize -> overlapping chunks -> token counts -> embeddings."""
         norm = docs.select(
-            F.col(filename_col).alias("filename"),
-            TX.normalize_text(F.col(text_col), nfkc=self.config.nfkc).alias("__ntext"),
+            "filename", TX.normalize_text(F.col("text"), nfkc=self.config.nfkc).alias("__ntext")
         )
         chunks = CH.chunk_text(
             norm,
@@ -428,66 +428,52 @@ class ETLPipeline:
             fake_embedding(F.col("chunk_text")).alias("embedding"),
         )
 
-    def ingest(
-        self,
-        docs: DataFrame,
-        filename_col: str = "filename",
-        text_col: str = "text",
-        force: bool = True,
-        gate: bool = True,
-        observe: bool = True,
-    ) -> dict:
-        """Idempotent document ingestion (E1/E3: delete-then-add per filename).
+    def ingest(self, docs: DataFrame, force: bool = True) -> dict:
+        """Idempotent ingestion of (filename, text) documents behind the
+        F1 extension gate (E1/E3: delete-then-add per filename).
 
         ``force=False`` = the reference's skip-processed incremental mode
         (N1, `document_processor.py:146-202`): documents already indexed
         are anti-joined away before any work happens.
         Returns {"n_documents", "n_chunks"} of the whole index after the
-        write (A1 success-count analog); the batch's own counts are in
-        ``last_ingest_metrics``.
+        write (A1 success-count analog); the batch's own counts, observed
+        on the write job, are in ``last_ingest_metrics``.
         """
         exists = self._exists()
-        batch = self.gate_extensions(docs, filename_col) if gate else docs
+        batch = self.gate_extensions(docs)
         if not force and exists:
-            batch = self._unindexed(batch, filename_col)
-        new_chunks = self.chunk_documents(batch, filename_col, text_col)
-        # Pipeline observability (DataFrame.observe / CollectMetricsExec):
-        # batch metrics ride the write job's own scan — zero extra pass,
-        # exact under task retries. countDistinct is not observable
-        # (needs a shuffle); approx_count_distinct is the supported form.
-        # ``observe=False`` for callers running inside foreachBatch:
-        # Observation.get waits on a QueryExecutionListener that never
-        # fires for actions nested in a streaming micro-batch (it would
-        # hang) — streaming metrics belong to StreamingQuery progress.
-        from pyspark.sql import Observation
-
-        obs = None
-        if observe:
+            batch = self._unindexed(batch)
+        if exists:
+            # an upsert reads the batch three times (its bucket set, the
+            # merge's broadcast and union sides): one conversion feeds all
+            batch = tracked_persist(batch)
+        try:
+            # batch metrics ride the write job's own scan (CollectMetricsExec):
+            # no extra pass, exact under task retries, also in a foreachBatch;
+            # countDistinct needs a shuffle, so the distinct count is approx
             obs = Observation()
-            new_chunks = new_chunks.observe(
+            new_chunks = self.chunk_documents(batch).observe(
                 obs,
                 F.count(F.lit(1)).alias("chunks_written"),
                 F.approx_count_distinct("filename").alias("docs_in_batch_approx"),
-                F.coalesce(F.sum(F.length("chunk_text")), F.lit(0)).alias(
-                    "chars_written"
-                ),
+                F.coalesce(F.sum(F.length("chunk_text")), F.lit(0)).alias("chars_written"),
             )
-        wrote = True
-        if not exists:
-            self._rewrite(new_chunks)
-        else:
-            # Tiny action (<= n_buckets rows) over the raw batch (pre-chunking,
-            # pre-embedding): which partition dirs does this upsert touch?
-            rows = batch.select(self._bucket(F.col(filename_col)).alias("b")).distinct()
-            buckets = {r.b for r in rows.collect()}
-            wrote = bool(buckets)
-            if wrote:
-                merged = merge_by_key(self.index_table(buckets), new_chunks, keys=["filename"])
-                self._swap_buckets(merged, buckets)
-        #: metrics of the batch the write ACTUALLY ingested (post-gate,
-        #: post-skip) — {} when nothing was written (or not observed).
-        self.last_ingest_metrics = {}
-        if wrote and obs is not None:
+            wrote = True
+            if not exists:
+                self._rewrite(new_chunks)
+            else:
+                # which partition dirs does the upsert touch? (<= n_buckets rows)
+                rows = batch.select(self._bucket(F.col("filename")).alias("b")).distinct()
+                buckets = {r.b for r in rows.collect()}
+                wrote = bool(buckets)
+                if wrote:
+                    merged = merge_by_key(self.index_table(buckets), new_chunks, keys=["filename"])
+                    self._swap_buckets(merged, buckets)
+        finally:
+            if exists:
+                batch.unpersist()
+        self.last_ingest_metrics = {}  # post-gate, post-skip; {} if nothing was written
+        if wrote:
             try:
                 self.last_ingest_metrics = dict(obs.get)
             except Exception:
@@ -506,26 +492,18 @@ class ETLPipeline:
         )
         return {"n_documents": stats["n_documents"], "n_chunks": stats["n_chunks"]}
 
-    def _unindexed(self, docs: DataFrame, filename_col: str) -> DataFrame:
+    def _unindexed(self, docs: DataFrame) -> DataFrame:
         """``docs`` minus the files the index already holds."""
         seen = self.index_table().select("filename").distinct()
-        return docs.join(F.broadcast(seen), docs[filename_col] == seen["filename"], "left_anti")
+        return docs.join(F.broadcast(seen), docs["filename"] == seen["filename"], "left_anti")
 
-    def export_markdown(
-        self,
-        docs: DataFrame,
-        out_dir: str,
-        filename_col: str = "filename",
-        text_col: str = "text",
-    ) -> None:
+    def export_markdown(self, docs: DataFrame, out_dir: str) -> None:
         """K1 optional file sink: one normalized ``<stem>.md`` per document
         (`markdown_conversion_manager.py:106-108`), written distributed via
         ``foreachPartition`` — the table column stays the primary sink."""
         norm = docs.select(
-            F.concat(
-                F.regexp_replace(F.col(filename_col), r"\.[^.]*$", ""), F.lit(".md")
-            ).alias("relpath"),
-            TX.normalize_text(F.col(text_col), nfkc=self.config.nfkc).alias("content"),
+            F.concat(F.regexp_replace("filename", r"\.[^.]*$", ""), F.lit(".md")).alias("relpath"),
+            TX.normalize_text(F.col("text"), nfkc=self.config.nfkc).alias("content"),
         )
         export_files(norm, out_dir, "relpath", "content")
 
@@ -558,49 +536,53 @@ class ETLPipeline:
         """E1 perform_etl: scan a folder, convert to markdown, ingest.
 
         binaryFile scan (S1/S2, extension-pruned at listing time) ->
-        mapInPandas conversion (U1, error-tolerant) -> the ingest
-        dataflow. Failed conversions are dropped like the reference's
-        per-file try/except (`etl_processor.py:109-111`), not raised.
-        ``force=False`` drops already-indexed files before conversion, as
-        the reference skips processed files before converting them
-        (`document_processor.py:146-202`): only new files are converted.
+        :meth:`_ingest_files`. ``force=False`` drops already-indexed files
+        before conversion, as the reference skips processed files before
+        converting them (`document_processor.py:146-202`). A file whose
+        conversion failed is not indexed, so each ``force=False`` run
+        converts it again: in the reference's N1 too, only a written
+        ``.md`` counts as processed (SURVEY.md:251).
         """
-        from .operators.convert import to_markdown
-        from .sources.files import scan_binary_files
-
-        files = scan_binary_files(
+        # module lookups at call time: the benchmark's tracer wraps
+        # scan_binary_files and to_markdown on their modules
+        files = FS.scan_binary_files(
             self.spark, input_dir, extensions=self.config.allowed_extensions
         )
         if not force and self._exists():
-            files = self._unindexed(files, "filename")
-        converted = to_markdown(files)
-        good = converted.filter(F.col("ok")).select("filename", F.col("markdown").alias("text"))
-        # what is left is new to the index: adding it needs no second skip
-        return self.ingest(good, force=True, gate=False)
+            files = self._unindexed(files)
+        return self._ingest_files(files)
+
+    def _ingest_files(self, files: DataFrame) -> dict:
+        """The tail batch and stream share: mapInPandas conversion (U1) ->
+        :meth:`ingest`. Failed conversions are dropped like the reference's
+        per-file try/except (`etl_processor.py:109-111`), not raised."""
+        good = convert.to_markdown(files).filter(F.col("ok"))
+        return self.ingest(good.select("filename", F.col("markdown").alias("text")))
 
     def ingest_stream(self, input_dir: str) -> None:
-        """Continuous ingestion: new text files are discovered by the
-        Structured Streaming file source and upserted via foreachBatch
-        (N1 exactly-once new-file processing + N3 idempotent merge in
-        one mechanism). Drains whatever is new with Trigger.AvailableNow;
-        the checkpoint remembers processed files across calls — the
-        streaming-native form of ``ingest(force=False)``.
+        """Continuous ingestion: :meth:`process_folder`'s scan as a
+        file-source stream, each micro-batch through the same conversion
+        and upsert (:meth:`_ingest_files`), so a folder gives the same
+        index either way (N1 exactly-once new-file processing + N3
+        idempotent merge in one mechanism). Drains whatever is new with
+        Trigger.AvailableNow; the checkpoint remembers processed files
+        across calls — the streaming form of ``process_folder(force=False)``.
         """
-        raw = (
-            self.spark.readStream.format("text")
-            .option("wholetext", "true")
-            .load(input_dir)
-        )
-        docs = raw.select(
-            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("filename"),
-            F.col("value").alias("text"),
+        self.last_ingest_metrics = {}
+        files = FS.stream_binary_files(
+            self.spark, input_dir, extensions=self.config.allowed_extensions
         )
 
-        def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-            self.ingest(batch_df, force=True, gate=True, observe=False)
+        def upsert(batch: DataFrame, _: int) -> None:
+            # a micro-batch lives in the stream's cloned session, and an
+            # Observation completes only on an action of the session it was
+            # registered in: a pipeline on that session runs the whole upsert
+            on_batch = ETLPipeline(batch.sparkSession, self.index_path, self.config)
+            on_batch._ingest_files(batch)
+            self.last_ingest_metrics = on_batch.last_ingest_metrics
 
         q = (
-            docs.writeStream.foreachBatch(upsert_batch)
+            files.writeStream.foreachBatch(upsert)
             .option("checkpointLocation", self.index_path + ".checkpoint")
             .trigger(availableNow=True)
             .start()

@@ -49,6 +49,10 @@ DOCUMENT_METADATA_SCHEMA = T.StructType(
 )
 
 
+#: binaryFile's fixed schema, which a file stream must be given.
+BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
+
+
 def scan_binary_files(
     spark: SparkSession,
     input_dir: str,
@@ -60,12 +64,22 @@ def scan_binary_files(
     file_extension). The glob filter prunes at listing time — unmatched
     files are never opened (the 100 TB analog of F1 running before I/O).
     """
+    return _binary_files(spark.read, input_dir, extensions)
+
+
+def stream_binary_files(
+    spark: SparkSession,
+    input_dir: str,
+    extensions: Sequence[str] = DEFAULT_EXTENSIONS,
+) -> DataFrame:
+    """:func:`scan_binary_files` as a file-source stream: the same rows
+    and glob, for the files new since the stream's checkpoint."""
+    return _binary_files(spark.readStream.schema(BINARY_FILE_SCHEMA), input_dir, extensions)
+
+
+def _binary_files(reader, input_dir: str, extensions: Sequence[str]) -> DataFrame:
     glob = "*.{" + ",".join(extensions) + "}" if len(extensions) > 1 else f"*.{extensions[0]}"
-    df = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(input_dir)
-    )
+    df = reader.format("binaryFile").option("pathGlobFilter", glob).load(input_dir)
     filename = F.element_at(F.split(F.col("path"), "/"), -1)
     return df.withColumn("filename", filename).withColumn(
         "file_extension", F.lower(F.element_at(F.split(filename, r"\."), -1))

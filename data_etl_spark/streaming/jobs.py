@@ -6,7 +6,10 @@ create-if-missing, N3 idempotent re-ingestion) map to Spark as:
   drain of whatever is new),
 - watermarked event-time windows for late data,
 - foreachBatch + merge_by_key for idempotent upserts (exercised in
-  tests/test_streaming.py against a tmp dir).
+  tests/test_streaming.py against a tmp dir). ``ETLPipeline.ingest_stream``
+  is the document form: its file stream is ``process_folder``'s
+  ``binaryFile`` scan, and each micro-batch goes through the same
+  conversion and ``ingest``.
 
 The streaming tumbling agg below produces, in complete mode, exactly the
 batch tumbling result — which is what makes it oracle-checkable even

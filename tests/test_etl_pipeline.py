@@ -161,13 +161,29 @@ def test_empty_index_reads_typed_empty(pipe):
     assert "embedding" in idx.columns
 
 
+def _drain(pipe, src, timeout=300):
+    """``pipe.ingest_stream(src)`` in a thread: a drain that does not
+    finish within ``timeout`` seconds fails the test, not the suite."""
+    from concurrent.futures import ThreadPoolExecutor, TimeoutError
+
+    pool = ThreadPoolExecutor(1)
+    try:
+        pool.submit(pipe.ingest_stream, str(src)).result(timeout)
+    except TimeoutError:
+        for q in pipe.spark.streams.active:
+            q.stop()
+        pytest.fail(f"ingest_stream did not finish within {timeout} s")
+    finally:
+        pool.shutdown(wait=False)
+
+
 def test_ingest_stream_incremental(pipe, spark, tmp_path):
     src = tmp_path / "stream_in"
     src.mkdir()
     (src / "a.txt").write_text("streaming alpha " * 30)
     (src / "b.md").write_text("# B\nstreaming beta " * 30)
 
-    pipe.ingest_stream(str(src))
+    _drain(pipe, src)
     names = {r.filename for r in pipe.index_table().select("filename").distinct().collect()}
     assert names == {"a.txt", "b.md"}
     a_chunks = pipe.index_table().filter(F.col("filename") == "a.txt").count()
@@ -175,10 +191,40 @@ def test_ingest_stream_incremental(pipe, spark, tmp_path):
     # add one file; re-drain: only the new file is processed (checkpoint
     # remembers a.txt/b.md), existing chunks unchanged
     (src / "c.txt").write_text("streaming gamma " * 30)
-    pipe.ingest_stream(str(src))
+    _drain(pipe, src)
     names = {r.filename for r in pipe.index_table().select("filename").distinct().collect()}
     assert names == {"a.txt", "b.md", "c.txt"}
     assert pipe.index_table().filter(F.col("filename") == "a.txt").count() == a_chunks
+    # the micro-batch's metrics are observed on its write, as in a batch ingest
+    c_chunks = pipe.index_table().filter(F.col("filename") == "c.txt").count()
+    assert pipe.last_ingest_metrics["chunks_written"] == c_chunks
+
+
+def _index_digest(pipe):
+    return sorted(
+        (r.filename, r.chunk_idx, r.chunk_text, r.n_tokens, tuple(r.embedding))
+        for r in pipe.index_table().collect()
+    )
+
+
+def test_stream_and_batch_give_the_same_index(spark, tmp_path):
+    """process_folder and ingest_stream read a folder with one scan and
+    one converter: the undecodable .txt fails conversion and the .csv is
+    never listed on both paths, so both build the same index."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.txt").write_text("alpha words " * 40)
+    (src / "b.md").write_text("# Beta\n\nbeta body " * 30)
+    (src / "c.txt").write_text("gamma " * 25)
+    (src / "broken.txt").write_bytes(b"\xff\xfe not utf-8 \xc3")
+    (src / "table.csv").write_text("x,y\n1,2\n")
+    cfg = ETLConfig(chunk_size=100, chunk_overlap=20, n_buckets=4)
+    batch = ETLPipeline(spark, str(tmp_path / "batch"), cfg)
+    batch.process_folder(str(src))
+    stream = ETLPipeline(spark, str(tmp_path / "stream"), cfg)
+    _drain(stream, src)
+    assert {r[0] for r in _index_digest(batch)} == {"a.txt", "b.md", "c.txt"}
+    assert _index_digest(stream) == _index_digest(batch)
 
 
 def test_ann_index_build_and_search(pipe, docs):

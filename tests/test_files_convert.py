@@ -84,6 +84,41 @@ def test_process_folder_skips_indexed_files_before_conversion(spark, tmp_path, m
     assert stats["n_documents"] == 3
 
 
+def test_each_file_is_converted_once_per_call(spark, tmp_path, monkeypatch):
+    """A bootstrap, an upsert into the index and a force=False run each
+    hand every file to to_markdown once: an upsert reads its converted
+    batch for the bucket set and both sides of the merge, from one
+    conversion. The count is an accumulator in a mapInPandas placed in
+    front of the converter, so it sees every execution of its input."""
+    from data_etl_spark.operators import convert
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    def counted(files, *a, **kw):
+        return to_markdown(files.mapInPandas(count, schema=files.schema), *a, **kw)
+
+    def conversions(run):
+        before = seen.value
+        run()
+        return seen.value - before
+
+    monkeypatch.setattr(convert, "to_markdown", counted)
+    d = _mkdocs(tmp_path)
+    pipe = ETLPipeline(
+        spark, str(tmp_path / "idx"), ETLConfig(chunk_size=100, chunk_overlap=20)
+    )
+    assert conversions(lambda: pipe.process_folder(d)) == 3  # a.txt b.md d.txt
+    assert conversions(lambda: pipe.process_folder(d)) == 3
+    (tmp_path / "in" / "e.txt").write_text("epsilon " * 50)
+    # d.txt failed conversion, so it is not indexed and converts again
+    assert conversions(lambda: pipe.process_folder(d, force=False)) == 2
+
+
 def test_wholetext_read(spark, tmp_path):
     d = _mkdocs(tmp_path)
     df = read_wholetext(spark, d + "/a.txt")

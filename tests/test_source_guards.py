@@ -189,3 +189,30 @@ def test_only_index_table_reads_the_index():
         "data_etl_spark/etl.py reads the index outside index_table — go "
         "through index_table():\n" + "\n".join(offenders)
     )
+
+
+#: a reader of files as text rows (the ``text`` source, whole-text or not)
+_TEXT_READER = re.compile(r"""format\(\s*["']text["']|wholetext|\.read(Stream)?\.text\(""")
+
+
+def test_one_reader_and_one_converter_for_files():
+    """process_folder and ingest_stream read files with the one binaryFile
+    scan and convert them in one place, so a folder gives one index
+    whichever path ingests it."""
+    import ast
+
+    assert _TEXT_READER.search('spark.readStream.format("text").option("wholetext", "true")')
+    assert not _TEXT_READER.search("scan_binary_files(self.spark, input_dir)")
+    source = (REPO / "data_etl_spark" / "etl.py").read_text()
+    converts = [
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call) and ast.unparse(node.func).endswith("to_markdown")
+    ]
+    assert len(converts) == 1, f"etl.py calls to_markdown at lines {converts}"
+    readers = [
+        f"etl.py:{lineno}: {line.strip()}"
+        for lineno, line in enumerate(source.splitlines(), 1)
+        if _TEXT_READER.search(line)
+    ]
+    assert not readers, "etl.py reads files as text:\n" + "\n".join(readers)
