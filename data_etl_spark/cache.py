@@ -15,6 +15,7 @@ them. The drain point for timing runs is ``scripts/_harness.py``: every
 timed rep and every warm-up run ends with ``release_tracked()``, so no
 run reads blocks an earlier one cached. The driver runs <=50 queries
 and exits, so its leak window is bounded by design.
+``unpersist_tracked`` drops one handle whose owner is done with it.
 
 ``localCheckpoint`` persists at the RDD layer, outside the CacheManager,
 so ``DataFrame.unpersist()`` never reaches its blocks: they are dropped
@@ -54,6 +55,14 @@ def tracked_persist(
     df.persist(level)
     _TRACKED.append(df)
     return df
+
+
+def unpersist_tracked(df: DataFrame) -> None:
+    """Unpersist a :func:`tracked_persist` handle now and stop tracking
+    it, for a caller that knows when its persist is done: the handle
+    would otherwise stay in the list until ``release_tracked``."""
+    df.unpersist()
+    _TRACKED[:] = [t for t in _TRACKED if t is not df]
 
 
 def persistent_rdd_ids(sc) -> set[int]:

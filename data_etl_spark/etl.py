@@ -48,7 +48,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .cache import tracked_persist
+from .cache import tracked_persist, unpersist_tracked
 from .functions import text as TX
 from .operators import chunking as CH
 from .operators import convert
@@ -123,9 +123,9 @@ class _SearchState:
     cells: tuple[int, DataFrame, DataFrame] | None = None
 
     def unpersist(self) -> None:
-        self.corpus.unpersist()
+        unpersist_tracked(self.corpus)
         if self.cells is not None:
-            self.cells[2].unpersist()
+            unpersist_tracked(self.cells[2])
 
 
 #: Env var pointing at a JSON config file (ETLConfig.from_json default).
@@ -438,7 +438,18 @@ class ETLPipeline:
         Returns {"n_documents", "n_chunks"} of the whole index after the
         write (A1 success-count analog); the batch's own counts, observed
         on the write job, are in ``last_ingest_metrics``.
+
+        ``docs`` from another SparkSession (a stream's micro-batch, a
+        ``newSession()``) is ingested by a pipeline on that session: an
+        Observation completes only on an action of the session it was
+        registered in, and the upsert's merge reads the index through the
+        pipeline's session, so the write has to run in the docs' one.
         """
+        if docs.sparkSession is not self.spark:
+            on_docs = ETLPipeline(docs.sparkSession, self.index_path, self.config)
+            out = on_docs.ingest(docs, force)
+            self.last_ingest_metrics = on_docs.last_ingest_metrics
+            return out
         exists = self._exists()
         batch = self.gate_extensions(docs)
         if not force and exists:
@@ -471,7 +482,7 @@ class ETLPipeline:
                     self._swap_buckets(merged, buckets)
         finally:
             if exists:
-                batch.unpersist()
+                unpersist_tracked(batch)
         self.last_ingest_metrics = {}  # post-gate, post-skip; {} if nothing was written
         if wrote:
             try:
@@ -574,12 +585,9 @@ class ETLPipeline:
         )
 
         def upsert(batch: DataFrame, _: int) -> None:
-            # a micro-batch lives in the stream's cloned session, and an
-            # Observation completes only on an action of the session it was
-            # registered in: a pipeline on that session runs the whole upsert
-            on_batch = ETLPipeline(batch.sparkSession, self.index_path, self.config)
-            on_batch._ingest_files(batch)
-            self.last_ingest_metrics = on_batch.last_ingest_metrics
+            # a micro-batch lives in the stream's cloned session: ingest
+            # runs its write in that session
+            self._ingest_files(batch)
 
         q = (
             files.writeStream.foreachBatch(upsert)
@@ -659,16 +667,23 @@ class ETLPipeline:
         return path
 
     def ann_search(self, queries: Sequence[str], k: int = 5) -> DataFrame:
-        """Approximate top-k via the IVF copy of :meth:`build_ann_index`."""
+        """Approximate top-k via the IVF copy of :meth:`build_ann_index`.
+        Its kernels are picked for n_q x n_cells probe-assignment pairs and
+        n_q x n_corpus / n_cells in-cell pairs, n_corpus from
+        :meth:`search`'s per-version state."""
         from .operators.ivf import ivf_search
 
         path = self.index_path + ".ivf"
         centroids = os.path.join(path, "_centroids")
         if not os.path.isdir(centroids):
             raise ValueError(f"no ANN index for {self.index_path}: call build_ann_index first")
+        n_cells = max(1, sum(d.startswith("cell=") for d in os.listdir(path)))
+        n_q = len(queries)
+        n_corpus = self._search_state().n_corpus
         qdf = self._query_frame(queries).drop("query_text")
         return ivf_search(
-            self.spark, path, qdf, self.spark.read.parquet(centroids), k=k, q_vec="q_emb"
+            self.spark, path, qdf, self.spark.read.parquet(centroids), k=k, q_vec="q_emb",
+            assign_pairs=n_q * n_cells, cell_pairs=n_q * n_corpus // n_cells, dim=FAKE_EMBED_DIM,
         )
 
     def hybrid_search(
@@ -685,7 +700,9 @@ class ETLPipeline:
         comparison), fused by sum(1/(rrf_k + rank)) and cut to ``k``.
         One operator, operators/knn.py::rrf_hybrid, serves this and
         plans/similarity.py::q_hybrid_rrf, which carries the
-        cross-engine oracle for the fusion semantics.
+        cross-engine oracle for the fusion semantics. The dense leg's
+        kernel is picked for n_q x n_corpus pairs, n_corpus from
+        :meth:`search`'s per-version state.
         """
         from .operators.knn import rrf_hybrid
 
@@ -693,7 +710,10 @@ class ETLPipeline:
         chunks = self.index_table().select(
             _chunk_id(), F.col("embedding").alias("c_emb"), F.col("chunk_text").alias("text")
         )
-        return rrf_hybrid(qdf, chunks, k, topn=topn, rrf_k=rrf_k)
+        n_pairs = len(queries) * self._search_state().n_corpus
+        return rrf_hybrid(
+            qdf, chunks, k, topn=topn, rrf_k=rrf_k, n_pairs=n_pairs, dim=FAKE_EMBED_DIM
+        )
 
     def search(self, queries: Sequence[str], k: int = 5, threshold: int = 2048) -> DataFrame:
         """Cost-gated cosine top-k over the index (V4): exact brute
@@ -718,9 +738,12 @@ class ETLPipeline:
         def cells(n_centroids: int) -> tuple[DataFrame, DataFrame]:
             if st.cells is None or st.cells[0] != n_centroids or not st.cells[2].is_cached:
                 if st.cells is not None:
-                    st.cells[2].unpersist()
+                    unpersist_tracked(st.cells[2])
                 cent = planner.ivf_centroids(st.corpus, n_centroids)
-                c_cells = tracked_persist(assign_cells(st.corpus, cent, "c_vec_id", "c_emb"))
+                c_cells = tracked_persist(assign_cells(
+                    st.corpus, cent, "c_vec_id", "c_emb",
+                    n_pairs=st.n_corpus * n_centroids, dim=FAKE_EMBED_DIM,
+                ))
                 st.cells = (n_centroids, cent, c_cells)
             return st.cells[1], st.cells[2]
 
@@ -728,7 +751,8 @@ class ETLPipeline:
         # looked up on the module at call time: the benchmark's tracer
         # wraps planner.auto_knn
         return planner.auto_knn(
-            qdf, st.corpus, k=k, threshold=threshold, n_corpus=st.n_corpus, cells=cells
+            qdf, st.corpus, k=k, threshold=threshold, n_corpus=st.n_corpus, cells=cells,
+            n_probes=len(queries), dim=FAKE_EMBED_DIM,
         )
 
     def _search_state(self) -> _SearchState:

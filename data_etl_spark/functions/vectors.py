@@ -14,18 +14,38 @@ DuckDB produce identical IEEE doubles — rankings can never diverge.
 Two implementations share the same IEEE semantics:
 
 - **Expression path** (``aggregate``/``zip_with`` higher-order
-  functions): used for O(rows) work (per-vector norms, signatures) and
-  wherever an expression is required.
-- **Arrow path** (``seq_dot``/``seq_cosine``/``seq_l2sq`` pandas UDFs):
-  used on the O(pairs) hot loops of similarity joins. numpy's
-  ``cumsum`` is a *sequential* left-fold over doubles, and elementwise
-  multiply rounds identically to the JVM's, so the Arrow path produces
-  bit-identical doubles to the expression path and to DuckDB (measured:
-  max abs diff 0.0 over 250k pairs) at ~3x the throughput — vectorized
-  C instead of interpreted per-element lambdas.
+  functions: :func:`dot`, :func:`cosine`, :func:`cosine_pre`,
+  :func:`l2sq`): evaluated inside the JVM task, no Python worker.
+- **Arrow path** (``seq_dot``/``seq_cosine``/``seq_l2sq``/
+  ``seq_cosine_pre`` pandas UDFs): numpy's ``cumsum`` is a *sequential*
+  left-fold over doubles, and elementwise multiply rounds identically to
+  the JVM's, so the Arrow path produces bit-identical doubles to the
+  expression path and to DuckDB (measured: max abs diff 0.0 over 250k
+  pairs; pinned in tests/test_kernels.py).
+
+Which path wins depends on the work, pairs x vector length. Each Arrow
+UDF pays a Python-worker round trip per task (~0.1-0.3 s) and then
+scores long vectors faster; the interpreted fold has no fixed cost, and
+its per-element cost is what grows with the length. Measured
+(CALIBRATION_r15.json, ``kernel``: 32 queries x n vectors, one task, top-5,
+min of 2): at dim 64 the expression path wins the three-fold ``cosine``
+through 16,384 pairs and loses from 32,768 up (0.72 vs 0.77 s, 3.7 vs
+9.8 s at 524,288); at dim 8 it wins through 524,288 pairs but for one
+near-tie at 131,072 (0.79 vs 0.74 s). In pairs the two crossovers are
+>4x apart; in pairs x dim the dim-64 one (1.0M-2.1M) falls where dim 8
+first nearly ties (1.0M). So :func:`kernel` gates on pairs x dim, at
+:data:`KERNEL_PAIR_DIMS`, the largest measured value at which the
+expression path won both kernels at both dims. One task per arm
+understates the expression path, which spreads over every task of a
+multi-partition corpus as the Arrow path does, minus its round trips.
+A per-call retrieval (32 probes x 8 centroids, 32 x ~450 in-cell pairs
+at dim 8) runs on the JVM; a caller with no pair count (``None``, the
+registry's corpus-scale similarity joins) keeps the Arrow path.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -113,6 +133,14 @@ def cosine_pre(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     return F.try_divide(dot(a, b), norm_a * norm_b)
 
 
+def l2sq(a: Column, b: Column) -> Column:
+    """Squared L2 in the expanded form dot(a,a)+dot(b,b)-2*dot(a,b): the
+    op order of :func:`seq_l2sq` and of the SQL oracles' distance, so the
+    two paths agree bit for bit. :func:`l2_distance` folds (x-y)^2, a
+    different order, and is not its twin."""
+    return dot(a, a) + dot(b, b) - F.lit(2.0) * dot(a, b)
+
+
 def l2_distance(a: Column, b: Column) -> Column:
     return F.sqrt(
         F.aggregate(
@@ -182,3 +210,27 @@ def seq_cosine_pre(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Colu
     """Arrow-path :func:`cosine_pre`: numpy dot / precomputed-norm product.
     Same zero-norm -> NULL contract (try_divide)."""
     return F.try_divide(seq_dot(a, b), norm_a * norm_b)
+
+
+#: Expected pairs x vector length at and below which a kernel runs on
+#: the expression path (CALIBRATION_r15.json, ``kernel``): see
+#: :func:`kernel`.
+KERNEL_PAIR_DIMS = 524_288
+
+_KERNELS: dict[str, tuple[Callable[..., Column], Callable[..., Column]]] = {
+    "cosine": (cosine, seq_cosine),
+    "cosine_pre": (cosine_pre, seq_cosine_pre),
+    "l2sq": (l2sq, seq_l2sq),
+}
+
+
+def kernel(name: str, n_pairs: int | None, dim: int | None) -> Callable[..., Column]:
+    """The ``name`` kernel ("cosine", "cosine_pre" or "l2sq") for a
+    caller that expects to score ``n_pairs`` pairs of ``dim``-long
+    vectors: the expression twin while n_pairs x dim is at most
+    :data:`KERNEL_PAIR_DIMS`, the Arrow UDF above that or when either
+    count is None. Both return the same doubles."""
+    expr, arrow = _KERNELS[name]
+    if n_pairs is None or dim is None or n_pairs * dim > KERNEL_PAIR_DIMS:
+        return arrow
+    return expr

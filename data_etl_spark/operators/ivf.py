@@ -22,6 +22,8 @@ from .knn import cell_knn
 def assign_cells(
     vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str,
     nprobe: int = 1,
+    n_pairs: int | None = None,
+    dim: int | None = None,
 ) -> DataFrame:
     """Nearest-centroid assignment: adds ``cell``. Centroids broadcast
     (they are tiny); ties break on cent_id for determinism. ``nprobe``
@@ -33,11 +35,13 @@ def assign_cells(
     tie-break or distance changes cannot drift between them and their
     oracles.
 
-    Distance runs on the Arrow path (seq_l2sq, the O(n_vectors x
-    n_centroids) hot loop), projected to a column first so the window
-    can order by it; sqrt is kept so tie behavior matches the oracle's
-    sqrt-distance ordering bit-for-bit."""
-    d = F.sqrt(V.seq_l2sq(F.col(vec_col), F.col("cemb")))
+    Distance is the expanded squared L2 over the n_vectors x n_centroids
+    pairs, on the kernel :func:`functions.vectors.kernel` picks for the
+    caller's expected ``n_pairs`` of ``dim``-long vectors (None: the
+    Arrow UDF), projected to a column first so the window can order by
+    it; sqrt is kept so tie behavior matches the oracle's sqrt-distance
+    ordering bit-for-bit."""
+    d = F.sqrt(V.kernel("l2sq", n_pairs, dim)(F.col(vec_col), F.col("cemb")))
     w = W.partitionBy(id_col).orderBy(F.col("__d").asc(), F.col("cent_id").asc())
     return (
         vectors.crossJoin(F.broadcast(centroids))
@@ -72,6 +76,9 @@ def ivf_search(
     centroids: DataFrame,
     k: int = 5,
     q_vec: str = "qemb",
+    assign_pairs: int | None = None,
+    cell_pairs: int | None = None,
+    dim: int | None = None,
 ) -> DataFrame:
     """Top-k cosine of each (q_vec_id, ``q_vec``) probe within its cell
     of the index :func:`build_ivf_index` wrote (ids c_vec_id).
@@ -79,7 +86,10 @@ def ivf_search(
     The equi-join on ``cell`` (operators/knn.py::cell_knn) pushes a
     partition filter into the index scan (dynamic partition pruning /
     broadcast join on the partition column), so only the probed cells'
-    files are read.
+    files are read. ``assign_pairs`` and ``cell_pairs`` are the expected
+    pair counts of the probe assignment and of the in-cell scoring, and
+    ``dim`` the vector length, for the kernel choice (None: the Arrow
+    UDFs).
     """
-    q_cells = assign_cells(probes, centroids, "q_vec_id", q_vec)
-    return cell_knn(q_cells, spark.read.parquet(path), k)
+    q_cells = assign_cells(probes, centroids, "q_vec_id", q_vec, n_pairs=assign_pairs, dim=dim)
+    return cell_knn(q_cells, spark.read.parquet(path), k, n_pairs=cell_pairs, dim=dim)

@@ -13,10 +13,14 @@ Gates measured:
 - lsh band    (8-bit vs 16-bit band mask at growing corpus size —
                q_lsh_adaptive's width rule)
 - auto_join   (plain vs salted equi-join at growing hot-key share)
+- kernel      (JVM expression vs Arrow UDF similarity kernel at growing
+               pair counts, dim 8 and dim 64: functions/vectors.py's
+               KERNEL_PAIR_DIMS)
 
-Usage: python scripts/calibrate_gates.py [round_no]
-Each cell is min-of-2 after a warmup pass; sizes are deterministic
-limits/samples of the sf1 tables.
+Usage: python scripts/calibrate_gates.py [round_no] [kernel]
+With ``kernel`` only the kernel section runs. Each cell is min-of-2
+after a warmup pass; sizes are deterministic limits/samples of the sf1
+tables.
 """
 
 from __future__ import annotations
@@ -31,16 +35,70 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from _harness import best_of
+from data_etl_spark.functions import vectors as V
 from data_etl_spark.session import build_session
 from data_etl_spark.sources import load_table
 
 SF1 = os.environ.get("SF1_DIR", "/tmp/sf1")
+
+#: probe rows of the kernel section: one ETLPipeline.search batch
+KERNEL_QUERIES = 32
+
+
+def kernel_rows(spark) -> dict[str, dict]:
+    """Both similarity kernel paths at growing pair counts: 32 queries x
+    n corpus vectors scored by ``cosine`` (three folds per pair: the
+    in-cell and assignment kernels) and by ``cosine_pre`` (one fold:
+    exact kNN's), each cut to a top-5. dim 64 is the registry's
+    ``embeddings``; dim 8 is the pipeline's ``fake_embedding`` of the
+    ``documents`` text. Arms are forced through the chooser itself:
+    ``n_pairs=0`` is the expression path, ``None`` the Arrow path."""
+    from data_etl_spark.etl import fake_embedding
+    from data_etl_spark.operators.knn import exact_knn, top_k
+
+    sources = {
+        64: load_table(spark, SF1, "embeddings")
+        .filter(F.col("embedding").isNotNull())
+        .select(F.col("vec_id").alias("id"), V.as_double(F.col("embedding")).alias("emb")),
+        8: load_table(spark, SF1, "documents")
+        .select(F.col("doc_id").alias("id"), fake_embedding(F.col("text")).alias("emb")),
+    }
+    rows: dict[str, dict] = {}
+    for dim, vecs in sources.items():
+        q = vecs.orderBy("id").limit(KERNEL_QUERIES).select(
+            F.col("id").alias("q_vec_id"), F.col("emb").alias("q_emb")
+        )
+        for n in (64, 256, 512, 1024, 2048, 4096, 16384):
+            c = vecs.orderBy(F.desc("id")).limit(n).select(
+                F.col("id").alias("c_vec_id"), F.col("emb").alias("c_emb")
+            )
+
+            def cosine(n_pairs):
+                score = V.kernel("cosine", n_pairs, dim)(F.col("q_emb"), F.col("c_emb"))
+                pairs = F.broadcast(q).crossJoin(c)
+                return top_k(pairs.select("q_vec_id", "c_vec_id", score.alias("score")), 5)
+
+            cell = {"pairs": KERNEL_QUERIES * n}
+            for name, build in (
+                ("cosine", cosine),
+                ("cosine_pre", lambda n: exact_knn(F.broadcast(q), c, 5, n_pairs=n, dim=dim)),
+            ):
+                best_of(lambda: build(0), 1)  # warm both paths
+                best_of(lambda: build(None), 1)
+                cell[f"{name}_expr"] = best_of(lambda: build(0))
+                cell[f"{name}_arrow"] = best_of(lambda: build(None))
+            rows[f"d{dim}_n{n}"] = cell
+            print(f"kernel dim={dim} pairs={cell['pairs']}: {cell}", flush=True)
+    return rows
 
 
 def main() -> None:
     round_no = sys.argv[1] if len(sys.argv) > 1 else "08"
     spark = build_session("calibrate-gates")
     out: dict[str, dict] = {}
+    if sys.argv[2:] == ["kernel"]:
+        out["kernel"] = kernel_rows(spark)
+        return _write(out, round_no)
 
     # ---- auto_rank: window vs bucketed --------------------------------
     from data_etl_spark.operators.rank import exact_global_rank
@@ -105,7 +163,6 @@ def main() -> None:
     out["auto_dedup"] = dd_rows
 
     # ---- lsh band width: 8-bit vs 16-bit mask -------------------------
-    from data_etl_spark.functions import vectors as V
     from data_etl_spark.plans.similarity import _band_sigs
 
     lsh_rows = {}
@@ -177,7 +234,11 @@ def main() -> None:
         join_rows[hot_pct] = {"plain": t_plain, "salted": t_salt, "skew_ratio": ratio}
         print(f"join hot={hot_pct}%: plain {t_plain}s salted {t_salt}s ratio {ratio}", flush=True)
     out["auto_join"] = join_rows
+    out["kernel"] = kernel_rows(spark)
+    _write(out, round_no)
 
+
+def _write(out: dict, round_no: str) -> None:
     path = os.path.join(
         os.path.dirname(__file__), "..", f"CALIBRATION_r{round_no}.json"
     )

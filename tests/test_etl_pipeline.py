@@ -875,3 +875,70 @@ def test_recover_skips_sibling_prefix_intent(pipe, docs, spark, tmp_path):
     # the owning pipeline recovers (and clears) its own record
     assert sib.recover() == ["swap"]
     assert not os.path.exists(sibling_intent)
+
+
+def test_repeat_ivf_search_scores_on_the_jvm(spark, tmp_path):
+    """A repeat 32-query search on the IVF branch scores its per-call
+    pairs with the JVM expression kernels: no ArrowEvalPython node in its
+    executed plan, at most 4 jobs, and the rows of the stateless Arrow
+    plan."""
+    from data_etl_spark.etl import _chunk_id, fake_embedding
+    from data_etl_spark.operators.planner import auto_knn
+
+    p = ETLPipeline(spark, str(tmp_path / "index"), ETLConfig(chunk_size=100, chunk_overlap=20))
+    rows = [(f"d{i}.txt", f"w{i} v{i % 7} u{i % 3} " * (10 + i % 9)) for i in range(90)]
+    p.ingest(spark.createDataFrame(rows, "filename string, text string"))
+    qs = [f"w{i} v{i % 5} u{i % 2}" for i in range(32)]
+    p.search(qs, k=3, threshold=1).collect()
+    res = p.search(qs, k=3, threshold=1)
+    assert "ArrowEvalPython" not in res._jdf.queryExecution().executedPlan().toString()
+    got = []
+    tasks = _jobs(spark, "repeat-ivf-search-32", lambda: got.extend(res.collect()))
+    assert len(tasks) <= 4, tasks
+
+    probes = spark.createDataFrame(list(enumerate(qs)), "q_vec_id long, text string").select(
+        "q_vec_id", fake_embedding(F.col("text")).alias("q_emb")
+    )
+    corpus = spark.read.parquet(p.index_path).select(_chunk_id(), F.col("embedding").alias("c_emb"))
+    want = auto_knn(probes, corpus, k=3, threshold=1)
+    assert "ArrowEvalPython" in want._jdf.queryExecution().executedPlan().toString()
+    assert sorted(tuple(r) for r in got) == _search_rows(want)
+
+
+def test_tracked_handles_stay_bounded_across_upserts(pipe, docs, spark):
+    """Upserts and search-state rebuilds untrack what they unpersist:
+    after a bootstrap, five 1-doc upserts and two state rebuilds the
+    tracked list holds only the live search state."""
+    from data_etl_spark import cache
+
+    pipe.ingest(docs)
+    cache.release_tracked()
+    pipe.search(["word1"], k=2, threshold=1).collect()
+    for i in range(5):
+        one = spark.createDataFrame([("doc_0.pdf", f"upsert{i} " * 40)], "filename string, text string")
+        pipe.ingest(one)
+        if i in (1, 3):
+            pipe.search(["word1"], k=2, threshold=1).collect()
+    assert len(cache._TRACKED) <= 2, len(cache._TRACKED)
+
+
+def test_ingest_from_another_session_into_an_existing_index(pipe, docs, spark):
+    """A DataFrame of ``spark.newSession()`` upserts into an existing
+    index, its batch metrics observed, within a bounded wait."""
+    import threading
+
+    pipe.ingest(docs)
+    other = spark.newSession()
+    upd = other.createDataFrame(
+        [("doc_0.pdf", "entirely new body " * 60)], "filename string, text string"
+    )
+    out: list = []
+    t = threading.Thread(target=lambda: out.append(pipe.ingest(upd)), daemon=True)
+    t.start()
+    t.join(180)
+    if t.is_alive():
+        pytest.fail("ingest of a newSession() frame did not finish within 180 s")
+    assert out[0]["n_documents"] == 5
+    new = pipe.index_table().filter("filename = 'doc_0.pdf'")
+    assert new.filter("chunk_idx = 0").collect()[0].chunk_text.startswith("entirely new body")
+    assert pipe.last_ingest_metrics["chunks_written"] == new.count()

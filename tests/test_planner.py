@@ -206,14 +206,23 @@ def test_auto_dedup_single_driver_action(spark):
     from data_etl_spark.operators.planner import auto_dedup
 
     d = _docs(spark)
-    tracker = spark.sparkContext.statusTracker()
-    b0 = len(tracker.getJobIdsForGroup(None) or [])
-    d.count()
-    baseline = len(tracker.getJobIdsForGroup(None) or []) - b0
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    auto_dedup(d, threshold=3, tau=0.5)
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after - before <= baseline, (
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        # a job group of its own, so a job another thread issues (a
+        # previous test's trailing stage) is not counted, and the
+        # listener bus drained, so every job of ``run`` is
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    baseline = jobs("auto-dedup-baseline", d.count)
+    assert baseline >= 1
+    assert jobs("auto-dedup-gate", lambda: auto_dedup(d, threshold=3, tau=0.5)) <= baseline, (
         "auto_dedup ran more driver jobs than its one count gate"
     )
 

@@ -216,3 +216,39 @@ def test_one_reader_and_one_converter_for_files():
         if _TEXT_READER.search(line)
     ]
     assert not readers, "etl.py reads files as text:\n" + "\n".join(readers)
+
+
+#: the Arrow similarity UDFs, by name
+_ARROW_KERNELS = re.compile(r"\bseq_(dot|cosine|cosine_pre|l2sq)\b")
+
+#: code that names them: their home, which holds the one kernel chooser
+#: (functions/vectors.py::kernel), and the registry sites that keep the
+#: Arrow path without a pair count — corpus-scale similarity joins,
+#: where it scores ~3x faster per pair (CALIBRATION_r15.json) — plus the
+#: calibration script's copy of one of them and the tests that pin them
+_ARROW_KERNEL_SITES = {
+    "data_etl_spark/functions/vectors.py",
+    "data_etl_spark/plans/similarity.py",
+    "data_etl_spark/operators/kmeans.py",
+    "scripts/calibrate_gates.py",
+    "tests/test_kernels.py",
+    "tests/test_stress.py",
+}
+
+
+def test_arrow_kernels_are_named_only_at_listed_sites():
+    """Everything else scores pairs through functions/vectors.py::kernel,
+    so a per-call path cannot bypass the calibrated gate. Comments do not
+    count."""
+    assert _ARROW_KERNELS.search("d = V.seq_" + "l2sq(a, b)")
+    assert not _ARROW_KERNELS.search("d = V.l2sq(a, b)  ")
+    files = [*_source_files(), *(REPO / "tests").glob("*.py")]
+    naming = {
+        path.relative_to(REPO).as_posix()
+        for path in files
+        if any(
+            _ARROW_KERNELS.search(line.split("#", 1)[0])
+            for line in path.read_text().splitlines()
+        )
+    }
+    assert naming <= _ARROW_KERNEL_SITES, sorted(naming - _ARROW_KERNEL_SITES)
