@@ -667,23 +667,18 @@ class ETLPipeline:
         return path
 
     def ann_search(self, queries: Sequence[str], k: int = 5) -> DataFrame:
-        """Approximate top-k via the IVF copy of :meth:`build_ann_index`.
-        Its kernels are picked for n_q x n_cells probe-assignment pairs and
-        n_q x n_corpus / n_cells in-cell pairs, n_corpus from
-        :meth:`search`'s per-version state."""
+        """Approximate top-k via the IVF copy of :meth:`build_ann_index`,
+        scored on the JVM as :meth:`search` is."""
         from .operators.ivf import ivf_search
 
         path = self.index_path + ".ivf"
         centroids = os.path.join(path, "_centroids")
         if not os.path.isdir(centroids):
             raise ValueError(f"no ANN index for {self.index_path}: call build_ann_index first")
-        n_cells = max(1, sum(d.startswith("cell=") for d in os.listdir(path)))
-        n_q = len(queries)
-        n_corpus = self._search_state().n_corpus
         qdf = self._query_frame(queries).drop("query_text")
         return ivf_search(
             self.spark, path, qdf, self.spark.read.parquet(centroids), k=k, q_vec="q_emb",
-            assign_pairs=n_q * n_cells, cell_pairs=n_q * n_corpus // n_cells, dim=FAKE_EMBED_DIM,
+            jvm=True,
         )
 
     def hybrid_search(
@@ -700,9 +695,8 @@ class ETLPipeline:
         comparison), fused by sum(1/(rrf_k + rank)) and cut to ``k``.
         One operator, operators/knn.py::rrf_hybrid, serves this and
         plans/similarity.py::q_hybrid_rrf, which carries the
-        cross-engine oracle for the fusion semantics. The dense leg's
-        kernel is picked for n_q x n_corpus pairs, n_corpus from
-        :meth:`search`'s per-version state.
+        cross-engine oracle for the fusion semantics. The dense leg
+        scores on the JVM, as :meth:`search` does.
         """
         from .operators.knn import rrf_hybrid
 
@@ -710,10 +704,7 @@ class ETLPipeline:
         chunks = self.index_table().select(
             _chunk_id(), F.col("embedding").alias("c_emb"), F.col("chunk_text").alias("text")
         )
-        n_pairs = len(queries) * self._search_state().n_corpus
-        return rrf_hybrid(
-            qdf, chunks, k, topn=topn, rrf_k=rrf_k, n_pairs=n_pairs, dim=FAKE_EMBED_DIM
-        )
+        return rrf_hybrid(qdf, chunks, k, topn=topn, rrf_k=rrf_k, jvm=True)
 
     def search(self, queries: Sequence[str], k: int = 5, threshold: int = 2048) -> DataFrame:
         """Cost-gated cosine top-k over the index (V4): exact brute
@@ -729,7 +720,12 @@ class ETLPipeline:
         the corpus cell assignment. Later calls pass them to ``auto_knn``
         and issue only query jobs. A commit or a ``release_tracked()``
         drain rebuilds the state on the next call; the rows are those of
-        the stateless plan either way."""
+        the stateless plan either way.
+
+        Every similarity kernel runs on the JVM expression path
+        (``jvm=True``): at the pipeline's FAKE_EMBED_DIM = 8 it beat the
+        Arrow UDFs at every measured pair count (functions/vectors.py),
+        and a per-call search pays no Python-worker round trip."""
         from .operators import planner
         from .operators.ivf import assign_cells
 
@@ -740,10 +736,9 @@ class ETLPipeline:
                 if st.cells is not None:
                     unpersist_tracked(st.cells[2])
                 cent = planner.ivf_centroids(st.corpus, n_centroids)
-                c_cells = tracked_persist(assign_cells(
-                    st.corpus, cent, "c_vec_id", "c_emb",
-                    n_pairs=st.n_corpus * n_centroids, dim=FAKE_EMBED_DIM,
-                ))
+                c_cells = tracked_persist(
+                    assign_cells(st.corpus, cent, "c_vec_id", "c_emb", jvm=True)
+                )
                 st.cells = (n_centroids, cent, c_cells)
             return st.cells[1], st.cells[2]
 
@@ -752,7 +747,7 @@ class ETLPipeline:
         # wraps planner.auto_knn
         return planner.auto_knn(
             qdf, st.corpus, k=k, threshold=threshold, n_corpus=st.n_corpus, cells=cells,
-            n_probes=len(queries), dim=FAKE_EMBED_DIM,
+            jvm=True,
         )
 
     def _search_state(self) -> _SearchState:

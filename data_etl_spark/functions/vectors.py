@@ -23,24 +23,23 @@ Two implementations share the same IEEE semantics:
   expression path and to DuckDB (measured: max abs diff 0.0 over 250k
   pairs; pinned in tests/test_kernels.py).
 
-Which path wins depends on the work, pairs x vector length. Each Arrow
-UDF pays a Python-worker round trip per task (~0.1-0.3 s) and then
-scores long vectors faster; the interpreted fold has no fixed cost, and
-its per-element cost is what grows with the length. Measured
-(CALIBRATION_r15.json, ``kernel``: 32 queries x n vectors, one task, top-5,
-min of 2): at dim 64 the expression path wins the three-fold ``cosine``
-through 16,384 pairs and loses from 32,768 up (0.72 vs 0.77 s, 3.7 vs
-9.8 s at 524,288); at dim 8 it wins through 524,288 pairs but for one
-near-tie at 131,072 (0.79 vs 0.74 s). In pairs the two crossovers are
->4x apart; in pairs x dim the dim-64 one (1.0M-2.1M) falls where dim 8
-first nearly ties (1.0M). So :func:`kernel` gates on pairs x dim, at
-:data:`KERNEL_PAIR_DIMS`, the largest measured value at which the
-expression path won both kernels at both dims. One task per arm
-understates the expression path, which spreads over every task of a
-multi-partition corpus as the Arrow path does, minus its round trips.
-A per-call retrieval (32 probes x 8 centroids, 32 x ~450 in-cell pairs
-at dim 8) runs on the JVM; a caller with no pair count (``None``, the
-registry's corpus-scale similarity joins) keeps the Arrow path.
+Which path wins depends on the vector length. Each Arrow UDF pays a
+Python-worker round trip per task (~0.1-0.3 s) and an Arrow
+conversion per row; the interpreted fold has neither, and its
+per-element cost is what grows with the length. Measured
+(CALIBRATION_r15.json, ``kernel``: 32 queries x n vectors, one task,
+top-5, min of 2): at dim 64 (the registry's ``embeddings``) the
+expression path wins the three-fold ``cosine`` through 8,192 pairs
+and loses from 16,384 up (3.1 vs 7.9 s at 524,288), since each extra
+pair costs it ~3x what it costs the Arrow path; at dim 8 (the
+pipeline's ``fake_embedding``) an extra pair costs the expression path
+less than the Arrow path (~1.9 vs ~3.1 us for ``cosine``), and the
+expression path won both kernels at every measured size, up to
+1,048,576 pairs (3.0 vs 3.8 s; ``cosine_pre`` 2.0 vs 4.0 s). So the
+chooser is not a pair-count gate: :func:`kernel` gives the expression
+twin to a caller that asks for the JVM (``ETLPipeline``'s retrieval,
+dim 8) and the Arrow UDF to everyone else (the registry's corpus-scale
+similarity joins at dim 64).
 """
 
 from __future__ import annotations
@@ -212,11 +211,6 @@ def seq_cosine_pre(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Colu
     return F.try_divide(seq_dot(a, b), norm_a * norm_b)
 
 
-#: Expected pairs x vector length at and below which a kernel runs on
-#: the expression path (CALIBRATION_r15.json, ``kernel``): see
-#: :func:`kernel`.
-KERNEL_PAIR_DIMS = 524_288
-
 _KERNELS: dict[str, tuple[Callable[..., Column], Callable[..., Column]]] = {
     "cosine": (cosine, seq_cosine),
     "cosine_pre": (cosine_pre, seq_cosine_pre),
@@ -224,13 +218,9 @@ _KERNELS: dict[str, tuple[Callable[..., Column], Callable[..., Column]]] = {
 }
 
 
-def kernel(name: str, n_pairs: int | None, dim: int | None) -> Callable[..., Column]:
-    """The ``name`` kernel ("cosine", "cosine_pre" or "l2sq") for a
-    caller that expects to score ``n_pairs`` pairs of ``dim``-long
-    vectors: the expression twin while n_pairs x dim is at most
-    :data:`KERNEL_PAIR_DIMS`, the Arrow UDF above that or when either
-    count is None. Both return the same doubles."""
+def kernel(name: str, jvm: bool) -> Callable[..., Column]:
+    """The ``name`` kernel ("cosine", "cosine_pre" or "l2sq"): its
+    expression twin if ``jvm``, else its Arrow UDF. Both return the
+    same doubles; the module docstring says where each path wins."""
     expr, arrow = _KERNELS[name]
-    if n_pairs is None or dim is None or n_pairs * dim > KERNEL_PAIR_DIMS:
-        return arrow
-    return expr
+    return expr if jvm else arrow

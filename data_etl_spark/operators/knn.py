@@ -50,25 +50,23 @@ def exact_knn(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    n_pairs: int | None = None,
-    dim: int | None = None,
+    jvm: bool = False,
 ) -> DataFrame:
     """Top-k by cosine of each (q_vec_id, q_emb) query over the
     (c_vec_id, c_emb) corpus.
 
     Inputs must carry double-cast embedding arrays (functions.vectors
     .as_double) so scores are bit-identical with the SQL oracle.
-    ``n_pairs``, the caller's expected queries x corpus count, and
-    ``dim``, the vector length, pick the scoring kernel
-    (functions.vectors.kernel; None: the Arrow UDF).
+    ``jvm`` scores on the expression path instead of the Arrow UDF
+    (functions.vectors.kernel).
     """
     # norms once per vector (not per pair): same IEEE doubles, 1/3 the
     # higher-order-function folds on the queries x corpus blow-up.
     q = queries.withColumn("__qn", V.l2_norm(F.col("q_emb")))
     c = corpus.withColumn("__cn", V.l2_norm(F.col("c_emb")))
-    # one dot per pair: the JVM fold for a small pair set, the Arrow UDF
-    # (~3x the throughput once its round trip is paid) for a large one
-    score = V.kernel("cosine_pre", n_pairs, dim)(
+    # one dot per pair: the JVM fold for short vectors, the Arrow UDF
+    # (~3x the throughput per pair at dim 64) for the registry's
+    score = V.kernel("cosine_pre", jvm)(
         F.col("q_emb"), F.col("c_emb"), F.col("__qn"), F.col("__cn")
     )
     return top_k(q.crossJoin(c).select("q_vec_id", "c_vec_id", score.alias("score")), k)
@@ -78,8 +76,7 @@ def cell_knn(
     q_cells: DataFrame,
     c_cells: DataFrame,
     k: int,
-    n_pairs: int | None = None,
-    dim: int | None = None,
+    jvm: bool = False,
 ) -> DataFrame:
     """Top-k cosine of each probe among the corpus vectors of its cell(s).
 
@@ -88,11 +85,10 @@ def cell_knn(
     are found by that position. The equi-join on ``cell`` pairs a probe
     only with its cells' corpus rows; when ``c_cells`` is the
     cell-partitioned index table, the join prunes the scan to the
-    probed cells' partitions. ``n_pairs``, the caller's expected count
-    of in-cell pairs, and ``dim``, the vector length, pick the scoring
-    kernel (functions.vectors.kernel; None: the Arrow UDF).
+    probed cells' partitions. ``jvm`` scores on the expression path
+    instead of the Arrow UDF (functions.vectors.kernel).
     """
-    score = V.kernel("cosine", n_pairs, dim)(F.col(q_cells.columns[1]), F.col(c_cells.columns[1]))
+    score = V.kernel("cosine", jvm)(F.col(q_cells.columns[1]), F.col(c_cells.columns[1]))
     return top_k(
         q_cells.join(c_cells, "cell").select("q_vec_id", "c_vec_id", score.alias("score")), k
     )
@@ -104,8 +100,7 @@ def rrf_hybrid(
     k: int,
     topn: int = 20,
     rrf_k: int = 60,
-    n_pairs: int | None = None,
-    dim: int | None = None,
+    jvm: bool = False,
 ) -> DataFrame:
     """Hybrid dense + lexical retrieval with reciprocal-rank fusion.
 
@@ -115,15 +110,14 @@ def rrf_hybrid(
     on word (never all-pairs text comparison; integer counts, so ranks
     are bit-exact across engines). Fusion: sum(1/(rrf_k + rank)) over
     the legs a candidate appears in, cut to ``k``. Returns (q_vec_id,
-    rank, c_vec_id, rrf). ``n_pairs`` and ``dim`` are the dense leg's
-    expected queries x corpus count and vector length (:func:`exact_knn`).
+    rank, c_vec_id, rrf). ``jvm`` scores the dense leg on the
+    expression path (:func:`exact_knn`).
     """
     dense = exact_knn(
         F.broadcast(queries.select("q_vec_id", "q_emb")),
         corpus.select("c_vec_id", "c_emb"),
         topn,
-        n_pairs=n_pairs,
-        dim=dim,
+        jvm=jvm,
     ).select("q_vec_id", "c_vec_id", F.col("rank").alias("rd"))
     qw = queries.select("q_vec_id", F.explode(TX.words(F.col("text"))).alias("word")).distinct()
     cw = corpus.select("c_vec_id", F.explode(TX.words(F.col("text"))).alias("word")).distinct()

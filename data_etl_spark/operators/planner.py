@@ -138,8 +138,7 @@ def auto_knn(
     n_centroids: int = 8,
     n_corpus: int | None = None,
     cells: Callable[[int], tuple[DataFrame, DataFrame]] | None = None,
-    n_probes: int | None = None,
-    dim: int | None = None,
+    jvm: bool = False,
 ) -> DataFrame:
     """Top-k cosine per (q_vec_id, q_emb) probe over the (c_vec_id,
     c_emb) corpus; physical strategy chosen by corpus size.
@@ -159,37 +158,26 @@ def auto_knn(
       :func:`ivf_centroids` of ``corpus`` and ``corpus``'s
       ``assign_cells`` output under them. That skips the centroid pick
       and the corpus assignment;
-    - ``n_probes`` and ``dim``: the probe row count and the vector
-      length. Each similarity kernel then runs on the path
-      functions/vectors.py::kernel picks for its expected pair count:
-      n_probes x n_corpus (exact), n_probes x n_centroids (probe
-      assignment), n_probes x n_corpus / n_centroids (in-cell scoring),
-      n_corpus x n_centroids (corpus assignment). Unset, every kernel is
-      the Arrow UDF.
+    - ``jvm``: every similarity kernel of the chosen branch (exact
+      scoring, probe and corpus assignment, in-cell scoring) runs on the
+      JVM expression path instead of the Arrow UDF, which is what a
+      per-call retrieval over short vectors wants
+      (functions/vectors.py::kernel).
 
     All unset, the plan is the stateless one the registry's
     ``q_knn_auto`` checks against its oracle.
     """
     if n_corpus is None:
         n_corpus = corpus.count()
-
-    def pairs(per_probe: float) -> int | None:
-        return None if n_probes is None else int(n_probes * per_probe)
-
     if n_corpus <= threshold:
-        return exact_knn(F.broadcast(probes), corpus, k=k, n_pairs=pairs(n_corpus), dim=dim)
+        return exact_knn(F.broadcast(probes), corpus, k=k, jvm=jvm)
     if cells is None:
         cent = ivf_centroids(corpus, n_centroids)
-        c_cells = assign_cells(
-            corpus, cent, "c_vec_id", "c_emb",
-            n_pairs=None if n_probes is None else n_corpus * n_centroids, dim=dim,
-        )
+        c_cells = assign_cells(corpus, cent, "c_vec_id", "c_emb", jvm=jvm)
     else:
         cent, c_cells = cells(n_centroids)
-    q_cells = assign_cells(
-        probes, cent, "q_vec_id", "q_emb", n_pairs=pairs(n_centroids), dim=dim
-    )
-    return cell_knn(q_cells, c_cells, k, n_pairs=pairs(n_corpus / n_centroids), dim=dim)
+    q_cells = assign_cells(probes, cent, "q_vec_id", "q_emb", jvm=jvm)
+    return cell_knn(q_cells, c_cells, k, jvm=jvm)
 
 
 def auto_dedup(

@@ -14,8 +14,8 @@ Gates measured:
                q_lsh_adaptive's width rule)
 - auto_join   (plain vs salted equi-join at growing hot-key share)
 - kernel      (JVM expression vs Arrow UDF similarity kernel at growing
-               pair counts, dim 8 and dim 64: functions/vectors.py's
-               KERNEL_PAIR_DIMS)
+               pair counts, dim 8 and dim 64: where functions/vectors.py's
+               two paths win)
 
 Usage: python scripts/calibrate_gates.py [round_no] [kernel]
 With ``kernel`` only the kernel section runs. Each cell is min-of-2
@@ -51,8 +51,9 @@ def kernel_rows(spark) -> dict[str, dict]:
     in-cell and assignment kernels) and by ``cosine_pre`` (one fold:
     exact kNN's), each cut to a top-5. dim 64 is the registry's
     ``embeddings``; dim 8 is the pipeline's ``fake_embedding`` of the
-    ``documents`` text. Arms are forced through the chooser itself:
-    ``n_pairs=0`` is the expression path, ``None`` the Arrow path."""
+    ``documents`` text, measured one size further (1,048,576 pairs) to
+    look for a crossover. Arms are forced through the chooser itself:
+    ``jvm=True`` is the expression path, ``False`` the Arrow path."""
     from data_etl_spark.etl import fake_embedding
     from data_etl_spark.operators.knn import exact_knn, top_k
 
@@ -68,25 +69,25 @@ def kernel_rows(spark) -> dict[str, dict]:
         q = vecs.orderBy("id").limit(KERNEL_QUERIES).select(
             F.col("id").alias("q_vec_id"), F.col("emb").alias("q_emb")
         )
-        for n in (64, 256, 512, 1024, 2048, 4096, 16384):
+        for n in (64, 256, 512, 1024, 2048, 4096, 16384, *((32768,) if dim == 8 else ())):
             c = vecs.orderBy(F.desc("id")).limit(n).select(
                 F.col("id").alias("c_vec_id"), F.col("emb").alias("c_emb")
             )
 
-            def cosine(n_pairs):
-                score = V.kernel("cosine", n_pairs, dim)(F.col("q_emb"), F.col("c_emb"))
+            def cosine(jvm):
+                score = V.kernel("cosine", jvm)(F.col("q_emb"), F.col("c_emb"))
                 pairs = F.broadcast(q).crossJoin(c)
                 return top_k(pairs.select("q_vec_id", "c_vec_id", score.alias("score")), 5)
 
             cell = {"pairs": KERNEL_QUERIES * n}
             for name, build in (
                 ("cosine", cosine),
-                ("cosine_pre", lambda n: exact_knn(F.broadcast(q), c, 5, n_pairs=n, dim=dim)),
+                ("cosine_pre", lambda jvm: exact_knn(F.broadcast(q), c, 5, jvm=jvm)),
             ):
-                best_of(lambda: build(0), 1)  # warm both paths
-                best_of(lambda: build(None), 1)
-                cell[f"{name}_expr"] = best_of(lambda: build(0))
-                cell[f"{name}_arrow"] = best_of(lambda: build(None))
+                best_of(lambda: build(True), 1)  # warm both paths
+                best_of(lambda: build(False), 1)
+                cell[f"{name}_expr"] = best_of(lambda: build(True))
+                cell[f"{name}_arrow"] = best_of(lambda: build(False))
             rows[f"d{dim}_n{n}"] = cell
             print(f"kernel dim={dim} pairs={cell['pairs']}: {cell}", flush=True)
     return rows

@@ -905,6 +905,36 @@ def test_repeat_ivf_search_scores_on_the_jvm(spark, tmp_path):
     assert sorted(tuple(r) for r in got) == _search_rows(want)
 
 
+def test_ann_and_hybrid_search_score_on_the_jvm(spark, tmp_path):
+    """ann_search and hybrid_search score on the JVM expression kernels
+    (no ArrowEvalPython node), return the rows of their Arrow plans, and
+    build no search state: an ann_search reads only the IVF copy."""
+    from data_etl_spark.etl import _chunk_id
+    from data_etl_spark.operators.ivf import ivf_search
+    from data_etl_spark.operators.knn import rrf_hybrid
+
+    p = ETLPipeline(spark, str(tmp_path / "index"), ETLConfig(chunk_size=100, chunk_overlap=20))
+    rows = [(f"d{i}.txt", f"w{i} v{i % 7} u{i % 3} " * (10 + i % 9)) for i in range(40)]
+    p.ingest(spark.createDataFrame(rows, "filename string, text string"))
+    path = p.build_ann_index(n_cells=4, kmeans_iter=2)
+    qs = [f"w{i} v{i % 5} u{i % 2}" for i in range(8)]
+    ann, hybrid = p.ann_search(qs, k=3), p.hybrid_search(qs, k=3)
+    qdf = p._query_frame(qs)
+    chunks = p.index_table().select(
+        _chunk_id(), F.col("embedding").alias("c_emb"), F.col("chunk_text").alias("text")
+    )
+    want_ann = ivf_search(
+        spark, path, qdf.drop("query_text"), spark.read.parquet(path + "/_centroids"),
+        k=3, q_vec="q_emb",
+    )
+    want_hybrid = rrf_hybrid(qdf.withColumnRenamed("query_text", "text"), chunks, 3)
+    for got, want in ((ann, want_ann), (hybrid, want_hybrid)):
+        assert "ArrowEvalPython" not in got._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" in want._jdf.queryExecution().executedPlan().toString()
+        assert _search_rows(got) == _search_rows(want)
+    assert p._search is None
+
+
 def test_tracked_handles_stay_bounded_across_upserts(pipe, docs, spark):
     """Upserts and search-state rebuilds untrack what they unpersist:
     after a bootstrap, five 1-doc upserts and two state rebuilds the

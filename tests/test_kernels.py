@@ -1,12 +1,10 @@
 """The similarity kernels' two paths (functions/vectors.py): the JVM
 expression twins return the Arrow UDFs' doubles bit for bit, and the
-one pair-count gate picks between them — per-call retrieval on the JVM,
-large or unknown pair sets on the Arrow path."""
+operators take the path their caller asks for — the pipeline's per-call
+retrieval on the JVM, everything else on the Arrow path."""
 
 from __future__ import annotations
 
-import json
-import os
 import re
 
 import pytest
@@ -61,34 +59,14 @@ def test_expression_twins_match_the_arrow_udfs_bit_for_bit(spark, dim):
     assert all(_bits(by[(13, j)]) == _bits(by[(0, j)]) for j in range(16))
 
 
-def test_kernel_gate_flips_at_the_constant():
-    at = V.KERNEL_PAIR_DIMS
-    assert V.kernel("cosine", at // 8, 8) is V.cosine
-    assert V.kernel("cosine", at // 8 + 1, 8) is V.seq_cosine
-    assert V.kernel("l2sq", at // 64, 64) is V.l2sq
-    assert V.kernel("cosine_pre", at // 64 + 1, 64) is V.seq_cosine_pre
-    for name in ("cosine", "cosine_pre", "l2sq"):
-        assert V.kernel(name, None, 8) is V.kernel(name, 10**12, 8)
-        assert V.kernel(name, 1, None) is V.kernel(name, 10**12, 8)
-
-
-def test_kernel_constant_sits_on_the_calibrated_winner_side():
-    """In CALIBRATION_r15.json's kernel rows the constant is the largest
-    measured pairs x dim at which the expression path won both kernels
-    at both dims: it won every cell up to the constant, and the Arrow
-    path won some cell at the next measured size up."""
-    path = os.path.join(os.path.dirname(__file__), "..", "CALIBRATION_r15.json")
-    with open(path) as f:
-        rows = json.load(f)["kernel"]
-    by_work: dict[int, list[bool]] = {}
-    for key, cell in rows.items():
-        work = cell["pairs"] * int(re.match(r"d(\d+)_", key).group(1))
-        by_work.setdefault(work, []).extend(
-            cell[f"{name}_expr"] <= cell[f"{name}_arrow"] for name in ("cosine", "cosine_pre")
-        )
-    assert all(all(wins) for work, wins in by_work.items() if work <= V.KERNEL_PAIR_DIMS)
-    above = min(work for work in by_work if work > V.KERNEL_PAIR_DIMS)
-    assert not all(by_work[above]), above
+def test_kernel_picks_the_path_the_caller_asks_for():
+    for name, expr, arrow in (
+        ("cosine", V.cosine, V.seq_cosine),
+        ("cosine_pre", V.cosine_pre, V.seq_cosine_pre),
+        ("l2sq", V.l2sq, V.seq_l2sq),
+    ):
+        assert V.kernel(name, True) is expr
+        assert V.kernel(name, False) is arrow
 
 
 def _arrow(df) -> bool:
@@ -113,25 +91,23 @@ def _frames(spark):
     return q, c, cent
 
 
-def test_operators_take_the_gate_and_none_keeps_the_arrow_plan(spark):
-    """Below the constant no operator plans an ArrowEvalPython node;
-    above it, and with no pair count, each keeps the Arrow UDF, and
-    the no-count plan is the above-constant one. Rows are equal on both
-    paths."""
+def test_operators_take_the_path_and_default_to_the_arrow_plan(spark):
+    """With ``jvm`` no operator plans an ArrowEvalPython node; without
+    it each keeps the Arrow UDF, and the default plan is the
+    ``jvm=False`` one. Rows are equal on both paths."""
     q, c, cent = _frames(spark)
-    big = V.KERNEL_PAIR_DIMS  # x dim 3 is above the constant
     builds = {
-        "exact": lambda n: exact_knn(F.broadcast(q), c, 3, n_pairs=n, dim=3),
-        "assign": lambda n: assign_cells(c, cent, "c_vec_id", "c_emb", n_pairs=n, dim=3),
-        "cell": lambda n: cell_knn(
-            assign_cells(q, cent, "q_vec_id", "q_emb", n_pairs=n, dim=3),
-            assign_cells(c, cent, "c_vec_id", "c_emb", n_pairs=n, dim=3),
-            3, n_pairs=n, dim=3,
+        "exact": lambda **kw: exact_knn(F.broadcast(q), c, 3, **kw),
+        "assign": lambda **kw: assign_cells(c, cent, "c_vec_id", "c_emb", **kw),
+        "cell": lambda **kw: cell_knn(
+            assign_cells(q, cent, "q_vec_id", "q_emb", **kw),
+            assign_cells(c, cent, "c_vec_id", "c_emb", **kw),
+            3, **kw,
         ),
     }
     for name, build in builds.items():
-        small, large, unknown = build(16), build(big), build(None)
-        assert _arrow(large) and _arrow(unknown), name
-        assert _masked(unknown) == _masked(large), name
-        assert not _arrow(small), name
-        assert sorted(map(tuple, small.collect())) == sorted(map(tuple, unknown.collect())), name
+        jvm, arrow, default = build(jvm=True), build(jvm=False), build()
+        assert _arrow(arrow) and _arrow(default), name
+        assert _masked(default) == _masked(arrow), name
+        assert not _arrow(jvm), name
+        assert sorted(map(tuple, jvm.collect())) == sorted(map(tuple, arrow.collect())), name

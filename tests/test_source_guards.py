@@ -223,8 +223,8 @@ _ARROW_KERNELS = re.compile(r"\bseq_(dot|cosine|cosine_pre|l2sq)\b")
 
 #: code that names them: their home, which holds the one kernel chooser
 #: (functions/vectors.py::kernel), and the registry sites that keep the
-#: Arrow path without a pair count — corpus-scale similarity joins,
-#: where it scores ~3x faster per pair (CALIBRATION_r15.json) — plus the
+#: Arrow path — corpus-scale similarity joins over 64-dim vectors, where
+#: it scores ~3x faster per pair (CALIBRATION_r15.json) — plus the
 #: calibration script's copy of one of them and the tests that pin them
 _ARROW_KERNEL_SITES = {
     "data_etl_spark/functions/vectors.py",
