@@ -46,12 +46,7 @@ def top_k(scored: DataFrame, k: int, score: str = "score", rank: str = "rank") -
     )
 
 
-def exact_knn(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    jvm: bool = False,
-) -> DataFrame:
+def exact_knn(queries: DataFrame, corpus: DataFrame, k: int = 5, jvm: bool = False) -> DataFrame:
     """Top-k by cosine of each (q_vec_id, q_emb) query over the
     (c_vec_id, c_emb) corpus.
 
@@ -72,12 +67,7 @@ def exact_knn(
     return top_k(q.crossJoin(c).select("q_vec_id", "c_vec_id", score.alias("score")), k)
 
 
-def cell_knn(
-    q_cells: DataFrame,
-    c_cells: DataFrame,
-    k: int,
-    jvm: bool = False,
-) -> DataFrame:
+def cell_knn(q_cells: DataFrame, c_cells: DataFrame, k: int, jvm: bool = False) -> DataFrame:
     """Top-k cosine of each probe among the corpus vectors of its cell(s).
 
     Both inputs are :func:`operators.ivf.assign_cells` outputs, columns
@@ -95,11 +85,7 @@ def cell_knn(
 
 
 def rrf_hybrid(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    topn: int = 20,
-    rrf_k: int = 60,
+    queries: DataFrame, corpus: DataFrame, k: int, topn: int = 20, rrf_k: int = 60,
     jvm: bool = False,
 ) -> DataFrame:
     """Hybrid dense + lexical retrieval with reciprocal-rank fusion.
@@ -114,9 +100,7 @@ def rrf_hybrid(
     expression path (:func:`exact_knn`).
     """
     dense = exact_knn(
-        F.broadcast(queries.select("q_vec_id", "q_emb")),
-        corpus.select("c_vec_id", "c_emb"),
-        topn,
+        F.broadcast(queries.select("q_vec_id", "q_emb")), corpus.select("c_vec_id", "c_emb"), topn,
         jvm=jvm,
     ).select("q_vec_id", "c_vec_id", F.col("rank").alias("rd"))
     qw = queries.select("q_vec_id", F.explode(TX.words(F.col("text"))).alias("word")).distinct()
