@@ -68,11 +68,9 @@ _TOUCHED_BY_ROUND: dict[int, frozenset] = {}
 _TOUCHED_BY_ROUND[15] = frozenset({
     # r15: one top-k retrieval kernel (operators/knn.py). q_hybrid_rrf
     # now runs the RRF operator ETLPipeline.hybrid_search shares; its
-    # dense leg is exact_knn (per-vector norms + seq_cosine_pre, bit-
-    # identical to seq_cosine). Rows identical (sf0.001 + sf0.01
-    # oracle-exact), optimized plan changed, re-verify. The other
-    # kNN/IVF/recall queries moved onto the same kernel with optimized
-    # plans unchanged:
+    # dense leg is exact_knn (per-vector norms + cosine_pre, bit-
+    # identical to cosine). Rows identical (sf0.001 + sf0.01
+    # oracle-exact), optimized plan changed, re-verify:
     "q_hybrid_rrf",
     # r15: operators/dedup.py::shared_seed_pairs builds its per-doc seed
     # array through map_from_entries, so a repeated (doc, seed) row
@@ -80,6 +78,17 @@ _TOUCHED_BY_ROUND[15] = frozenset({
     # optimized plan changed (the array fields are key/value), re-verify:
     "q_dup_triangles",
     "q_pagerank_dupgraph",
+    # r15: the retrieval operators (operators/knn.py, ivf.py, planner.py)
+    # score only with the JVM expression kernels; each plan below swaps
+    # an ArrowEvalPython node for the expression fold, rows identical
+    # (oracle-exact at sf0.01 and sf0.1), re-verify:
+    "q_knn_exact",  # exact_knn: cosine_pre instead of seq_cosine_pre
+    "q_ivf_knn",  # assign_cells: l2sq; cell_knn: cosine
+    "q_ivf_multiprobe",  # the same two kernels, nprobe=2
+    "q_ivf_recall",  # exact_knn and q_ivf_knn's kernels
+    "q_sq_knn",  # both exact_knn legs: cosine_pre
+    "q_pq_knn",  # inline codeword argmin: l2sq; both exact_knn legs
+    "q_knn_auto",  # auto_knn: cosine_pre (exact), l2sq and cosine (IVF)
 })
 
 

@@ -677,8 +677,7 @@ class ETLPipeline:
             raise ValueError(f"no ANN index for {self.index_path}: call build_ann_index first")
         qdf = self._query_frame(queries).drop("query_text")
         return ivf_search(
-            self.spark, path, qdf, self.spark.read.parquet(centroids), k=k, q_vec="q_emb",
-            jvm=True,
+            self.spark, path, qdf, self.spark.read.parquet(centroids), k=k, q_vec="q_emb"
         )
 
     def hybrid_search(
@@ -704,7 +703,7 @@ class ETLPipeline:
         chunks = self.index_table().select(
             _chunk_id(), F.col("embedding").alias("c_emb"), F.col("chunk_text").alias("text")
         )
-        return rrf_hybrid(qdf, chunks, k, topn=topn, rrf_k=rrf_k, jvm=True)
+        return rrf_hybrid(qdf, chunks, k, topn=topn, rrf_k=rrf_k)
 
     def search(self, queries: Sequence[str], k: int = 5, threshold: int = 2048) -> DataFrame:
         """Cost-gated cosine top-k over the index (V4): exact brute
@@ -722,10 +721,9 @@ class ETLPipeline:
         drain rebuilds the state on the next call; the rows are those of
         the stateless plan either way.
 
-        Every similarity kernel runs on the JVM expression path
-        (``jvm=True``): at the pipeline's FAKE_EMBED_DIM = 8 it beat the
-        Arrow UDFs at every measured pair count (functions/vectors.py),
-        and a per-call search pays no Python-worker round trip."""
+        Like every retrieval operator, it scores on the JVM expression
+        kernels (functions/vectors.py), so a call pays no Python-worker
+        round trip."""
         from .operators import planner
         from .operators.ivf import assign_cells
 
@@ -736,9 +734,7 @@ class ETLPipeline:
                 if st.cells is not None:
                     unpersist_tracked(st.cells[2])
                 cent = planner.ivf_centroids(st.corpus, n_centroids)
-                c_cells = tracked_persist(
-                    assign_cells(st.corpus, cent, "c_vec_id", "c_emb", jvm=True)
-                )
+                c_cells = tracked_persist(assign_cells(st.corpus, cent, "c_vec_id", "c_emb"))
                 st.cells = (n_centroids, cent, c_cells)
             return st.cells[1], st.cells[2]
 
@@ -746,8 +742,7 @@ class ETLPipeline:
         # looked up on the module at call time: the benchmark's tracer
         # wraps planner.auto_knn
         return planner.auto_knn(
-            qdf, st.corpus, k=k, threshold=threshold, n_corpus=st.n_corpus, cells=cells,
-            jvm=True,
+            qdf, st.corpus, k=k, threshold=threshold, n_corpus=st.n_corpus, cells=cells
         )
 
     def _search_state(self) -> _SearchState:

@@ -15,36 +15,29 @@ Two implementations share the same IEEE semantics:
 
 - **Expression path** (``aggregate``/``zip_with`` higher-order
   functions: :func:`dot`, :func:`cosine`, :func:`cosine_pre`,
-  :func:`l2sq`): evaluated inside the JVM task, no Python worker.
-- **Arrow path** (``seq_dot``/``seq_cosine``/``seq_l2sq``/
-  ``seq_cosine_pre`` pandas UDFs): numpy's ``cumsum`` is a *sequential*
-  left-fold over doubles, and elementwise multiply rounds identically to
-  the JVM's, so the Arrow path produces bit-identical doubles to the
-  expression path and to DuckDB (measured: max abs diff 0.0 over 250k
-  pairs; pinned in tests/test_kernels.py).
+  :func:`l2sq`): evaluated inside the JVM task, no Python worker. Every
+  retrieval operator (operators/knn.py, ivf.py, planner.py) scores
+  with these, so a per-call search pays no Python-worker round trip.
+- **Arrow path** (``seq_dot``/``seq_cosine``/``seq_cosine_pre`` pandas
+  UDFs): numpy's ``cumsum`` is a *sequential* left-fold over doubles,
+  and elementwise multiply rounds identically to the JVM's, so the
+  Arrow path produces bit-identical doubles to the expression path and
+  to DuckDB (measured: max abs diff 0.0 over 250k pairs; pinned in
+  tests/test_kernels.py). Only registry plans that name them inline
+  keep them (plans/similarity.py: ``q_rp_lsh_pairs``,
+  ``q_lsh_adaptive``, ``q_semantic_dedup``).
 
-Which path wins depends on the vector length. Each Arrow UDF pays a
-Python-worker round trip per task (~0.1-0.3 s) and an Arrow
-conversion per row; the interpreted fold has neither, and its
-per-element cost is what grows with the length. Measured
-(CALIBRATION_r15.json, ``kernel``: 32 queries x n vectors, one task,
-top-5, min of 2): at dim 64 (the registry's ``embeddings``) the
-expression path wins the three-fold ``cosine`` through 8,192 pairs
-and loses from 16,384 up (3.1 vs 7.9 s at 524,288), since each extra
-pair costs it ~3x what it costs the Arrow path; at dim 8 (the
-pipeline's ``fake_embedding``) an extra pair costs the expression path
-less than the Arrow path (~1.9 vs ~3.1 us for ``cosine``), and the
-expression path won both kernels at every measured size, up to
-1,048,576 pairs (3.0 vs 3.8 s; ``cosine_pre`` 2.0 vs 4.0 s). So the
-chooser is not a pair-count gate: :func:`kernel` gives the expression
-twin to a caller that asks for the JVM (``ETLPipeline``'s retrieval,
-dim 8) and the Arrow UDF to everyone else (the registry's corpus-scale
-similarity joins at dim 64).
+Which path is faster depends on the vector length (CALIBRATION_r15.json,
+``kernel``: 32 queries x n vectors, one task, top-5, min of 2): at
+dim 8 the expression path won both kernels at every measured size, up
+to 1,048,576 pairs; at dim 64 the Arrow path overtakes the three-fold
+``cosine`` from ~16k pairs and ties the one-fold ``cosine_pre`` at
+65k-131k, since each extra pair costs the interpreted fold ~3x what it
+costs numpy. ``scripts/calibrate_gates.py <round> kernel`` re-measures
+both paths.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -134,9 +127,9 @@ def cosine_pre(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
 
 def l2sq(a: Column, b: Column) -> Column:
     """Squared L2 in the expanded form dot(a,a)+dot(b,b)-2*dot(a,b): the
-    op order of :func:`seq_l2sq` and of the SQL oracles' distance, so the
-    two paths agree bit for bit. :func:`l2_distance` folds (x-y)^2, a
-    different order, and is not its twin."""
+    op order of the SQL oracles' distance, so the two engines agree bit
+    for bit. :func:`l2_distance` folds (x-y)^2, a different order, and
+    is not its twin."""
     return dot(a, a) + dot(b, b) - F.lit(2.0) * dot(a, b)
 
 
@@ -156,7 +149,7 @@ def l2_distance_sql(a: str, b: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-batched sequential-fold scoring (the O(pairs) hot path).
+# Arrow-batched sequential-fold scoring (the registry's inline sites).
 # np.cumsum(..., axis=1)[:, -1] is a left-to-right sequential double sum —
 # the same op order as the aggregate() fold and DuckDB's list_dot_product,
 # hence bit-identical results (oracle-safe).
@@ -195,32 +188,8 @@ def seq_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(DoubleType())
-def seq_l2sq(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Squared L2 via the expanded form dot(a,a)+dot(b,b)-2*dot(a,b),
-    matching the expression-path op order exactly (kmeans/IVF assign)."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    A, B = _mat(a), _mat(b)
-    return pd.Series(_seq_sum(A * A) + _seq_sum(B * B) - 2.0 * _seq_sum(A * B))
-
-
 def seq_cosine_pre(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     """Arrow-path :func:`cosine_pre`: numpy dot / precomputed-norm product.
     Same zero-norm -> NULL contract (try_divide)."""
     return F.try_divide(seq_dot(a, b), norm_a * norm_b)
 
-
-_KERNELS: dict[str, tuple[Callable[..., Column], Callable[..., Column]]] = {
-    "cosine": (cosine, seq_cosine),
-    "cosine_pre": (cosine_pre, seq_cosine_pre),
-    "l2sq": (l2sq, seq_l2sq),
-}
-
-
-def kernel(name: str, jvm: bool) -> Callable[..., Column]:
-    """The ``name`` kernel ("cosine", "cosine_pre" or "l2sq"): its
-    expression twin if ``jvm``, else its Arrow UDF. Both return the
-    same doubles; the module docstring says where each path wins."""
-    expr, arrow = _KERNELS[name]
-    return expr if jvm else arrow

@@ -22,7 +22,6 @@ from .knn import cell_knn
 def assign_cells(
     vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str,
     nprobe: int = 1,
-    jvm: bool = False,
 ) -> DataFrame:
     """Nearest-centroid assignment: adds ``cell``. Centroids broadcast
     (they are tiny); ties break on cent_id for determinism. ``nprobe``
@@ -35,11 +34,11 @@ def assign_cells(
     oracles.
 
     Distance is the expanded squared L2 over the n_vectors x n_centroids
-    pairs, on the JVM expression path if ``jvm``, else the Arrow UDF
-    (:func:`functions.vectors.kernel`), projected to a column first so
-    the window can order by it; sqrt is kept so tie behavior matches the
-    oracle's sqrt-distance ordering bit-for-bit."""
-    d = F.sqrt(V.kernel("l2sq", jvm)(F.col(vec_col), F.col("cemb")))
+    pairs on the JVM expression path (:func:`functions.vectors.l2sq`),
+    projected to a column first so the window can order by it; sqrt is
+    kept so tie behavior matches the oracle's sqrt-distance ordering
+    bit-for-bit."""
+    d = F.sqrt(V.l2sq(F.col(vec_col), F.col("cemb")))
     w = W.partitionBy(id_col).orderBy(F.col("__d").asc(), F.col("cent_id").asc())
     return (
         vectors.crossJoin(F.broadcast(centroids))
@@ -74,7 +73,6 @@ def ivf_search(
     centroids: DataFrame,
     k: int = 5,
     q_vec: str = "qemb",
-    jvm: bool = False,
 ) -> DataFrame:
     """Top-k cosine of each (q_vec_id, ``q_vec``) probe within its cell
     of the index :func:`build_ivf_index` wrote (ids c_vec_id).
@@ -82,8 +80,8 @@ def ivf_search(
     The equi-join on ``cell`` (operators/knn.py::cell_knn) pushes a
     partition filter into the index scan (dynamic partition pruning /
     broadcast join on the partition column), so only the probed cells'
-    files are read. ``jvm`` scores both the probe assignment and the
-    in-cell pairs on the JVM expression path (:func:`assign_cells`).
+    files are read. The probe assignment and the in-cell pairs both
+    score on the JVM expression path.
     """
-    q_cells = assign_cells(probes, centroids, "q_vec_id", q_vec, jvm=jvm)
-    return cell_knn(q_cells, spark.read.parquet(path), k, jvm=jvm)
+    q_cells = assign_cells(probes, centroids, "q_vec_id", q_vec)
+    return cell_knn(q_cells, spark.read.parquet(path), k)

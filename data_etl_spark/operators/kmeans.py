@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..cache import CheckpointRotation
-from ..functions import vectors as V
 from .ivf import assign_cells
 
 
@@ -67,14 +66,3 @@ def kmeans_fit(
             break
     return cent
 
-
-def kmeans_inertia(
-    vectors: DataFrame, centroids: DataFrame, id_col: str = "vec_id", vec_col: str = "emb"
-) -> float:
-    """Sum of squared distances to the assigned centroid."""
-    assigned = assign_cells(vectors, centroids, id_col, vec_col)
-    joined = assigned.join(
-        centroids.select(F.col("cent_id").alias("cell"), "cemb"), "cell"
-    )
-    d2 = V.seq_l2sq(F.col(vec_col), F.col("cemb"))
-    return joined.agg(F.sum(d2).alias("i")).collect()[0]["i"]

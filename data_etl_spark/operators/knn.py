@@ -46,28 +46,23 @@ def top_k(scored: DataFrame, k: int, score: str = "score", rank: str = "rank") -
     )
 
 
-def exact_knn(queries: DataFrame, corpus: DataFrame, k: int = 5, jvm: bool = False) -> DataFrame:
+def exact_knn(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
     """Top-k by cosine of each (q_vec_id, q_emb) query over the
-    (c_vec_id, c_emb) corpus.
+    (c_vec_id, c_emb) corpus, scored on the JVM expression path
+    (functions.vectors.cosine_pre).
 
     Inputs must carry double-cast embedding arrays (functions.vectors
     .as_double) so scores are bit-identical with the SQL oracle.
-    ``jvm`` scores on the expression path instead of the Arrow UDF
-    (functions.vectors.kernel).
     """
     # norms once per vector (not per pair): same IEEE doubles, 1/3 the
     # higher-order-function folds on the queries x corpus blow-up.
     q = queries.withColumn("__qn", V.l2_norm(F.col("q_emb")))
     c = corpus.withColumn("__cn", V.l2_norm(F.col("c_emb")))
-    # one dot per pair: the JVM fold for short vectors, the Arrow UDF
-    # (~3x the throughput per pair at dim 64) for the registry's
-    score = V.kernel("cosine_pre", jvm)(
-        F.col("q_emb"), F.col("c_emb"), F.col("__qn"), F.col("__cn")
-    )
+    score = V.cosine_pre(F.col("q_emb"), F.col("c_emb"), F.col("__qn"), F.col("__cn"))
     return top_k(q.crossJoin(c).select("q_vec_id", "c_vec_id", score.alias("score")), k)
 
 
-def cell_knn(q_cells: DataFrame, c_cells: DataFrame, k: int, jvm: bool = False) -> DataFrame:
+def cell_knn(q_cells: DataFrame, c_cells: DataFrame, k: int) -> DataFrame:
     """Top-k cosine of each probe among the corpus vectors of its cell(s).
 
     Both inputs are :func:`operators.ivf.assign_cells` outputs, columns
@@ -75,18 +70,17 @@ def cell_knn(q_cells: DataFrame, c_cells: DataFrame, k: int, jvm: bool = False) 
     are found by that position. The equi-join on ``cell`` pairs a probe
     only with its cells' corpus rows; when ``c_cells`` is the
     cell-partitioned index table, the join prunes the scan to the
-    probed cells' partitions. ``jvm`` scores on the expression path
-    instead of the Arrow UDF (functions.vectors.kernel).
+    probed cells' partitions. Scored on the JVM expression path
+    (functions.vectors.cosine).
     """
-    score = V.kernel("cosine", jvm)(F.col(q_cells.columns[1]), F.col(c_cells.columns[1]))
+    score = V.cosine(F.col(q_cells.columns[1]), F.col(c_cells.columns[1]))
     return top_k(
         q_cells.join(c_cells, "cell").select("q_vec_id", "c_vec_id", score.alias("score")), k
     )
 
 
 def rrf_hybrid(
-    queries: DataFrame, corpus: DataFrame, k: int, topn: int = 20, rrf_k: int = 60,
-    jvm: bool = False,
+    queries: DataFrame, corpus: DataFrame, k: int, topn: int = 20, rrf_k: int = 60
 ) -> DataFrame:
     """Hybrid dense + lexical retrieval with reciprocal-rank fusion.
 
@@ -96,12 +90,10 @@ def rrf_hybrid(
     on word (never all-pairs text comparison; integer counts, so ranks
     are bit-exact across engines). Fusion: sum(1/(rrf_k + rank)) over
     the legs a candidate appears in, cut to ``k``. Returns (q_vec_id,
-    rank, c_vec_id, rrf). ``jvm`` scores the dense leg on the
-    expression path (:func:`exact_knn`).
+    rank, c_vec_id, rrf).
     """
     dense = exact_knn(
-        F.broadcast(queries.select("q_vec_id", "q_emb")), corpus.select("c_vec_id", "c_emb"), topn,
-        jvm=jvm,
+        F.broadcast(queries.select("q_vec_id", "q_emb")), corpus.select("c_vec_id", "c_emb"), topn
     ).select("q_vec_id", "c_vec_id", F.col("rank").alias("rd"))
     qw = queries.select("q_vec_id", F.explode(TX.words(F.col("text"))).alias("word")).distinct()
     cw = corpus.select("c_vec_id", F.explode(TX.words(F.col("text"))).alias("word")).distinct()

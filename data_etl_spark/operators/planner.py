@@ -138,10 +138,10 @@ def auto_knn(
     n_centroids: int = 8,
     n_corpus: int | None = None,
     cells: Callable[[int], tuple[DataFrame, DataFrame]] | None = None,
-    jvm: bool = False,
 ) -> DataFrame:
     """Top-k cosine per (q_vec_id, q_emb) probe over the (c_vec_id,
-    c_emb) corpus; physical strategy chosen by corpus size.
+    c_emb) corpus; physical strategy chosen by corpus size. Both branches
+    score on the JVM expression path (operators/knn.py, operators/ivf.py).
 
     Threshold 2048: calibrated at ~sf1 (CALIBRATION_r08.json) — exact
     broadcast kNN wins through 2048 corpus rows (0.81 s vs IVF 0.90 s),
@@ -157,27 +157,22 @@ def auto_knn(
       takes the IVF branch, it returns (centroids, corpus cells): the
       :func:`ivf_centroids` of ``corpus`` and ``corpus``'s
       ``assign_cells`` output under them. That skips the centroid pick
-      and the corpus assignment;
-    - ``jvm``: every similarity kernel of the chosen branch (exact
-      scoring, probe and corpus assignment, in-cell scoring) runs on the
-      JVM expression path instead of the Arrow UDF, which is what a
-      per-call retrieval over short vectors wants
-      (functions/vectors.py::kernel).
+      and the corpus assignment.
 
-    All unset, the plan is the stateless one the registry's
+    Both unset, the plan is the stateless one the registry's
     ``q_knn_auto`` checks against its oracle.
     """
     if n_corpus is None:
         n_corpus = corpus.count()
     if n_corpus <= threshold:
-        return exact_knn(F.broadcast(probes), corpus, k=k, jvm=jvm)
+        return exact_knn(F.broadcast(probes), corpus, k=k)
     if cells is None:
         cent = ivf_centroids(corpus, n_centroids)
-        c_cells = assign_cells(corpus, cent, "c_vec_id", "c_emb", jvm=jvm)
+        c_cells = assign_cells(corpus, cent, "c_vec_id", "c_emb")
     else:
         cent, c_cells = cells(n_centroids)
-    q_cells = assign_cells(probes, cent, "q_vec_id", "q_emb", jvm=jvm)
-    return cell_knn(q_cells, c_cells, k, jvm=jvm)
+    q_cells = assign_cells(probes, cent, "q_vec_id", "q_emb")
+    return cell_knn(q_cells, c_cells, k)
 
 
 def auto_dedup(

@@ -922,7 +922,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ETLPipeline.hybrid_search``).
 
     Scale: the dense leg broadcasts the query set (linear corpus scan,
-    Arrow-path scoring); the lexical leg is an inverted-index join on
+    scored by the JVM expression kernel); the lexical leg is an inverted-index join on
     word (never all-pairs text comparison); fusion joins two top-N lists
     — O(queries x N), trivially broadcastable.
     """
@@ -1159,7 +1159,7 @@ def q_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     csub = sub.filter(F.col("vec_id") >= _PQ_Q_MAX).select(
         F.col("vec_id").alias("c_vec_id"), "s", "sv"
     )
-    d = F.sqrt(V.seq_l2sq(F.col("sv"), F.col("cw")))
+    d = F.sqrt(V.l2sq(F.col("sv"), F.col("cw")))
     # argmin as a min(struct) hash-agg, not a row_number window: the
     # window form sorts the full (corpus x subspace x codeword) join
     # output per partition, while min(struct(__d, cent_id, cw)) —

@@ -519,118 +519,3 @@ def streaming_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame
         state_partitions=state_partitions_for(spark, sf_dir),
     )
 
-
-# ---------------------------------------------------------------------------
-# Custom stateful operator #3: per-user inter-purchase gap statistics
-# via transformWithStateInPandas — Spark 4's typed-state processor API
-# (the successor to applyInPandasWithState: named state variables with
-# schemas, timers, TTL). Integer-µs arithmetic keeps it oracle-exact.
-#
-# ENVIRONMENT-GATED, not registered: the TWS python worker requires
-# google.protobuf (pyspark's StateMessage protos), absent from this
-# container — the same class of block as PyMuPDF. The pure merge logic
-# is unit-tested (tests/test_tws_gap_stats.py); the streaming e2e test
-# auto-activates when the container gains protobuf.
-# ---------------------------------------------------------------------------
-
-def merge_gap_state(
-    state: tuple | None, sorted_ts: list[int]
-) -> tuple[int | None, int, int | None, int | None]:
-    """Fold a batch of sorted purchase timestamps into the running
-    (last_us, n, min_gap, max_gap) state — the pure kernel of the
-    GapStats processor, unit-testable without the streaming runtime.
-
-    LATE-DATA POLICY: a timestamp strictly earlier than the stored
-    last_us is DROPPED (standard watermark-style semantics) — gap
-    extrema need the neighbor ordering, and a row that arrives behind
-    the high-water mark would otherwise produce a negative "gap" that
-    no batch computation contains. Consequently the streaming result
-    equals the batch lag-window oracle exactly whenever batch
-    boundaries respect event-time order per key (single AvailableNow
-    drain trivially; in-order sources generally), and degrades by
-    dropping only the out-of-order stragglers otherwise. Ties
-    (t == last_us) are kept as zero gaps, matching the batch oracle.
-    """
-    last_us, n, min_gap, max_gap = state if state else (None, 0, None, None)
-    for t in sorted_ts:
-        if last_us is not None:
-            if t < last_us:
-                continue  # late arrival behind the high-water mark
-            g = t - last_us
-            min_gap = g if min_gap is None else min(min_gap, g)
-            max_gap = g if max_gap is None else max(max_gap, g)
-        last_us = t
-        n += 1
-    return last_us, n, min_gap, max_gap
-
-
-GAP_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_purchases", T.LongType()),
-        T.StructField("n_gaps", T.LongType()),
-        T.StructField("min_gap_us", T.LongType()),
-        T.StructField("max_gap_us", T.LongType()),
-    ]
-)
-
-
-def streaming_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user min/max gap between consecutive purchases (µs), through
-    the transformWithStateInPandas stateful processor.
-
-    State is a single ValueState row (last purchase ts, running count,
-    running min/max gap) keyed by user: each batch sorts its arrivals,
-    chains them onto the stored last timestamp, and updates the extrema
-    — O(state) = one row per key regardless of stream length. A single
-    AvailableNow drain therefore equals the batch lag-window oracle
-    exactly (the sorted-µs multiset determines the gap multiset, so
-    same-timestamp ties cannot fork results).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class GapStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "gap",
-                "last_us BIGINT, n BIGINT, min_gap BIGINT, max_gap BIGINT",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            ts: list[int] = []
-            for pdf in rows:
-                ts.extend(int(v) for v in pdf["ts_us"])
-            ts.sort()
-            st = tuple(self._st.get()) if self._st.exists() else None
-            last_us, n, min_gap, max_gap = merge_gap_state(st, ts)
-            self._st.update((last_us, n, min_gap, max_gap))
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.Series([int(key[0])], dtype="int64"),
-                    "n_purchases": pd.Series([n], dtype="int64"),
-                    "n_gaps": pd.Series([max(n - 1, 0)], dtype="int64"),
-                    "min_gap_us": pd.Series([min_gap], dtype="Int64"),
-                    "max_gap_us": pd.Series([max_gap], dtype="Int64"),
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    ev = (
-        read_events_stream_ts(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select("user_id", F.unix_micros("ts").alias("ts_us"))
-    )
-    stats = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=GapStats(),
-        outputStructType=GAP_OUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-    return run_to_table(stats, output_mode="update")

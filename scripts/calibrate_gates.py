@@ -48,14 +48,15 @@ KERNEL_QUERIES = 32
 def kernel_rows(spark) -> dict[str, dict]:
     """Both similarity kernel paths at growing pair counts: 32 queries x
     n corpus vectors scored by ``cosine`` (three folds per pair: the
-    in-cell and assignment kernels) and by ``cosine_pre`` (one fold:
-    exact kNN's), each cut to a top-5. dim 64 is the registry's
+    in-cell kernel's) and by ``cosine_pre`` over per-vector norms (one
+    fold: exact kNN's), each cut to a top-5. dim 64 is the registry's
     ``embeddings``; dim 8 is the pipeline's ``fake_embedding`` of the
     ``documents`` text, measured one size further (1,048,576 pairs) to
-    look for a crossover. Arms are forced through the chooser itself:
-    ``jvm=True`` is the expression path, ``False`` the Arrow path."""
+    look for a crossover. Each arm names its kernel: the expression twin
+    (``V.cosine``, ``V.cosine_pre``) or its Arrow UDF (``V.seq_cosine``,
+    ``V.seq_cosine_pre``), over the same crossJoin."""
     from data_etl_spark.etl import fake_embedding
-    from data_etl_spark.operators.knn import exact_knn, top_k
+    from data_etl_spark.operators.knn import top_k
 
     sources = {
         64: load_table(spark, SF1, "embeddings")
@@ -64,30 +65,31 @@ def kernel_rows(spark) -> dict[str, dict]:
         8: load_table(spark, SF1, "documents")
         .select(F.col("doc_id").alias("id"), fake_embedding(F.col("text")).alias("emb")),
     }
+    q_emb, c_emb, q_n, c_n = F.col("q_emb"), F.col("c_emb"), F.col("q_n"), F.col("c_n")
+    arms = {
+        "cosine_expr": V.cosine(q_emb, c_emb),
+        "cosine_arrow": V.seq_cosine(q_emb, c_emb),
+        "cosine_pre_expr": V.cosine_pre(q_emb, c_emb, q_n, c_n),
+        "cosine_pre_arrow": V.seq_cosine_pre(q_emb, c_emb, q_n, c_n),
+    }
     rows: dict[str, dict] = {}
     for dim, vecs in sources.items():
         q = vecs.orderBy("id").limit(KERNEL_QUERIES).select(
             F.col("id").alias("q_vec_id"), F.col("emb").alias("q_emb")
-        )
+        ).withColumn("q_n", V.l2_norm(q_emb))
         for n in (64, 256, 512, 1024, 2048, 4096, 16384, *((32768,) if dim == 8 else ())):
             c = vecs.orderBy(F.desc("id")).limit(n).select(
                 F.col("id").alias("c_vec_id"), F.col("emb").alias("c_emb")
-            )
+            ).withColumn("c_n", V.l2_norm(c_emb))
+            pairs = F.broadcast(q).crossJoin(c)
 
-            def cosine(jvm):
-                score = V.kernel("cosine", jvm)(F.col("q_emb"), F.col("c_emb"))
-                pairs = F.broadcast(q).crossJoin(c)
-                return top_k(pairs.select("q_vec_id", "c_vec_id", score.alias("score")), 5)
+            def build(arm):
+                return top_k(pairs.select("q_vec_id", "c_vec_id", arms[arm].alias("score")), 5)
 
+            for arm in arms:  # warm every arm
+                best_of(lambda: build(arm), 1)
             cell = {"pairs": KERNEL_QUERIES * n}
-            for name, build in (
-                ("cosine", cosine),
-                ("cosine_pre", lambda jvm: exact_knn(F.broadcast(q), c, 5, jvm=jvm)),
-            ):
-                best_of(lambda: build(True), 1)  # warm both paths
-                best_of(lambda: build(False), 1)
-                cell[f"{name}_expr"] = best_of(lambda: build(True))
-                cell[f"{name}_arrow"] = best_of(lambda: build(False))
+            cell.update({arm: best_of(lambda: build(arm)) for arm in arms})
             rows[f"d{dim}_n{n}"] = cell
             print(f"kernel dim={dim} pairs={cell['pairs']}: {cell}", flush=True)
     return rows

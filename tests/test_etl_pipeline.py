@@ -880,7 +880,7 @@ def test_recover_skips_sibling_prefix_intent(pipe, docs, spark, tmp_path):
 def test_repeat_ivf_search_scores_on_the_jvm(spark, tmp_path):
     """A repeat 32-query search on the IVF branch scores its per-call
     pairs with the JVM expression kernels: no ArrowEvalPython node in its
-    executed plan, at most 4 jobs, and the rows of the stateless Arrow
+    executed plan, at most 4 jobs, and the rows of the stateless
     plan."""
     from data_etl_spark.etl import _chunk_id, fake_embedding
     from data_etl_spark.operators.planner import auto_knn
@@ -901,14 +901,14 @@ def test_repeat_ivf_search_scores_on_the_jvm(spark, tmp_path):
     )
     corpus = spark.read.parquet(p.index_path).select(_chunk_id(), F.col("embedding").alias("c_emb"))
     want = auto_knn(probes, corpus, k=3, threshold=1)
-    assert "ArrowEvalPython" in want._jdf.queryExecution().executedPlan().toString()
     assert sorted(tuple(r) for r in got) == _search_rows(want)
 
 
 def test_ann_and_hybrid_search_score_on_the_jvm(spark, tmp_path):
     """ann_search and hybrid_search score on the JVM expression kernels
-    (no ArrowEvalPython node), return the rows of their Arrow plans, and
-    build no search state: an ann_search reads only the IVF copy."""
+    (no ArrowEvalPython node), return the rows of their operators'
+    stateless plans, and build no search state: an ann_search reads only
+    the IVF copy."""
     from data_etl_spark.etl import _chunk_id
     from data_etl_spark.operators.ivf import ivf_search
     from data_etl_spark.operators.knn import rrf_hybrid
@@ -930,7 +930,6 @@ def test_ann_and_hybrid_search_score_on_the_jvm(spark, tmp_path):
     want_hybrid = rrf_hybrid(qdf.withColumnRenamed("query_text", "text"), chunks, 3)
     for got, want in ((ann, want_ann), (hybrid, want_hybrid)):
         assert "ArrowEvalPython" not in got._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" in want._jdf.queryExecution().executedPlan().toString()
         assert _search_rows(got) == _search_rows(want)
     assert p._search is None
 

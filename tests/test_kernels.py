@@ -1,18 +1,16 @@
 """The similarity kernels' two paths (functions/vectors.py): the JVM
-expression twins return the Arrow UDFs' doubles bit for bit, and the
-operators take the path their caller asks for — the pipeline's per-call
-retrieval on the JVM, everything else on the Arrow path."""
+expression twins return the Arrow UDFs' doubles bit for bit, and every
+retrieval operator scores on the expression path."""
 
 from __future__ import annotations
-
-import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from data_etl_spark.functions import vectors as V
-from data_etl_spark.operators.ivf import assign_cells
-from data_etl_spark.operators.knn import cell_knn, exact_knn
+from data_etl_spark.operators.ivf import assign_cells, build_ivf_index, ivf_search
+from data_etl_spark.operators.knn import cell_knn, exact_knn, rrf_hybrid
+from data_etl_spark.operators.planner import auto_knn
 
 
 def _pairs(spark, dim):
@@ -43,13 +41,11 @@ def test_expression_twins_match_the_arrow_udfs_bit_for_bit(spark, dim):
         V.cosine(a, b).alias("cos"), V.seq_cosine(a, b).alias("seq_cos"),
         V.cosine_pre(a, b, na, nb).alias("pre"),
         V.seq_cosine_pre(a, b, na, nb).alias("seq_pre"),
-        V.l2sq(a, b).alias("l2"), V.seq_l2sq(a, b).alias("seq_l2"),
     ).collect()
     assert len(rows) == 16 * 16
     for r in rows:
         assert _bits(r.cos) == _bits(r.seq_cos), r
         assert _bits(r.pre) == _bits(r.seq_pre), r
-        assert _bits(r.l2) == _bits(r.seq_l2), r
     # the zero vector (12): NULL cosine on both paths, against every vector
     assert {(r.i, r.j) for r in rows if r.cos is None} == {
         p for p in ((r.i, r.j) for r in rows) if 12 in p
@@ -59,55 +55,43 @@ def test_expression_twins_match_the_arrow_udfs_bit_for_bit(spark, dim):
     assert all(_bits(by[(13, j)]) == _bits(by[(0, j)]) for j in range(16))
 
 
-def test_kernel_picks_the_path_the_caller_asks_for():
-    for name, expr, arrow in (
-        ("cosine", V.cosine, V.seq_cosine),
-        ("cosine_pre", V.cosine_pre, V.seq_cosine_pre),
-        ("l2sq", V.l2sq, V.seq_l2sq),
-    ):
-        assert V.kernel(name, True) is expr
-        assert V.kernel(name, False) is arrow
-
-
-def _arrow(df) -> bool:
-    return "ArrowEvalPython" in df._jdf.queryExecution().executedPlan().toString()
-
-
-def _masked(df) -> str:
-    """The optimized plan, expression ids and lambda variable ids masked."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    return re.sub(r"_\d+#", "#", re.sub(r"#\d+", "#", plan))
-
-
 def _frames(spark):
     q = spark.createDataFrame(
-        [(i, [float(i), 1.0, -float(i % 3)]) for i in range(4)], "q_vec_id long, q_emb array<double>"
+        [(i, [float(i), 1.0, -float(i % 3)], f"w{i} v{i % 2}") for i in range(4)],
+        "q_vec_id long, q_emb array<double>, text string",
     )
     c = spark.createDataFrame(
-        [(i, [float(i % 5), float(i % 3), 1.0]) for i in range(40)],
-        "c_vec_id long, c_emb array<double>",
+        [(i, [float(i % 5), float(i % 3), 1.0], f"w{i % 6} v{i % 4}") for i in range(40)],
+        "c_vec_id long, c_emb array<double>, text string",
     )
     cent = c.filter("c_vec_id < 3").select(F.col("c_vec_id").alias("cent_id"), F.col("c_emb").alias("cemb"))
     return q, c, cent
 
 
-def test_operators_take_the_path_and_default_to_the_arrow_plan(spark):
-    """With ``jvm`` no operator plans an ArrowEvalPython node; without
-    it each keeps the Arrow UDF, and the default plan is the
-    ``jvm=False`` one. Rows are equal on both paths."""
+def test_retrieval_operators_plan_no_arrow_udf(spark, tmp_path):
+    """Every retrieval operator, both auto_knn branches included, scores
+    on the JVM expression kernels: no ArrowEvalPython node in its plan."""
     q, c, cent = _frames(spark)
-    builds = {
-        "exact": lambda **kw: exact_knn(F.broadcast(q), c, 3, **kw),
-        "assign": lambda **kw: assign_cells(c, cent, "c_vec_id", "c_emb", **kw),
-        "cell": lambda **kw: cell_knn(
-            assign_cells(q, cent, "q_vec_id", "q_emb", **kw),
-            assign_cells(c, cent, "c_vec_id", "c_emb", **kw),
-            3, **kw,
+    probes, corpus = q.select("q_vec_id", "q_emb"), c.select("c_vec_id", "c_emb")
+    path = str(tmp_path / "ivf")
+    build_ivf_index(corpus, cent, path, id_col="c_vec_id", vec_col="c_emb")
+    plans = {
+        "exact_knn": exact_knn(F.broadcast(probes), corpus, 3),
+        "assign_cells": assign_cells(corpus, cent, "c_vec_id", "c_emb"),
+        "cell_knn": cell_knn(
+            assign_cells(probes, cent, "q_vec_id", "q_emb"),
+            assign_cells(corpus, cent, "c_vec_id", "c_emb"),
+            3,
         ),
+        "rrf_hybrid": rrf_hybrid(q, c, 3, topn=5),
+        "ivf_search": ivf_search(spark, path, probes, cent, k=3, q_vec="q_emb"),
+        "auto_knn exact": auto_knn(probes, corpus, k=3, threshold=40),
+        "auto_knn ivf": auto_knn(probes, corpus, k=3, threshold=39, n_centroids=3),
     }
-    for name, build in builds.items():
-        jvm, arrow, default = build(jvm=True), build(jvm=False), build()
-        assert _arrow(arrow) and _arrow(default), name
-        assert _masked(default) == _masked(arrow), name
-        assert not _arrow(jvm), name
-        assert sorted(map(tuple, jvm.collect())) == sorted(map(tuple, arrow.collect())), name
+    for name, df in plans.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan, name
+        assert df.count() > 0, name
+    # each auto_knn test above took the branch its name says
+    assert "cell#" not in plans["auto_knn exact"]._jdf.queryExecution().optimizedPlan().toString()
+    assert "cell#" in plans["auto_knn ivf"]._jdf.queryExecution().optimizedPlan().toString()

@@ -83,14 +83,17 @@ def test_partitioned_write_prunes_read(spark, sf_dir):
 
 
 def test_arrow_scoring_stays_vectorized(spark, sf_dir):
-    # the similarity pair loops must run on an Arrow path — scalar
-    # pandas UDFs (ArrowEvalPython) or a grouped Arrow kernel
-    # (FlatMapGroupsInPandas; q_cosine_pairs since round 8) — never
-    # BatchEvalPython (row-at-a-time pickling)
-    for name in ("q_knn_exact", "q_rp_lsh_pairs"):
-        plan = _plan(spark, sf_dir, name)
-        assert "ArrowEvalPython" in plan, name
-        assert "BatchEvalPython" not in plan, name
+    # the similarity pair loops must run inside the JVM (the expression
+    # kernels of the retrieval operators: q_knn_exact) or on an Arrow
+    # path — scalar pandas UDFs (ArrowEvalPython: q_rp_lsh_pairs) or a
+    # grouped Arrow kernel (FlatMapGroupsInPandas; q_cosine_pairs since
+    # round 8) — never BatchEvalPython (row-at-a-time pickling)
+    plan = _plan(spark, sf_dir, "q_knn_exact")
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
+    plan = _plan(spark, sf_dir, "q_rp_lsh_pairs")
+    assert "ArrowEvalPython" in plan
+    assert "BatchEvalPython" not in plan
     plan = _plan(spark, sf_dir, "q_cosine_pairs")
     assert "FlatMapGroupsInPandas" in plan
     assert "BatchEvalPython" not in plan
@@ -182,8 +185,9 @@ def test_sq_knn_broadcasts_and_stays_vectorized(spark, sf_dir):
     # both search legs broadcast the 10-query side over the corpus scan
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
-    # pair scoring rides the Arrow pandas-UDF path, not row-at-a-time
-    assert "ArrowEvalPython" in plan
+    # pair scoring runs inside the JVM (exact_knn's expression kernel),
+    # never in a Python worker
+    assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
 
 

@@ -219,17 +219,15 @@ def test_one_reader_and_one_converter_for_files():
 
 
 #: the Arrow similarity UDFs, by name
-_ARROW_KERNELS = re.compile(r"\bseq_(dot|cosine|cosine_pre|l2sq)\b")
+_ARROW_KERNELS = re.compile(r"\bseq_(dot|cosine|cosine_pre)\b")
 
-#: code that names them: their home, which holds the one kernel chooser
-#: (functions/vectors.py::kernel), and the registry sites that keep the
-#: Arrow path — corpus-scale similarity joins over 64-dim vectors, where
-#: it scores ~3x faster per pair (CALIBRATION_r15.json) — plus the
-#: calibration script's copy of one of them and the tests that pin them
+#: code that names them: their home, the registry plans that keep them
+#: inline (q_rp_lsh_pairs, q_lsh_adaptive, q_semantic_dedup), the
+#: calibration script that times them against the expression twins,
+#: and the tests that pin them
 _ARROW_KERNEL_SITES = {
     "data_etl_spark/functions/vectors.py",
     "data_etl_spark/plans/similarity.py",
-    "data_etl_spark/operators/kmeans.py",
     "scripts/calibrate_gates.py",
     "tests/test_kernels.py",
     "tests/test_stress.py",
@@ -237,11 +235,11 @@ _ARROW_KERNEL_SITES = {
 
 
 def test_arrow_kernels_are_named_only_at_listed_sites():
-    """Everything else scores pairs through functions/vectors.py::kernel,
-    so a per-call path cannot bypass the calibrated gate. Comments do not
-    count."""
-    assert _ARROW_KERNELS.search("d = V.seq_" + "l2sq(a, b)")
-    assert not _ARROW_KERNELS.search("d = V.l2sq(a, b)  ")
+    """Everything else, the retrieval operators included, scores pairs
+    with the JVM expression kernels, so an Arrow UDF cannot creep back
+    onto a per-call path. Comments do not count."""
+    assert _ARROW_KERNELS.search("d = V.seq_" + "cosine(a, b)")
+    assert not _ARROW_KERNELS.search("d = V.cosine(a, b)  ")
     files = [*_source_files(), *(REPO / "tests").glob("*.py")]
     naming = {
         path.relative_to(REPO).as_posix()
