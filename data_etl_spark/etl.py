@@ -14,17 +14,19 @@ E2 `process_file`) and `/root/reference/src/managers/index_manager.py`
 
 The "vector store" is a partitioned Parquet table — no external index
 server (SURVEY.md §3: the only process boundaries are Spark's own).
-Search (V4) is cosine top-k against the same table, cost-gated between
-exact brute force and an in-memory IVF rewrite (``ETLPipeline.search``).
+Search (V4) is an exact cosine top-k against the same table
+(``ETLPipeline.search``); the approximate path is a cell-partitioned
+IVF copy built once and probed per query (``build_ann_index`` +
+``ann_search``).
 
 Every commit stamps a new index version: its last step renames the
 commit record to ``<index>.version``. Readers key what they keep on
 it — the read relation (and so Spark's file listing) and search's
-persisted corpus, row count and cell assignment are built once per
-version, the way the reference builds its index once and queries it
-many times (`index_manager.py:96-128`). A commit by any pipeline or
-process on the same path moves the version, so no reader serves rows
-from before it.
+persisted corpus are built once per version, the way the reference
+builds its index once and queries it many times
+(`index_manager.py:96-128`). A commit by any pipeline or process on
+the same path moves the version, so no reader serves rows from before
+it.
 
 Scale posture: ingest batches broadcast in the anti-join side of the
 upsert (the 100 TB index never shuffles on ingest); the index table is
@@ -111,23 +113,6 @@ def fake_embedding(col: Column) -> Column:
     return F.array(*parts)
 
 
-@dataclass
-class _SearchState:
-    """What :meth:`ETLPipeline.search` keeps for one index version: the
-    persisted (c_vec_id, c_emb) corpus and its row count, and once the
-    IVF branch ran, (n_centroids, centroids, persisted corpus cells)."""
-
-    version: str | None
-    corpus: DataFrame
-    n_corpus: int
-    cells: tuple[int, DataFrame, DataFrame] | None = None
-
-    def unpersist(self) -> None:
-        unpersist_tracked(self.corpus)
-        if self.cells is not None:
-            unpersist_tracked(self.cells[2])
-
-
 #: Env var pointing at a JSON config file (ETLConfig.from_json default).
 CONFIG_PATH_ENV = "DATA_ETL_CONFIG_PATH"
 
@@ -195,7 +180,8 @@ class ETLPipeline:
         self.config = config or ETLConfig()
         #: (version, relation) of :meth:`index_table`'s last read
         self._read: tuple[str, DataFrame] | None = None
-        self._search: _SearchState | None = None
+        #: (version, persisted (c_vec_id, c_emb) corpus) of :meth:`search`
+        self._search: tuple[str | None, DataFrame] | None = None
         # heal any crash-interrupted commit before the first read (one
         # stat when the index is clean — see recover())
         self.recover()
@@ -406,7 +392,7 @@ class ETLPipeline:
 
     def gate_extensions(self, docs: DataFrame) -> DataFrame:
         """F1 extension whitelist (`document_processor.py:51-60`)."""
-        ext = F.lower(F.element_at(F.split(F.col("filename"), r"\."), -1))
+        ext = F.element_at(F.split(F.col("filename"), r"\."), -1)
         return docs.filter(ext.isin(*self.config.allowed_extensions))
 
     def chunk_documents(self, docs: DataFrame) -> DataFrame:
@@ -705,69 +691,38 @@ class ETLPipeline:
         )
         return rrf_hybrid(qdf, chunks, k, topn=topn, rrf_k=rrf_k)
 
-    def search(self, queries: Sequence[str], k: int = 5, threshold: int = 2048) -> DataFrame:
-        """Cost-gated cosine top-k over the index (V4): exact brute
-        force (broadcast query side) while the index holds <=
-        ``threshold`` rows, the in-memory IVF rewrite above it — the
-        SURVEY §4 planner rule (operators/planner.py::auto_knn) exposed
-        at the pipeline API, no prebuilt index required (build_ann_index
-        + ann_search remain the persisted-layout path).
+    def search(self, queries: Sequence[str], k: int = 5) -> DataFrame:
+        """Exact cosine top-k over the index (V4): the broadcast query
+        set crossJoined with the corpus, scored, and cut to ``k`` per
+        query by row_number — the Spark form of the reference's flat
+        scan (operators/knn.py::exact_knn). The approximate path is
+        :meth:`build_ann_index` + :meth:`ann_search`.
 
-        State per index version (:meth:`_version`): the first call of a
-        version persists the (c_vec_id, c_emb) corpus and counts it; the
-        first that takes the IVF branch picks the centroids and persists
-        the corpus cell assignment. Later calls pass them to ``auto_knn``
-        and issue only query jobs. A commit or a ``release_tracked()``
-        drain rebuilds the state on the next call; the rows are those of
-        the stateless plan either way.
-
-        Like every retrieval operator, it scores on the JVM expression
+        The (c_vec_id, c_emb) corpus is persisted once per index version
+        (:meth:`_version`), so a later call on the same version issues
+        only query jobs. A commit or a ``release_tracked()`` drain
+        rebuilds it on the next call; the rows are those of the
+        stateless plan either way. It scores on the JVM expression
         kernels (functions/vectors.py), so a call pays no Python-worker
         round trip."""
-        from .operators import planner
-        from .operators.ivf import assign_cells
+        from .operators.knn import exact_knn
 
-        st = self._search_state()
-
-        def cells(n_centroids: int) -> tuple[DataFrame, DataFrame]:
-            if st.cells is None or st.cells[0] != n_centroids or not st.cells[2].is_cached:
-                if st.cells is not None:
-                    unpersist_tracked(st.cells[2])
-                cent = planner.ivf_centroids(st.corpus, n_centroids)
-                c_cells = tracked_persist(assign_cells(st.corpus, cent, "c_vec_id", "c_emb"))
-                st.cells = (n_centroids, cent, c_cells)
-            return st.cells[1], st.cells[2]
-
-        qdf = self._query_frame(queries).drop("query_text")
-        # looked up on the module at call time: the benchmark's tracer
-        # wraps planner.auto_knn
-        return planner.auto_knn(
-            qdf, st.corpus, k=k, threshold=threshold, n_corpus=st.n_corpus, cells=cells
-        )
-
-    def _search_state(self) -> _SearchState:
-        """:meth:`search`'s state for the current index version, built
-        when the version moved or a drain unpersisted it."""
         # the version is read before the corpus: a commit in between
-        # leaves a state keyed on the older version, rebuilt next call
+        # leaves a corpus keyed on the older version, rebuilt next call
         version = self._version()
-        st = self._search
-        if st is not None and st.version == version and st.corpus.is_cached:
-            return st
-        if st is not None:
-            st.unpersist()
-        corpus = tracked_persist(
-            self.index_table().select(_chunk_id(), F.col("embedding").alias("c_emb"))
-        )
-        self._search = _SearchState(version, corpus, corpus.count())
-        return self._search
+        if self._search is None or self._search[0] != version or not self._search[1].is_cached:
+            if self._search is not None:
+                unpersist_tracked(self._search[1])
+            corpus = self.index_table().select(_chunk_id(), F.col("embedding").alias("c_emb"))
+            self._search = (version, tracked_persist(corpus))
+        qdf = self._query_frame(queries).drop("query_text")
+        return exact_knn(F.broadcast(qdf), self._search[1], k=k)
 
     def near_dups(self, threshold: int = 4096, tau: float = 0.5) -> DataFrame:
-        """Cost-gated near-duplicate chunk pairs over the index — the
-        dedup twin of :meth:`search` (operators/planner.py::auto_dedup
-        at the pipeline API): exact inverted-index scoring while the
-        index holds <= ``threshold`` chunks, MinHash-banded candidates
-        with exact verification above. Returns (doc1, doc2, n_common,
+        """Cost-gated near-duplicate chunk pairs over the index
+        (operators/planner.py::auto_dedup at the pipeline API): exact
+        inverted-index scoring while the index holds <= ``threshold``
+        chunks, MinHash-banded candidates with exact verification above. Returns (doc1, doc2, n_common,
         jaccard, strategy) keyed by ``filename#chunk_idx``."""
         from .operators.planner import auto_dedup
 
@@ -779,7 +734,7 @@ class ETLPipeline:
     ) -> DataFrame:
         """Cost-gated exact global rank of the index's chunks by
         ``metric`` ascending (ties broken by filename, chunk_idx) — the
-        ordering twin of :meth:`search`/:meth:`near_dups`
+        ordering twin of :meth:`near_dups`
         (operators/planner.py::auto_rank at the pipeline API). Small
         indexes sort in one task (the gate's count proved they fit);
         large ones take the two-pass bucketed rank, so callers get a

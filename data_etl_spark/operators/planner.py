@@ -24,8 +24,6 @@ gate itself (two result branches gated by a scalar count subquery).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -35,9 +33,7 @@ from .ivf import assign_cells
 from .joins import salted_join
 from .knn import cell_knn, exact_knn
 
-__all__ = [
-    "auto_dedup", "auto_group_quantile", "auto_join", "auto_knn", "auto_rank", "ivf_centroids"
-]
+__all__ = ["auto_dedup", "auto_group_quantile", "auto_join", "auto_knn", "auto_rank"]
 
 
 def auto_rank(
@@ -116,19 +112,6 @@ def auto_rank(
     return out
 
 
-def ivf_centroids(corpus: DataFrame, n_centroids: int) -> DataFrame:
-    """The IVF branch's centroids: the first ``n_centroids`` corpus rows
-    by ``c_vec_id`` (TakeOrdered, no sort of the corpus), as (cent_id,
-    cemb). The one statement of the rule, so a caller that keeps cells
-    across calls (``ETLPipeline.search``) and :func:`auto_knn` cannot
-    drift."""
-    return (
-        corpus.orderBy("c_vec_id")
-        .limit(n_centroids)
-        .select(F.col("c_vec_id").alias("cent_id"), F.col("c_emb").alias("cemb"))
-    )
-
-
 def auto_knn(
     probes: DataFrame,
     corpus: DataFrame,
@@ -136,41 +119,31 @@ def auto_knn(
     k: int = 5,
     threshold: int = 2048,
     n_centroids: int = 8,
-    n_corpus: int | None = None,
-    cells: Callable[[int], tuple[DataFrame, DataFrame]] | None = None,
 ) -> DataFrame:
     """Top-k cosine per (q_vec_id, q_emb) probe over the (c_vec_id,
     c_emb) corpus; physical strategy chosen by corpus size. Both branches
     score on the JVM expression path (operators/knn.py, operators/ivf.py).
+    The IVF branch's centroids are the first ``n_centroids`` corpus rows
+    by ``c_vec_id`` (TakeOrdered, no sort of the corpus). The registry's
+    ``q_knn_auto`` checks both branches against its oracle; the document
+    pipeline's ``search`` is exact top-k, with no gate.
 
-    Threshold 2048: calibrated at ~sf1 (CALIBRATION_r08.json) — exact
-    broadcast kNN wins through 2048 corpus rows (0.81 s vs IVF 0.90 s),
-    IVF wins from 4096 up (1.29 vs 1.04, widening to 3.86 vs 1.54 at
-    16384), so the default sits on the last measured exact-wins size.
-
-    A caller that keeps state across calls passes what it knows, the
-    way :func:`auto_group_quantile` takes ``n_rows``:
-
-    - ``n_corpus``: the corpus row count, which skips the gate's count
-      job;
-    - ``cells``: called as ``cells(n_centroids)`` only when the gate
-      takes the IVF branch, it returns (centroids, corpus cells): the
-      :func:`ivf_centroids` of ``corpus`` and ``corpus``'s
-      ``assign_cells`` output under them. That skips the centroid pick
-      and the corpus assignment.
-
-    Both unset, the plan is the stateless one the registry's
-    ``q_knn_auto`` checks against its oracle.
+    Threshold 2048: calibrated at ~sf1 (CALIBRATION_r08.json) on the
+    Arrow kernels — exact broadcast kNN wins through 2048 corpus rows
+    (0.81 s vs IVF 0.90 s), IVF wins from 4096 up (1.29 vs 1.04,
+    widening to 3.86 vs 1.54 at 16384), so the default sits on the last
+    measured exact-wins size. On the JVM kernels exact top-k beat the
+    IVF branch at every corpus size probed (SEARCH_AB_r15.json: 3,573
+    to 57,168 rows), so the default is due for re-calibration.
     """
-    if n_corpus is None:
-        n_corpus = corpus.count()
-    if n_corpus <= threshold:
+    if corpus.count() <= threshold:
         return exact_knn(F.broadcast(probes), corpus, k=k)
-    if cells is None:
-        cent = ivf_centroids(corpus, n_centroids)
-        c_cells = assign_cells(corpus, cent, "c_vec_id", "c_emb")
-    else:
-        cent, c_cells = cells(n_centroids)
+    cent = (
+        corpus.orderBy("c_vec_id")
+        .limit(n_centroids)
+        .select(F.col("c_vec_id").alias("cent_id"), F.col("c_emb").alias("cemb"))
+    )
+    c_cells = assign_cells(corpus, cent, "c_vec_id", "c_emb")
     q_cells = assign_cells(probes, cent, "q_vec_id", "q_emb")
     return cell_knn(q_cells, c_cells, k)
 

@@ -227,6 +227,25 @@ def test_stream_and_batch_give_the_same_index(spark, tmp_path):
     assert _index_digest(stream) == _index_digest(batch)
 
 
+def test_folder_and_dataframe_ingest_gate_extensions_alike(spark, tmp_path):
+    """One extension rule for both ingest paths, the reference's
+    case-sensitive ``split(".")[-1] in allowed`` (F1): process_folder of
+    a folder and ingest of a DataFrame holding the same two files index
+    the same one, ``low.txt``, not ``UP.TXT``."""
+    src = tmp_path / "in"
+    src.mkdir()
+    files = {"UP.TXT": "upper case words " * 30, "low.txt": "lower case words " * 30}
+    for name, text in files.items():
+        (src / name).write_text(text)
+    cfg = ETLConfig(chunk_size=100, chunk_overlap=20, n_buckets=4)
+    folder = ETLPipeline(spark, str(tmp_path / "folder"), cfg)
+    folder.process_folder(str(src))
+    frame = ETLPipeline(spark, str(tmp_path / "frame"), cfg)
+    frame.ingest(spark.createDataFrame(list(files.items()), "filename string, text string"))
+    names = lambda p: {r.filename for r in p.index_table().select("filename").distinct().collect()}
+    assert names(folder) == names(frame) == {"low.txt"}
+
+
 def test_ann_index_build_and_search(pipe, docs):
     pipe.ingest(docs)
     path = pipe.build_ann_index(n_cells=3, kmeans_iter=2)
@@ -333,10 +352,10 @@ def test_benchmark_layer_hooks_install_and_restore(pipe, docs, monkeypatch):
 
 def test_benchmark_retrieval_hooks_install_and_restore(pipe, docs, monkeypatch):
     """The traced benchmark's retrieval spans (perfbench/workloads.py::
-    Layers): ``search`` records auto_knn and reads the IVF branch off a
-    ``cell`` column in the analyzed plan; ``build_ann_index`` records
-    k-means and the IVF write. Renaming one of these hook points, or the
-    ``cell`` column, must fail this suite."""
+    Layers): ``build_ann_index`` records k-means and the IVF write.
+    ``search`` is exact top-k and no longer calls the hooked
+    ``planner.auto_knn``, so it records no ``knn`` span. Renaming one of
+    these hook points must fail this suite."""
     import contextlib
     import os
 
@@ -360,14 +379,11 @@ def test_benchmark_retrieval_hooks_install_and_restore(pipe, docs, monkeypatch):
     originals = (planner_mod.auto_knn, kmeans_mod.kmeans_fit, ivf_mod.build_ivf_index)
     layers = Layers(Tracer(), pipe).install()
     try:
-        pipe.search(["word1"], k=2, threshold=10**6)  # exact branch
-        pipe.search(["word1"], k=2, threshold=1)  # IVF branch
+        pipe.search(["word1"], k=2).collect()
         pipe.build_ann_index(n_cells=2, kmeans_iter=1)
     finally:
         layers.restore()
     assert spans == [
-        ("knn", "auto_knn", 0),
-        ("knn", "auto_knn", 1),
         ("kmeans", "kmeans_fit", None),
         ("ivf_write", "build_ivf_index", None),
     ]
@@ -383,8 +399,7 @@ def test_search_ties_break_on_ascending_chunk_id(pipe, spark):
         spark.createDataFrame([("b.txt", text), ("a.txt", text)], "filename string, text string")
     )
     for name, res in [
-        ("exact", pipe.search([text], k=2, threshold=10**6)),
-        ("ivf", pipe.search([text], k=2, threshold=1)),
+        ("exact", pipe.search([text], k=2)),
         ("hybrid", pipe.hybrid_search([text], k=2)),
     ]:
         ranked = [r.c_vec_id for r in sorted(res.collect(), key=lambda r: r.rank)]
@@ -444,20 +459,14 @@ def test_hybrid_search_finds_lexical_and_dense_match(pipe, docs):
 
 
 def test_cost_gated_search_both_branches(pipe, docs, spark):
-    """pipe.search() routes through the auto_knn planner: exact
-    (broadcast-NL) below the threshold, IVF cell join above it — and
-    the exact branch's top-1 hit for a chunk's own text is that chunk."""
+    """pipe.search() is exact top-k: a broadcast-NL plan with no IVF
+    cell join, and its scores are cosines."""
     pipe.ingest(docs)
-    res = pipe.search(["word1 word1", "word5"], k=2, threshold=10**6)
+    res = pipe.search(["word1 word1", "word5"], k=2)
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan and "cell" not in plan
     hits = res.collect()
     assert len(hits) >= 2 and all(h.score <= 1.000001 for h in hits)
-    # force the IVF branch on the same tiny index
-    res2 = pipe.search(["word1 word1"], k=2, threshold=1)
-    plan2 = res2._jdf.queryExecution().executedPlan().toString()
-    assert "cell" in plan2
-    assert len(res2.collect()) >= 1
 
 
 def _search_rows(df):
@@ -468,8 +477,7 @@ def _twin(spark, path):
     return ETLPipeline(spark, str(path), ETLConfig(chunk_size=100, chunk_overlap=20, n_buckets=4))
 
 
-@pytest.mark.parametrize("threshold", [10**6, 1], ids=["exact", "ivf"])
-def test_search_sees_another_pipelines_commit(pipe, docs, spark, tmp_path, threshold):
+def test_search_sees_another_pipelines_commit(pipe, docs, spark, tmp_path):
     """A pipeline that already searched (and so holds search state) sees
     a commit another pipeline made on the same path: the rewritten
     document's new first chunk ranks first for its own text, the deleted
@@ -481,7 +489,7 @@ def test_search_sees_another_pipelines_commit(pipe, docs, spark, tmp_path, thres
     pipe.ingest(docs)
     old = pipe.index_table().filter("chunk_idx = 0").select("filename", "chunk_text").collect()
     old = {r.filename: r.chunk_text for r in old}
-    pipe.search([old["doc_1.txt"]], k=3, threshold=threshold).collect()
+    pipe.search([old["doc_1.txt"]], k=3).collect()
 
     other = _twin(spark, pipe.index_path)
     other.ingest(update)
@@ -494,14 +502,14 @@ def test_search_sees_another_pipelines_commit(pipe, docs, spark, tmp_path, thres
     )
 
     qs = [new0, old["doc_1.txt"], old["doc_0.pdf"]]
-    rows = _search_rows(pipe.search(qs, k=3, threshold=threshold))
+    rows = _search_rows(pipe.search(qs, k=3))
     assert [r for r in rows if r[0] == 0 and r[1] == 1][0][2] == "doc_0.pdf#0"
     assert not [r for r in rows if r[2].startswith("doc_1.txt#")]
     twin = _twin(spark, tmp_path / "twin")
     twin.ingest(docs)
     twin.ingest(update)
     twin.delete_documents(["doc_1.txt"])
-    assert rows == _search_rows(twin.search(qs, k=3, threshold=threshold))
+    assert rows == _search_rows(twin.search(qs, k=3))
 
 
 def test_search_after_a_drain_rebuilds_its_state(pipe, docs, spark):
@@ -515,10 +523,10 @@ def test_search_after_a_drain_rebuilds_its_state(pipe, docs, spark):
 
     pipe.ingest(docs)
     qs = ["word1 word1", "word4"]
-    first = _search_rows(pipe.search(qs, k=2, threshold=1))
+    first = _search_rows(pipe.search(qs, k=2))
     release_tracked()
     drained = persisted()
-    assert _search_rows(pipe.search(qs, k=2, threshold=1)) == first
+    assert _search_rows(pipe.search(qs, k=2)) == first
     assert persisted() > drained
 
 
@@ -538,16 +546,15 @@ def _jobs(spark, group, run):
     ]
 
 
-@pytest.mark.parametrize("threshold", [10**6, 1], ids=["exact", "ivf"])
-def test_repeat_search_issues_only_query_jobs(spark, tmp_path, threshold):
-    """On an unchanged index a second search lists no files, counts
-    nothing and assigns no corpus cells: at most 5 jobs, none with a task
-    per `bucket=` dir (the partition-listing job). Its rows equal the
-    stateless auto_knn over a fresh read of the index."""
+def test_repeat_search_issues_only_query_jobs(spark, tmp_path):
+    """On an unchanged index a second search lists no files and reads
+    no corpus from disk: at most 5 jobs, none with a task per `bucket=`
+    dir (the partition-listing job). Its rows equal the stateless
+    exact_knn over a fresh read of the index."""
     import os
 
     from data_etl_spark.etl import _chunk_id, fake_embedding
-    from data_etl_spark.operators.planner import auto_knn
+    from data_etl_spark.operators.knn import exact_knn
 
     p = ETLPipeline(spark, str(tmp_path / "index"), ETLConfig(chunk_size=100, chunk_overlap=20))
     rows = [(f"d{i}.txt", f"w{i} v{i % 7} u{i % 3} " * (10 + i % 9)) for i in range(90)]
@@ -555,11 +562,9 @@ def test_repeat_search_issues_only_query_jobs(spark, tmp_path, threshold):
     n_dirs = sum(d.startswith("bucket=") for d in os.listdir(p.index_path))
     assert n_dirs > 32  # Spark lists more than 32 dirs with a job
     qs = ["w1 v1 u1", "w40 v5", "u2 u2 u2", "v3"]
-    p.search(qs, k=3, threshold=threshold).collect()
+    p.search(qs, k=3).collect()
     got = []
-    tasks = _jobs(spark, f"repeat-search-{threshold}", lambda: got.extend(
-        p.search(qs, k=3, threshold=threshold).collect()
-    ))
+    tasks = _jobs(spark, "repeat-search", lambda: got.extend(p.search(qs, k=3).collect()))
     assert len(tasks) <= 5, tasks
     assert n_dirs not in tasks, tasks
 
@@ -567,7 +572,7 @@ def test_repeat_search_issues_only_query_jobs(spark, tmp_path, threshold):
         "q_vec_id", fake_embedding(F.col("text")).alias("q_emb")
     )
     corpus = spark.read.parquet(p.index_path).select(_chunk_id(), F.col("embedding").alias("c_emb"))
-    want = auto_knn(probes, corpus, k=3, threshold=threshold)
+    want = exact_knn(F.broadcast(probes), corpus, k=3)
     assert sorted(tuple(r) for r in got) == _search_rows(want)
 
 
@@ -782,8 +787,7 @@ def test_search_after_recover_from_a_crash_before_the_version_stamp(
     twin.ingest(docs)
     twin.ingest(update)
     qs = ["post-crash body " * 5, "fresh doc fresh doc", "word0 word0"]
-    for threshold in (10**6, 1):
-        pipe.search(qs, k=3, threshold=threshold).collect()
+    pipe.search(qs, k=3).collect()
 
     writer = _twin(spark, pipe.index_path)
     crash = _CrashAfter(monkeypatch, 0, dst_suffix=".version")
@@ -791,9 +795,8 @@ def test_search_after_recover_from_a_crash_before_the_version_stamp(
         writer.ingest(update)
     monkeypatch.setattr("os.replace", crash.real)
     assert pipe.recover() == ["swap"]
-    for threshold in (10**6, 1):
-        got = _search_rows(pipe.search(qs, k=3, threshold=threshold))
-        assert got == _search_rows(twin.search(qs, k=3, threshold=threshold))
+    got = _search_rows(pipe.search(qs, k=3))
+    assert got == _search_rows(twin.search(qs, k=3))
 
 
 def test_pipeline_constructor_auto_heals(pipe, docs, spark, tmp_path, monkeypatch):
@@ -849,10 +852,10 @@ def test_release_tracked_drains_all_pipeline_persists(pipe, docs, spark):
 
 def test_recover_skips_sibling_prefix_intent(pipe, docs, spark, tmp_path):
     """Two pipelines whose index paths share a filename prefix
-    (``index`` / ``index2``) must not claim each other's intent files:
-    recover() on the shorter-prefixed pipeline would otherwise load the
-    sibling's intent, no-op, and os.remove() it — destroying the
-    sibling's commit record (ADVICE r8 #3)."""
+    (``index`` / ``index2``) never touch each other's commit records:
+    recover() reads only ``<index>.intent``, so the sibling's
+    ``index2.intent`` is neither acted on nor removed by the other
+    pipeline (ADVICE r8 #3)."""
     import json
     import os
 
@@ -866,10 +869,10 @@ def test_recover_skips_sibling_prefix_intent(pipe, docs, spark, tmp_path):
     # simulate the sibling crashing mid-swap: its intent file survives
     sibling_intent = str(tmp_path / "index2.intent")
     with open(sibling_intent, "w") as f:
-        json.dump({"op": "swap", "buckets": [0], "staged": [], "owner": "index2"}, f)
+        json.dump({"op": "swap", "buckets": [0], "staged": []}, f)
 
-    # "index".startswith match would claim index2.intent without the
-    # owner check; it must neither act on it nor delete it
+    # index.intent does not exist: recover() finds nothing to do and
+    # leaves index2.intent alone
     assert pipe.recover() == []
     assert os.path.exists(sibling_intent)
     # the owning pipeline recovers (and clears) its own record
@@ -878,20 +881,22 @@ def test_recover_skips_sibling_prefix_intent(pipe, docs, spark, tmp_path):
 
 
 def test_repeat_ivf_search_scores_on_the_jvm(spark, tmp_path):
-    """A repeat 32-query search on the IVF branch scores its per-call
-    pairs with the JVM expression kernels: no ArrowEvalPython node in its
-    executed plan, at most 4 jobs, and the rows of the stateless
+    """A repeat 32-query search scores its per-call pairs with the JVM
+    expression kernels: an exact plan (no IVF cell join) with no
+    ArrowEvalPython node, at most 4 jobs, and the rows of the stateless
     plan."""
     from data_etl_spark.etl import _chunk_id, fake_embedding
-    from data_etl_spark.operators.planner import auto_knn
+    from data_etl_spark.operators.knn import exact_knn
 
     p = ETLPipeline(spark, str(tmp_path / "index"), ETLConfig(chunk_size=100, chunk_overlap=20))
     rows = [(f"d{i}.txt", f"w{i} v{i % 7} u{i % 3} " * (10 + i % 9)) for i in range(90)]
     p.ingest(spark.createDataFrame(rows, "filename string, text string"))
     qs = [f"w{i} v{i % 5} u{i % 2}" for i in range(32)]
-    p.search(qs, k=3, threshold=1).collect()
-    res = p.search(qs, k=3, threshold=1)
-    assert "ArrowEvalPython" not in res._jdf.queryExecution().executedPlan().toString()
+    p.search(qs, k=3).collect()
+    res = p.search(qs, k=3)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" in plan and "cell" not in plan
+    assert "ArrowEvalPython" not in plan
     got = []
     tasks = _jobs(spark, "repeat-ivf-search-32", lambda: got.extend(res.collect()))
     assert len(tasks) <= 4, tasks
@@ -900,7 +905,7 @@ def test_repeat_ivf_search_scores_on_the_jvm(spark, tmp_path):
         "q_vec_id", fake_embedding(F.col("text")).alias("q_emb")
     )
     corpus = spark.read.parquet(p.index_path).select(_chunk_id(), F.col("embedding").alias("c_emb"))
-    want = auto_knn(probes, corpus, k=3, threshold=1)
+    want = exact_knn(F.broadcast(probes), corpus, k=3)
     assert sorted(tuple(r) for r in got) == _search_rows(want)
 
 
@@ -942,13 +947,50 @@ def test_tracked_handles_stay_bounded_across_upserts(pipe, docs, spark):
 
     pipe.ingest(docs)
     cache.release_tracked()
-    pipe.search(["word1"], k=2, threshold=1).collect()
+    pipe.search(["word1"], k=2).collect()
     for i in range(5):
         one = spark.createDataFrame([("doc_0.pdf", f"upsert{i} " * 40)], "filename string, text string")
         pipe.ingest(one)
         if i in (1, 3):
-            pipe.search(["word1"], k=2, threshold=1).collect()
+            pipe.search(["word1"], k=2).collect()
     assert len(cache._TRACKED) <= 2, len(cache._TRACKED)
+
+
+def test_search_is_exact_top_k_above_2048_chunks(spark, tmp_path):
+    """On an index of more than 2,048 chunks, search is still the exact
+    top-k: the rows of exact_knn over a fresh read of the index, a plan
+    with no IVF cell join and no ArrowEvalPython node, at most 3 jobs
+    for a repeat 32-query search, and one tracked handle (the corpus)
+    after upserts and a state rebuild."""
+    from data_etl_spark import cache
+    from data_etl_spark.etl import _chunk_id, fake_embedding
+    from data_etl_spark.operators.knn import exact_knn
+
+    p = ETLPipeline(spark, str(tmp_path / "index"), ETLConfig(chunk_size=100, chunk_overlap=20))
+    rows = [(f"d{i}.txt", f"w{i} v{i % 7} u{i % 3} t{i % 11} " * 60) for i in range(240)]
+    assert p.ingest(spark.createDataFrame(rows, "filename string, text string"))["n_chunks"] > 2048
+    qs = [f"w{i} v{i % 5} u{i % 2}" for i in range(32)]
+    p.search(qs, k=3).collect()
+    res = p.search(qs, k=3)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "cell" not in plan and "ArrowEvalPython" not in plan
+    got = []
+    tasks = _jobs(spark, "repeat-search-2048", lambda: got.extend(res.collect()))
+    assert len(tasks) <= 3, tasks
+
+    probes = spark.createDataFrame(list(enumerate(qs)), "q_vec_id long, text string").select(
+        "q_vec_id", fake_embedding(F.col("text")).alias("q_emb")
+    )
+    corpus = spark.read.parquet(p.index_path).select(_chunk_id(), F.col("embedding").alias("c_emb"))
+    assert sorted(tuple(r) for r in got) == _search_rows(exact_knn(F.broadcast(probes), corpus, k=3))
+
+    cache.release_tracked()
+    p.search(qs[:1], k=3).collect()
+    for i in range(2):
+        one = spark.createDataFrame([("d0.txt", f"upsert{i} " * 40)], "filename string, text string")
+        p.ingest(one)
+    p.search(qs[:1], k=3).collect()
+    assert len(cache._TRACKED) <= 1, len(cache._TRACKED)
 
 
 def test_ingest_from_another_session_into_an_existing_index(pipe, docs, spark):
